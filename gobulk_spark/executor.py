@@ -16,6 +16,11 @@ module re-expresses that contract over the kept parquet store:
   together as this run's kept append. Omits and issues touch only the
   audit table.
 
+``store`` runs the whole step — classify, execute, audit, metrics,
+marker — for a batch run and for a streaming epoch alike: gobulk has one
+Executor for both its one-sweep and its listen-loop modes
+(runner.go:90-105).
+
 Retry note: on a crashed store-phase retry after the delete step ran,
 re-classification sees the prior rows already gone and yields
 create/omit instead of update/delete. The kept-store END STATE is
@@ -26,18 +31,42 @@ executor re-runs operations against the mutated store.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import time
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from . import lineage  # noqa: F401  (audit projection below)
+from . import lineage
 
 #: action -> execution order (gobulk executor.go:96-113)
 EXECUTION_ORDER = ("delete", "update", "create", "omit")
 
+KEPT_COLUMNS = (
+    "image_id",
+    "source_file",
+    "content_hash",
+    "w",
+    "h",
+    "fmt",
+    "phash",
+    "caption",
+    "lang",
+    "lang_conf",
+    "ppl",
+)
 
-def dedup_exact_redeliveries(
-    decided: DataFrame, probe: tuple[int, int] | None = None
-) -> DataFrame:
+#: declared kept-store schema — deep-diffed against the live store
+#: before any write (gobulk validates its output schema on setup,
+#: output/elasticsearch.go:153-158, output/mysql.go:48-76)
+KEPT_SCHEMA_DDL = (
+    "image_id string, source_file string, content_hash string, "
+    "w int, h int, fmt string, phash bigint, caption string, "
+    "lang string, lang_conf double, ppl double"
+)
+
+
+def dedup_exact_redeliveries(decided: DataFrame, probe: tuple[int, int]) -> DataFrame:
     """Drop extra copies when the SAME (image_id, content_hash) appears
     more than once in one batch — invisible to scan-phase dedup (both
     rows ARE the min-id survivor) and it would land twice in the kept
@@ -45,23 +74,14 @@ def dedup_exact_redeliveries(
     (tracker/gorm.go:121).
 
     Runs on the NARROW post-parse rows (upstream it would shuffle the
-    binary column), and only when a cheap aggregate probe finds actual
-    re-deliveries: the unconditional dropDuplicates shuffle would both
-    collapse the salted partition spread on small batches (AQE
-    coalesces it) and re-partition every downstream write for a
-    condition that is almost always absent. Equal content_hash means
-    identical content, so dropping either copy is lossless.
-
-    ``probe``: pass a precomputed (n_rows, n_distinct_keys) pair to
-    skip the aggregate job here — callers that need other scalars from
-    the same frame (the update/delete-presence probe) fold all of them
-    into ONE probe_decided() job instead of one job each."""
-    if probe is not None:
-        n_rows, n_keys = probe
-    else:
-        n_rows, n_keys = decided.select(
-            F.count(F.lit(1)), F.count_distinct("image_id", "content_hash")
-        ).first()
+    binary column), and only when the probe — (n_rows, n_distinct_keys)
+    from the single probe_decided job — finds actual re-deliveries: the
+    unconditional dropDuplicates shuffle would both collapse the salted
+    partition spread on small batches (AQE coalesces it) and
+    re-partition every downstream write for a condition that is almost
+    always absent. Equal content_hash means identical content, so
+    dropping either copy is lossless."""
+    n_rows, n_keys = probe
     if n_rows == n_keys:
         return decided
     return decided.dropDuplicates(["image_id", "content_hash"])
@@ -299,3 +319,208 @@ def store_audit_columns(decided: DataFrame, run_id: str) -> DataFrame:
         payload_col=F.when(is_issue, F.col("scrubbed_caption")),
         error_col=F.when(is_issue, F.col("issue_note")),
     )
+
+
+class Stored(NamedTuple):
+    """What one store step reports to its caller."""
+
+    #: observed over this run's decided rows: rows_in, kept, dropped,
+    #: issues — plus sink_failed, the rows the sink could not land
+    totals: dict
+    #: the sink's per-item failures (FAILURE_SCHEMA_DDL), or None
+    failed: DataFrame | None
+    #: the kept rows behind ``failed``, materialized (they outlive the
+    #: step's cached/staged ``decided``), or None
+    failed_rows: DataFrame | None
+    #: per-sub-op wall time, in execution order
+    subops: list[dict]
+
+
+def store(
+    spark: SparkSession,
+    sink,
+    out_dir: str,
+    run_id: str,
+    decided: DataFrame,
+    n_dups: int,
+    extra_kept: DataFrame | None = None,
+    compact_every: int = 1,
+) -> Stored:
+    """Execute one run's (or one streaming epoch's) decided rows against
+    the kept store, then record them in the audit, metrics and marker.
+
+    ``decided`` is the plan-phase frame (decision_columns); ``n_dups``
+    is the scan phase's duplicate count — their pairs, read back from
+    the committed scan-audit leaf, join this run's marker advance.
+    ``extra_kept`` are KEPT_COLUMNS rows to land alongside this run's
+    own (the streaming retry queue): ids decided this run or already
+    in the store are dropped, the rest land in the SAME write (the sink
+    contract is per-run overwrite, so a second write would replace the
+    first) and audit as ``retry_landed``.
+
+    Every write is scoped to ``run_id`` and overwritten on retry, and
+    the marker flip comes last, so a crashed step re-runs to the same
+    end state (module doc: only an audit label can downgrade)."""
+    subops: list[dict] = []
+
+    def _sub(name: str, fn):
+        # per-sub-operation tracking (gobulk executor sub-op recursion,
+        # E4): a commit manifest listing a sub-op proves it finished
+        ts = time.time()
+        result = fn()
+        subops.append({"op": name, "wall_s": round(time.time() - ts, 3), "ok": True})
+        return result
+
+    # heal half-finished kept swaps from a crashed earlier attempt
+    # BEFORE anything reads the kept store; then the schema gate: a
+    # store written under a different engine version fails fast with
+    # the full diff, never silently unioned
+    sink.recover(spark)
+    sink.validate(spark, KEPT_SCHEMA_DDL)
+    # existence check refines create/omit into update/delete for ids
+    # already in the kept store (gobulk Update/Delete ops,
+    # executor.go:96-113; runner_test.go:638-702)
+    existing = sink.existing_ids(spark, exclude_run_id=run_id)
+    # the kept, audit, metrics and marker writes all consume this frame:
+    # cache it so the classify join and the parse chain run once, and
+    # let ONE probe job (the cache's first action) answer every scalar
+    # question below
+    decided = classify_actions(decided, existing).persist()
+    cached = decided  # unpersist on a derived frame is a no-op
+    n_rows, n_keys, n_affected, n_pure_del, n_kept_pairs, n_kept_ids = probe_decided(
+        decided
+    )
+    decided = dedup_exact_redeliveries(decided, probe=(n_rows, n_keys))
+    # distinct-content siblings of one id: deterministic winner, losers
+    # become issue rows — a merge sink would otherwise refuse the
+    # duplicate-key upsert (a poison pill for a stream, whose checkpoint
+    # re-delivers the failing epoch forever)
+    decided = resolve_conflicting_ids(decided, probe=(n_kept_pairs, n_kept_ids))
+    # A merge-capable sink replaces updated ids INSIDE the upsert
+    # commit, so D narrows to pure deletes — one commit instead of two,
+    # and a reader never sees an updated id deleted but not rewritten
+    use_merge = hasattr(sink, "merge")
+    staged = None
+    if n_affected:
+        # MATERIALIZE before the delete step: decided's lineage reads
+        # the kept files the deletes swap out, and a lost cached
+        # partition would recompute from deleted files. With no
+        # update/delete rows nothing swaps, and this extra pass is
+        # skipped
+        staged = lineage.stage_dir(out_dir, run_id, "decided")
+        decided.write.mode("overwrite").parquet(staged)
+        cached.unpersist()
+        decided = spark.read.parquet(staged)
+        if not use_merge:
+            _sub("delete", lambda: execute_deletes(spark, sink, run_id, decided))
+        elif n_pure_del:
+            _sub(
+                "delete",
+                lambda: execute_deletes(spark, sink, run_id, decided, actions=("delete",)),
+            )
+    if extra_kept is not None:
+        extra_kept = extra_kept.join(
+            decided.select("image_id").distinct(), "image_id", "left_anti"
+        )
+        # a fresh existence read: ``existing`` predates the delete step.
+        # An id already landed (a torn earlier attempt) must not land
+        # twice under a second run scope
+        landed = sink.existing_ids(spark, exclude_run_id=run_id)
+        if landed is not None:
+            extra_kept = extra_kept.join(landed, "image_id", "left_anti")
+        # one materialization for the write, audit and marker, severed
+        # from the caller's source (a queue it deletes afterwards)
+        extra_kept = extra_kept.select(*KEPT_COLUMNS).localCheckpoint(eager=True)
+    # --- U + C: this run's kept rows land in the sink's run scope.
+    # A transactional backend may return per-item failures it could not
+    # land after its retry budget: they audit as issue rows and stay out
+    # of the marker, so they re-enter (gobulk issue.go:137-146). Every
+    # consumer joins against the failures FRAME — wholesale failure
+    # never becomes a driver-side id list or an isin() expression bomb
+    rows = kept_rows(decided, KEPT_COLUMNS)
+    if extra_kept is not None:
+        rows = rows.unionByName(extra_kept)
+    failed = None
+    if not use_merge:
+        failed = failures_frame(spark, _sub("write_kept", lambda: sink.write(rows, run_id)))
+    elif n_kept_pairs or (extra_kept is not None and not extra_kept.isEmpty()):
+        # an empty merge would grow the log by a no-op commit per idle run
+        _sub("merge_kept", lambda: sink.merge(spark, run_id, rows))
+    n_failed = failed.count() if failed is not None else 0
+    failed_ids = failed_rows = None
+    if failed is not None:
+        failed_ids = failed.select("image_id").distinct()
+        failed_rows = rows.join(failed_ids, "image_id", "left_semi").localCheckpoint(
+            eager=True
+        )
+    # --- O: omits and issues reach only the audit and metrics tables;
+    # the run totals ride the audit write as an observation, attached
+    # before the unions so they cover exactly the decided rows
+    obs = Observation(f"store-{run_id}")
+    audit = store_audit_columns(decided, run_id).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows_in"),
+        F.sum(F.col("action").isin("create", "update").cast("long")).alias("kept"),
+        F.sum(F.col("action").isin("omit", "delete").cast("long")).alias("dropped"),
+        F.sum((F.col("action") == "issue").cast("long")).alias("issues"),
+    )
+    if failed is not None:
+        audit = audit.unionByName(write_failure_audit(failed, run_id))
+    if extra_kept is not None:
+        if failed_ids is not None:
+            extra_kept = extra_kept.join(failed_ids, "image_id", "left_anti")
+        audit = audit.unionByName(
+            lineage.audit_columns(
+                extra_kept,
+                run_id,
+                F.lit("store"),
+                F.lit("retry_landed"),
+                F.lit("sink_retry_queue"),
+                F.lit(None).cast("string"),
+                F.lit(None).cast("string"),
+                content_hash_col=F.col("content_hash"),
+            )
+        )
+    _sub("write_audit", lambda: lineage.write_audit(audit, out_dir, "store", run_id))
+    _sub(
+        "write_metrics",
+        lambda: lineage.write_metrics(
+            lineage.partition_metrics(decided, run_id), out_dir, "store", run_id
+        ),
+    )
+    # the compacted marker advances with this run's (id, latest hash)
+    # pairs: decided rows the sink landed, landed extra rows and the
+    # scan-phase duplicates. The pointer flip is the step's commit point
+    new_pairs = decided.select("image_id", "content_hash")
+    if failed_ids is not None:
+        new_pairs = new_pairs.join(failed_ids, "image_id", "left_anti")
+    if extra_kept is not None:
+        new_pairs = new_pairs.unionByName(extra_kept.select("image_id", "content_hash"))
+    if n_dups:
+        new_pairs = new_pairs.unionByName(
+            spark.read.parquet(lineage.audit_leaf(out_dir, "scan", run_id)).select(
+                "image_id", "content_hash"
+            )
+        )
+    _sub(
+        "advance_marker",
+        lambda: lineage.advance_marker(
+            spark, out_dir, run_id, new_pairs, compact_every=compact_every
+        ),
+    )
+    cached.unpersist()
+    if staged:
+        # one staged snapshot per run would accumulate under _stage
+        from .fsutil import Fs
+
+        Fs(spark, out_dir).delete(staged)
+    st = obs.get
+    totals = {
+        "rows_in": st["rows_in"],
+        # sum() observations are None on a zero-row write
+        "kept": st["kept"] or 0,
+        "dropped": st["dropped"] or 0,
+        "issues": st["issues"] or 0,
+        "sink_failed": n_failed,
+    }
+    return Stored(totals, failed, failed_rows, subops)

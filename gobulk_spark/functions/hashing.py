@@ -14,12 +14,6 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pandas as pd
-
-
-def crc_bucket(s: str, nbuckets: int) -> int:
-    """Stable bucket id for one string."""
-    return zlib.crc32(s.encode("utf-8")) % nbuckets
 
 
 def crc_bucket_unique(values: np.ndarray, nbuckets: int) -> np.ndarray:
@@ -29,16 +23,6 @@ def crc_bucket_unique(values: np.ndarray, nbuckets: int) -> np.ndarray:
         dtype=np.int64,
         count=len(values),
     )
-
-
-def bucket_tokens(tokens: pd.Series, nbuckets: int) -> tuple[np.ndarray, np.ndarray]:
-    """Factorize a flat token Series and bucket the uniques.
-
-    Returns (codes->bucket array aligned with ``tokens``, bucket-of-unique).
-    """
-    codes, uniques = pd.factorize(tokens, use_na_sentinel=False)
-    ubuckets = crc_bucket_unique(np.asarray(uniques, dtype=object), nbuckets)
-    return ubuckets[codes], ubuckets
 
 
 def stable_int64(s: str) -> int:

@@ -212,8 +212,10 @@ def ngram_jaccard_pairs(
     Round 6: the join/aggregation key is xxhash64(shingle) — an 8-byte
     long instead of the raw n-gram string (~15-25 B + string compares).
     Every downstream count (df guard, n_common, n_shingles) is
-    collision-invariant up to 64-bit hash collisions (P < 1e-5 even at
-    10^9 distinct shingles per the birthday bound vs 2^64; verified
+    collision-invariant up to 64-bit hash collisions. The birthday
+    bound puts the expected number of colliding pairs at about
+    n^2/2^65 for n distinct shingles: roughly a 3% chance of one at
+    10^9, and more than one expected at 10^10 (verified
     result-identical on the bench corpora). The shingle TEXT now never
     leaves the map stage. Measured: 4.8 s -> 3.4 s at sf1.0.
     """

@@ -77,22 +77,6 @@ def _dup_frac_of(g: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def top_ngram_frac(text: Column, n: int) -> Column:
-    """Fraction of n-gram occurrences taken by the single most frequent
-    n-gram (Gopher's "top n-gram fraction"; high = boilerplate loops).
-    Pure column expression (see _top_frac_of_sorted for the run trick);
-    repetition_stats hoists the array to a bound column first — prefer
-    that shape when computing several signals over one document."""
-    return _top_frac_of_sorted(F.array_sort(_ngram_occurrences(text, n)))
-
-
-def dup_ngram_frac(text: Column, n: int) -> Column:
-    """Fraction of n-gram occurrences that are repeats of an earlier one
-    (Gopher's "duplicate n-gram fraction"): (total - distinct) / total.
-    Zero-shuffle column expression."""
-    return _dup_frac_of(_ngram_occurrences(text, n))
-
-
 def repetition_stats(
     df: DataFrame, id_col: str, text_col: str, top_n: int = 2, dup_n: int = 3
 ) -> DataFrame:
@@ -864,9 +848,11 @@ def duplicate_token_spans(
     # round 6: the window hash is xxhash64 (8-byte long), not the
     # 32-char md5 hex string — the hash is internal (only positions
     # reach the output), every downstream count is collision-invariant
-    # up to 64-bit collisions (birthday bound ~1e-6 even at 10^10
-    # windows), and the dominant shuffle/cache width drops ~4x — the
-    # exact cut round-5 VERDICT task #2 prescribed.
+    # up to 64-bit collisions (birthday bound: about n^2/2^65 expected
+    # colliding pairs for n distinct windows — roughly a 3% chance of
+    # one at 10^9, more than one expected at 10^10), and the dominant
+    # shuffle/cache width drops ~4x — the exact cut round-5 VERDICT
+    # task #2 prescribed.
     wins = F.when(
         n_win >= 1,
         F.transform(

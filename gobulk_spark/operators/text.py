@@ -518,10 +518,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def simhash_band_plan(
     max_hamming: int, probe_radius: int = 0
 ) -> list[tuple[int, int]]:

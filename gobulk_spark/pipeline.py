@@ -21,7 +21,6 @@ UDF), and every audit/metrics write is a narrow append.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import asdict
 
@@ -30,35 +29,12 @@ from pyspark.sql import functions as F
 
 from . import deploy, executor, lineage
 from .config import PipelineConfig
+from .executor import KEPT_COLUMNS, KEPT_SCHEMA_DDL  # noqa: F401  (public names)
 from .plan import decision_columns
 from .sinks import KeptSink, ParquetKeptSink
 from .sources import manifest as src_manifest
 from .sources import scan as src_scan
 from .stages import PARSE_OUTPUT_SCHEMA, make_parse_stage
-
-KEPT_COLUMNS = (
-    "image_id",
-    "source_file",
-    "content_hash",
-    "w",
-    "h",
-    "fmt",
-    "phash",
-    "caption",
-    "lang",
-    "lang_conf",
-    "ppl",
-)
-
-#: declared kept-store schema — deep-diffed against the live store
-#: before any write (gobulk validates its output schema on setup,
-#: output/elasticsearch.go:153-158, output/mysql.go:48-76)
-KEPT_SCHEMA_DDL = (
-    "image_id string, source_file string, content_hash string, "
-    "w int, h int, fmt string, phash bigint, caption string, "
-    "lang string, lang_conf double, ppl double"
-)
-
 
 def _salted_repartition(df: DataFrame, cfg: PipelineConfig, n_partitions: int) -> DataFrame:
     """Spread hot phash buckets before the expensive Python stage.
@@ -142,23 +118,8 @@ def run_pipeline(
             if marker is not None:
                 src = src.join(marker, ["image_id", "content_hash"], "left_anti")
         # narrow-projection dedup: Catalyst prunes the scan to 3 columns;
-        # source_file rides along so the audit needs no join back. The
-        # audit write IS the dup list (parse anti-joins the committed
-        # scan-audit partition) — no separate staging write, and n_dups
-        # rides the write as an observation: one job for the phase.
-        dups_audit = lineage.audit_columns(
-            src_scan.find_duplicates(src, carry=("source_file",)),
-            rid,
-            F.lit("scan"),
-            F.lit("omit"),
-            F.lit("dedup_content_hash"),
-            F.lit("duplicate"),
-            F.lit(None).cast("string"),
-            content_hash_col=F.col("content_hash"),
-        )
-        obs = Observation(f"scan-{rid}")
-        dups_audit = dups_audit.observe(obs, F.count(F.lit(1)).alias("n_dups"))
-        lineage.write_audit(dups_audit, out, "scan", rid)
+        # source_file rides along so the audit needs no join back
+        n_dups = src_scan.audit_duplicates(src, out, rid)
         scan_stats = dict(scan_set["stats"])
         if not cfg.incremental:
             # a full run reads EVERY file regardless of the manifest
@@ -170,7 +131,7 @@ def run_pipeline(
             out,
             rid,
             "scan",
-            n_dups=obs.get["n_dups"],
+            n_dups=n_dups,
             wall_s=time.time() - t0,
             **scan_stats,
         )
@@ -243,187 +204,23 @@ def run_pipeline(
         if waited:
             summary["intermitted_s"] = round(waited, 3)
         t0 = time.time()
-        # heal half-finished kept swaps from a crashed earlier attempt
-        # BEFORE anything reads the kept store
-        sink.recover(spark)
-        # schema gate: a store written under a different engine version
-        # fails fast with the full diff, never silently unioned
-        sink.validate(spark, KEPT_SCHEMA_DDL)
         feats = _parse_frame() if cfg.fused else spark.read.parquet(feats_path)
         decided = decision_columns(feats, cfg.thresholds)
-        # existence check refines create/omit into update/delete for ids
-        # already in the kept store (gobulk Update/Delete ops,
-        # executor.go:96-113; format emits Update when the row exists,
-        # runner_test.go:638-702)
-        existing = sink.existing_ids(spark, exclude_run_id=rid)
-        decided = executor.classify_actions(decided, existing)
-        persisted = staged = False
-        probe3 = None
-        if existing is not None:
-            # several consumers below (affected probe, writes, metrics);
-            # cache so the classify join + parse chain runs once
-            decided = decided.persist()
-            persisted = True
-            # ONE probe job (populating the cache) answers the
-            # update/delete-presence check AND the re-delivery check
-            # below — was two separate jobs
-            probe3 = executor.probe_decided(decided)
-            # MATERIALIZE (not just persist) before the delete step —
-            # but ONLY when deletes will actually run: decided's lineage
-            # includes the classify join over kept files the deletes
-            # atomically swap out, and a lost cached partition afterwards
-            # would recompute from deleted files (FileNotFoundException
-            # mid-write on a real cluster). With no update/delete rows
-            # nothing swaps, so the staging write (a full extra pass,
-            # the round-2 fixed-cost profile top) is skipped.
-            if probe3[2]:
-                decided_path = lineage.stage_dir(out, rid, "decided")
-                decided.write.mode("overwrite").parquet(decided_path)
-                decided.unpersist()
-                persisted = False
-                decided = spark.read.parquet(decided_path)
-                staged = True
-        elif cfg.fused:
-            # three writes consume the frame; cache so parse runs once
-            decided = decided.persist()
-            persisted = True
-        # AFTER the persist/staging block so the probe inside reads the
-        # cache / staged parquet, never a fresh parse execution. Keep
-        # the persisted parent: unpersist on a derived frame is a no-op
-        _cached = decided
-        decided = executor.dedup_exact_redeliveries(
-            decided, probe=probe3[:2] if probe3 else None
-        )
-        # distinct-content siblings of one id (dedup above only folds
-        # IDENTICAL copies): deterministic winner, losers become issue
-        # rows — a merge sink would otherwise refuse the duplicate-key
-        # upsert, and a plain sink would land two rows under one id
-        decided = executor.resolve_conflicting_ids(
-            decided, probe=probe3[4:6] if probe3 else None
-        )
-        if cfg.stop_on_error:
+        if cfg.stop_on_error and not cfg.fused:
+            # the parse stage raises on the first undecodable row; this
+            # catches staged features parsed without the policy (a fused
+            # run parses inside the store step, under the policy)
             n_issue = decided.where(F.col("action") == "issue").count()
             if n_issue:
                 raise RuntimeError(f"StopOnError: {n_issue} issue rows in parse output")
-        # per-sub-operation tracking (gobulk executor sub-op recursion,
-        # E4): each store write records its wall + completion in the
-        # commit manifest; an exception aborts before commit, so a
-        # manifest listing a sub-op proves it finished
-        subops: list[dict] = []
-
-        def _sub(name: str, fn) -> None:
-            ts = time.time()
-            fn()
-            subops.append({"op": name, "wall_s": round(time.time() - ts, 3), "ok": True})
-
-        # --- D: remove prior kept rows of update/delete ids (staged
-        #        rewrite + atomic swap; idempotent under retry) ---------
-        # A merge-capable sink (supports_atomic_upsert) replaces
-        # updated ids INSIDE the upsert commit, so D narrows to pure
-        # deletes — one commit per run instead of two, and a reader
-        # never sees an updated id's delete-without-rewrite window
-        use_merge = bool(getattr(sink, "supports_atomic_upsert", False))
-        if staged:  # only when update/delete rows exist (probe above)
-            if not use_merge:
-                _sub(
-                    "delete",
-                    lambda: executor.execute_deletes(spark, sink, rid, decided),
-                )
-            elif probe3 and probe3[3]:
-                _sub(
-                    "delete",
-                    lambda: executor.execute_deletes(
-                        spark, sink, rid, decided, actions=("delete",)
-                    ),
-                )
-        # --- U + C: this run's kept rows land in the sink's run scope --
-        # per-run overwrite = idempotent under store-phase retry even on
-        # incremental runs (run 2's retry never touches run 1).
-        # A transactional backend may return per-item failures it could
-        # not land after its retry budget — routed below to the audit as
-        # issue rows and excluded from the marker so they re-enter next
-        # run (gobulk records failed ops as issues, issue.go:137-146).
-        # Normalized to a DataFrame: every consumer joins against it, so
-        # wholesale failure never builds a driver-side id list
-        _fail_box: list = [None]
-
-        def _write_kept() -> None:
-            rows = executor.kept_rows(decided, KEPT_COLUMNS)
-            if use_merge:
-                # no kept rows (idle incremental sweep, all-dropped
-                # batch): skip the commit entirely — an empty merge
-                # grows the log by one no-op entry + one empty file per
-                # run. The guard is free when the probe ran (kept-pair
-                # count already computed); first runs without an
-                # existing store pay one bounded isEmpty job
-                empty = (probe3[4] == 0) if probe3 else rows.isEmpty()
-                if empty:
-                    return
-                # atomic upsert: replaces updated ids, appends creates.
-                # Duplicate ids cannot reach here: resolve_conflicting_
-                # ids collapsed same-id different-content siblings to
-                # the deterministic winner (merge itself still refuses
-                # duplicates as a backstop)
-                sink.merge(spark, rid, rows)
-            else:
-                f = sink.write(rows, rid)
-                _fail_box[0] = executor.failures_frame(spark, f)
-
-        _sub("merge_kept" if use_merge else "write_kept", _write_kept)
-        failed_df = _fail_box[0]
-        # bounded count for the commit manifest (the frame is either a
-        # local relation or a staged-parquet read-back — one cheap job)
-        n_failed = failed_df.count() if failed_df is not None else 0
-        # --- O: omits/issues reach only the audit + metrics tables -----
-        audit = executor.store_audit_columns(decided, rid)
-        # run totals ride the audit write as an observation — no read-back
-        obs = Observation(f"store-{rid}")
-        audit = audit.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.col("action").isin("create", "update").cast("long")).alias("kept"),
-            F.sum(F.col("action").isin("omit", "delete").cast("long")).alias("dropped"),
-            F.sum((F.col("action") == "issue").cast("long")).alias("issues"),
-        )
-        if n_failed:
-            audit = audit.unionByName(executor.write_failure_audit(failed_df, rid))
-        _sub("write_audit", lambda: lineage.write_audit(audit, out, "store", rid))
-        _sub(
-            "write_metrics",
-            lambda: lineage.write_metrics(
-                lineage.partition_metrics(decided, rid), out, "store", rid
-            ),
-        )
-        # compacted-marker advance: this run's (id, latest hash) pairs —
-        # decided rows plus the scan-phase dups — merge into the O(ids)
-        # snapshot the NEXT run's anti-join reads (replaces round 2's
-        # full-audit groupBy). Pointer flip is atomic; retry-idempotent.
-        new_pairs = decided.select("image_id", "content_hash")
-        if n_failed:
-            # a row the sink could not land is NOT processed: keeping it
-            # out of the marker makes the next incremental run re-import
-            # it (the retry tier above bounded retries; this is the
-            # next-iteration tier). Anti-join, never isin: wholesale
-            # failure would otherwise inline every id into the plan
-            new_pairs = new_pairs.join(
-                failed_df.select("image_id").distinct(), "image_id", "left_anti"
-            )
-        if n_dups:
-            new_pairs = new_pairs.unionByName(
-                spark.read.parquet(scan_audit_path).select(
-                    "image_id", "content_hash"
-                )
-            )
-        _sub(
-            "advance_marker",
-            lambda: lineage.advance_marker(spark, out, rid, new_pairs),
-        )
+        stored = executor.store(spark, sink, out, rid, decided, n_dups)
+        failed_df, n_failed = stored.failed, stored.totals["sink_failed"]
         # file-manifest advance: the frozen listing this run processed
         # becomes the next run's prune baseline (committed before the
         # phase flip so a crash in between re-commits identical content).
         # Files holding sink-FAILED rows are withheld: "unchanged file"
         # must mean "all rows landed", or the prune would mask the
-        # re-import the marker exclusion above arranged.
+        # re-import the marker exclusion in the store step arranged.
         manifest_files = scan_set["files"]
         if n_failed:
             # distinct source FILES of failed rows — bounded by the file
@@ -441,36 +238,24 @@ def run_pipeline(
                     for f in manifest_files
                     if src_manifest.norm_path(f["path"]) not in failed_files
                 ]
-        _sub(
-            "commit_manifest",
-            lambda: src_manifest.commit_manifest(spark, out, rid, manifest_files),
-        )
-        stats = obs.get
-        if persisted:
-            _cached.unpersist()
-        if staged:
-            # the staged decided snapshot served its purpose (stable
-            # input across the delete step); don't let one copy per run
-            # accumulate under _stage
-            from .fsutil import Fs
-
-            Fs(spark, out).delete(lineage.stage_dir(out, rid, "decided"))
-        # `kept` must count rows that LANDED: the observation runs over
-        # decided actions before sink failures are known, and a failed
-        # row was audited as an issue and withheld from the marker —
-        # reporting it inside kept would make the manifest disagree
-        # with the store (failures are create/update rows by
-        # construction: only kept_rows() reach sink.write)
+        ts = time.time()
+        src_manifest.commit_manifest(spark, out, rid, manifest_files)
+        subops = stored.subops + [
+            {"op": "commit_manifest", "wall_s": round(time.time() - ts, 3), "ok": True}
+        ]
+        # `kept` must count rows that LANDED: a failed row was audited
+        # as an issue and withheld from the marker (failures are
+        # create/update rows by construction: only kept rows reach the
+        # sink)
+        totals = stored.totals
         ck = lineage.commit_phase(
             out,
             rid,
             "store",
-            rows_in=stats["rows_in"],
-            # sum() observations are None on a zero-row write (an
-            # unchanged-source incremental run) — treat as 0
-            kept=(stats["kept"] or 0) - n_failed,
-            dropped=stats["dropped"] or 0,
-            issues=(stats["issues"] or 0) + n_failed,
+            rows_in=totals["rows_in"],
+            kept=totals["kept"] - n_failed,
+            dropped=totals["dropped"],
+            issues=totals["issues"] + n_failed,
             sink_failed=n_failed,
             subops=subops,
             wall_s=time.time() - t0,

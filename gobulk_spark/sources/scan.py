@@ -21,9 +21,10 @@ Scale notes (10^12-row design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import lineage
 from ..functions.heuristics import content_hash
 
 SOURCE_COLUMNS = ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
@@ -69,6 +70,21 @@ def anti_join_ids(df: DataFrame, ids: DataFrame, broadcast: bool) -> DataFrame:
     return df.join(right.select("image_id"), "image_id", "left_anti")
 
 
-def semi_join_ids(df: DataFrame, ids: DataFrame, broadcast: bool) -> DataFrame:
-    right = F.broadcast(ids) if broadcast else ids
-    return df.join(right.select("image_id"), "image_id", "left_semi")
+def audit_duplicates(df: DataFrame, out_dir: str, run_id: str) -> int:
+    """Write ``df``'s content duplicates as the scan phase's audit rows
+    (action=omit) and return their count, observed on that write — one
+    job for the phase. The audit leaf is also the duplicate list: parse
+    anti-joins it, and the store step adds its pairs to the marker."""
+    obs = Observation(f"scan-{run_id}")
+    dups = lineage.audit_columns(
+        find_duplicates(df, carry=("source_file",)),
+        run_id,
+        F.lit("scan"),
+        F.lit("omit"),
+        F.lit("dedup_content_hash"),
+        F.lit("duplicate"),
+        F.lit(None).cast("string"),
+        content_hash_col=F.col("content_hash"),
+    ).observe(obs, F.count(F.lit(1)).alias("n_dups"))
+    lineage.write_audit(dups, out_dir, "scan", run_id)
+    return obs.get["n_dups"]

@@ -8,7 +8,9 @@ bulk, each micro-batch is one Reader->Parser->Planner->Executor sweep,
 and Spark's checkpointLocation replaces the tracker's marker.
 
 ``foreachBatch`` reuses the *batch* stage functions unchanged — one code
-path for both modes (the engine contract, not two engines).
+path for both modes (the engine contract, not two engines): the scan
+dedup audit, the parse stage, the plan and ``executor.store``. What is
+streaming's own is the retry queue (below) and post-epoch maintenance.
 """
 
 from __future__ import annotations
@@ -20,7 +22,6 @@ from pyspark.sql import functions as F
 
 from .. import executor, lineage
 from ..config import PipelineConfig
-from ..pipeline import KEPT_COLUMNS, KEPT_SCHEMA_DDL
 from ..plan import decision_columns
 from ..sinks import KeptSink, ParquetKeptSink
 from ..sources import scan as src_scan
@@ -35,12 +36,6 @@ SOURCE_DDL = (
 #: (a full snapshot rewrite per epoch would be O(corpus ids) — the
 #: write cost a small-epoch stream cannot pay at warehouse scale)
 MARKER_COMPACT_EVERY = 8
-
-
-def _use_merge(sink) -> bool:
-    """True for sinks that land the epoch's upsert as ONE atomic
-    commit (sink.merge) instead of the delete-then-write pair."""
-    return bool(getattr(sink, "supports_atomic_upsert", False))
 
 
 def _retry_root(out_dir: str) -> str:
@@ -148,251 +143,51 @@ def _process_microbatch(
             F.coalesce(F.nullif(F.input_file_name(), F.lit("")), F.lit("stream")),
         )
     )
-    # in-batch content dedup (cross-batch dedup = the marker/audit check)
-    dups = src_scan.find_duplicates(src, carry=("source_file",))
+    # in-batch content dedup (cross-batch dedup = the marker check)
+    n_dups = src_scan.audit_duplicates(src, out, rid)
     # compacted-snapshot marker on the LATEST content_hash per id:
     # changed (or reverted) content re-enters as an update. The
-    # snapshot advances only at the END of this function and records
+    # snapshot advances only at the END of the store step and records
     # its epoch, so a foreachBatch RETRY of the same epoch reads the
     # predecessor snapshot — never masked by its own half-committed
-    # outputs (and, unlike the round-2 audit-scan marker, the retry
-    # re-detects and re-audits the epoch's duplicates identically).
+    # outputs.
     marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
     if marker is not None:
         src = src.join(marker, ["image_id", "content_hash"], "left_anti")
-    # the scan-audit write IS the dup count (observation): an
-    # AvailableNow drain with no maxFilesPerTrigger can make one epoch
-    # of the entire backlog, so the dup list gets the same broadcast
-    # guard as the batch pipeline — never an unconditional broadcast
-    from pyspark.sql import Observation
-
-    obs = Observation(f"stream-scan-{rid}")
-    dups_audit = lineage.audit_columns(
-        dups,
-        rid,
-        F.lit("scan"),
-        F.lit("omit"),
-        F.lit("dedup_content_hash"),
-        F.lit("duplicate"),
-        F.lit(None).cast("string"),
-        content_hash_col=F.col("content_hash"),
-    ).observe(obs, F.count(F.lit(1)).alias("n_dups"))
-    lineage.write_audit(dups_audit, out, "scan", rid)
-    n_dups = obs.get["n_dups"]
-    deduped = src_scan.anti_join_ids(
-        src, dups, broadcast=n_dups <= cfg.dup_broadcast_max
-    )
-    feats = deduped.mapInPandas(
+    if n_dups:
+        # an AvailableNow drain with no maxFilesPerTrigger can make one
+        # epoch of the entire backlog: the dup list gets the same
+        # broadcast guard as the batch pipeline
+        dups = spark.read.parquet(lineage.audit_leaf(out, "scan", rid))
+        src = src_scan.anti_join_ids(
+            src, dups, broadcast=n_dups <= cfg.dup_broadcast_max
+        )
+    feats = src.mapInPandas(
         make_parse_stage(cfg.stop_on_error), schema=PARSE_OUTPUT_SCHEMA
     )
-    decided = decision_columns(feats, cfg.thresholds)
-    sink.recover(spark)  # heal before reading kept
-    sink.validate(spark, KEPT_SCHEMA_DDL)  # schema gate, fail fast
-    existing = sink.existing_ids(spark, exclude_run_id=rid)
-    decided = executor.classify_actions(decided, existing)
-    # ALWAYS persist: four downstream actions (kept write, store audit,
-    # metrics, marker advance) consume this frame — without the cache,
-    # epoch 0 of a stream (the full initial backlog, existing=None)
-    # re-ran the whole decode+model parse stage once per action
-    decided = decided.persist()
-    persisted, staged = True, False
-    # after the persist so the probe populates (not bypasses) the
-    # cache; keep the persisted parent for unpersist (a derived frame's
-    # unpersist is a no-op) — see pipeline.py
-    _cached = decided
-    # ONE probe job answers the re-delivery check AND the
-    # update/delete-presence check (was two jobs against the ~6-job
-    # fixed epoch floor)
-    (
-        _n_rows,
-        _n_keys,
-        n_affected,
-        n_pure_del,
-        _n_kept_pairs,
-        _n_kept_ids,
-    ) = executor.probe_decided(decided)
-    decided = executor.dedup_exact_redeliveries(decided, probe=(_n_rows, _n_keys))
-    # distinct-content siblings of one id: deterministic winner, losers
-    # routed as issues — without this, sink.merge refuses the duplicate
-    # key and the failing epoch re-delivers from the checkpoint FOREVER
-    decided = executor.resolve_conflicting_ids(
-        decided, probe=(_n_kept_pairs, _n_kept_ids)
-    )
-    if existing is not None:
-        # materialize before deletes mutate the files decided's lineage
-        # reads (see pipeline.py store phase) — but only when deletes
-        # WILL run: on a mostly-append stream the per-epoch staging
-        # write dominated the epoch cost (round-2 profile), and with an
-        # empty affected set nothing swaps, so the persist suffices
-        if n_affected:
-            decided_path = lineage.stage_dir(out, rid, "decided")
-            decided.write.mode("overwrite").parquet(decided_path)
-            _cached.unpersist()  # the persisted parent, not the view
-            persisted = False
-            decided = spark.read.parquet(decided_path)
-            staged = True
-            # merge-capable sinks replace updated ids inside the epoch's
-            # upsert commit; only pure deletes still need the D verb —
-            # one commit per epoch instead of two, and half the log
-            # growth on an update-heavy stream
-            if not _use_merge(sink):
-                executor.execute_deletes(spark, sink, rid, decided)
-            elif n_pure_del:
-                executor.execute_deletes(
-                    spark, sink, rid, decided, actions=("delete",)
-                )
     # dead-letter drain: the stream checkpoint has already consumed the
     # source files of previously-failed rows, so — unlike batch, where
     # manifest withholding forces a source re-read — the ONLY in-stream
-    # re-delivery lever is this staged retry queue of kept rows. The
-    # queue joins THIS epoch's SINGLE sink.write: the sink contract is
-    # per-run overwrite, so a second drain write under the same rid
-    # would silently replace the epoch's own freshly-landed rows. A
-    # queued id superseded by a fresh decision this epoch (any action —
-    # newer content arrived) is dropped, as is one already present in
-    # the store (a torn epoch that landed its drain but crashed before
-    # consuming the queue dirs must not land it twice under a second
-    # run scope). The queue itself was read at the top of the epoch
-    # (it doubles as the no-op gate).
-    if pend is not None:
-        pend = pend.join(
-            decided.select("image_id").distinct(), "image_id", "left_anti"
-        )
-        # fresh existence read (NOT the `existing` frame above: its file
-        # index predates this epoch's delete swaps — a stale listing by
-        # now). Paid only on the failure path (non-empty queue)
-        landed_prior = sink.existing_ids(spark, exclude_run_id=rid)
-        if landed_prior is not None:
-            pend = pend.join(landed_prior, "image_id", "left_anti")
-        # sever lineage from the queue dirs deleted below, and
-        # materialize once for the several consumers (write, audit,
-        # marker, re-stage)
-        pend = pend.localCheckpoint(eager=True)
-    to_write = executor.kept_rows(decided, KEPT_COLUMNS)
-    if pend is not None:
-        to_write = to_write.unionByName(pend.select(*KEPT_COLUMNS))
-    # failures normalized to a DataFrame — all routing below is joins,
-    # never driver-side id lists (a sink failing a whole epoch must not
-    # become an isin() expression bomb); see executor.failures_frame
-    if _use_merge(sink):
-        # skip the commit when the epoch kept nothing and no queued
-        # rows drain — an empty merge would grow the log by a no-op
-        # entry per idle epoch (the probe's kept-pair count makes the
-        # guard free; a conflict resolution never zeroes it, every
-        # conflicted id keeps its winner). A queue that EXISTS but
-        # drains to zero rows after the anti-joins must not commit
-        # either — pend is an eager localCheckpoint here, so the
-        # isEmpty probe is bounded driver work, not a recompute
-        if _n_kept_pairs or (pend is not None and not pend.isEmpty()):
-            sink.merge(spark, rid, to_write)
-        failed = None
-    else:
-        failed = executor.failures_frame(spark, sink.write(to_write, rid))
-    failed_ids = failed.select("image_id").distinct() if failed is not None else None
-    retried = None
-    if pend is not None:
-        retried = (
-            pend.join(failed_ids, "image_id", "left_anti")
-            if failed_ids is not None
-            else pend
-        )
-    # epoch totals ride the store-audit write as an observation
-    # (attached BEFORE the failure/retry unions so the counts cover
-    # exactly the decided rows) — the per-partition metrics groupBy
-    # job this replaces was one of the fixed ~6 jobs bounding the
-    # round-3 epoch floor at 7 s
-    obs_store = Observation(f"stream-store-{rid}")
-    audit = executor.store_audit_columns(decided, rid).observe(
-        obs_store,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("action").isin("create", "update").cast("long")).alias("kept"),
-        F.sum(F.col("action").isin("omit", "delete").cast("long")).alias("dropped"),
-        F.sum((F.col("action") == "issue").cast("long")).alias("issues"),
+    # re-delivery lever is this staged retry queue of kept rows. It
+    # joins the epoch's single sink write as extra kept rows.
+    stored = executor.store(
+        spark,
+        sink,
+        out,
+        rid,
+        decision_columns(feats, cfg.thresholds),
+        n_dups,
+        extra_kept=pend,
+        compact_every=MARKER_COMPACT_EVERY,
     )
-    if failed is not None:
-        # per-item sink failures land as audit issues (see pipeline.py)
-        audit = audit.unionByName(executor.write_failure_audit(failed, rid))
+    if stored.failed_rows is not None:
         # ALL failed rows — fresh and re-failed queued ones — re-stage
         # under this epoch's run scope, stamped with the queue-derived
         # monotonic seq (NOT epoch_id, which resets on stream restart)
         # for the latest-version-wins resolution; staged BEFORE the
         # consumed dirs are deleted, so a crash in between re-drains
         # next epoch (safe: sink writes are idempotent per run scope)
-        _stage_retry(
-            spark,
-            out,
-            rid,
-            retry_seq,
-            to_write.join(failed_ids, "image_id", "left_semi"),
-        )
-    if retried is not None:
-        # previously-failed rows that landed this epoch: close the loop
-        # in the audit (their failure epochs recorded them as issues)
-        audit = audit.unionByName(
-            lineage.audit_columns(
-                retried,
-                rid,
-                F.lit("store"),
-                F.lit("retry_landed"),
-                F.lit("sink_retry_queue"),
-                F.lit(None).cast("string"),
-                F.lit(None).cast("string"),
-                content_hash_col=F.col("content_hash"),
-            )
-        )
-    lineage.write_audit(audit, out, "store", rid)
-    # the observed totals land as ONE metrics row (partition_id=-1
-    # marks an epoch-totals row vs batch's per-partition rows; same
-    # schema, so read_metrics unions both). A 1-row local-relation
-    # write costs milliseconds where the old groupBy re-aggregated the
-    # cached decided frame with a shuffle every epoch
-    st = obs_store.get
-    lineage.write_metrics(
-        spark.createDataFrame(
-            [
-                (
-                    -1,
-                    st["rows_in"],
-                    int(st["kept"] or 0),
-                    int(st["dropped"] or 0),
-                    int(st["issues"] or 0),
-                    rid,
-                )
-            ],
-            "partition_id int, rows_in long, rows_kept long, "
-            "rows_dropped long, rows_issued long, run_id string",
-        ),
-        out,
-        "store",
-        rid,
-    )
-    # advance the compacted marker with this epoch's pairs (decided +
-    # in-batch dups + drained retries); the atomic pointer flip is the
-    # epoch's cross-batch dedup commit point, retry-idempotent
-    # (predecessor snapshot kept). Items the sink failed to land stay
-    # OUT of the marker and in the retry queue
-    new_pairs = decided.select("image_id", "content_hash")
-    if failed_ids is not None:
-        new_pairs = new_pairs.join(failed_ids, "image_id", "left_anti")
-    if retried is not None:
-        new_pairs = new_pairs.unionByName(
-            retried.select("image_id", "content_hash")
-        )
-    if n_dups:
-        # reuse the committed scan-audit leaf instead of recomputing
-        # the dedup scan (pipeline.py does the same)
-        new_pairs = new_pairs.unionByName(
-            spark.read.parquet(lineage.audit_leaf(out, "scan", rid)).select(
-                "image_id", "content_hash"
-            )
-        )
-    lineage.advance_marker(
-        spark,
-        out,
-        rid,
-        new_pairs,
-        compact_every=MARKER_COMPACT_EVERY,
-    )
+        _stage_retry(spark, out, rid, retry_seq, stored.failed_rows)
     # queue dirs consumed — deleted only now, after the marker flip
     # committed the epoch: a crash anywhere above re-drains them (the
     # store exclusion on pend makes that idempotent)
@@ -424,14 +219,6 @@ def _process_microbatch(
                 "post-epoch maintenance failed (will retry next epoch): %s",
                 exc,
             )
-    if persisted:
-        _cached.unpersist()
-    if staged:
-        # one staged snapshot per EPOCH would grow without bound on a
-        # long-lived stream; drop it once the epoch's writes are done
-        from ..fsutil import Fs
-
-        Fs(spark, out).delete(lineage.stage_dir(out, rid, "decided"))
 
 
 def run_streaming_ingest(

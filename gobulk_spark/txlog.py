@@ -429,7 +429,6 @@ class TxLogKeptSink:
         settings: dict | None = None,
         auto_compact_files: int | None = 64,
         merge_schema: bool = False,
-        atomic_upserts: bool = True,
         constraints: dict[str, str] | None = None,
         stats_columns: list[str] | None = None,
         bloom_columns: list[str] | None = None,
@@ -481,11 +480,6 @@ class TxLogKeptSink:
         # the session's shuffle parallelism).
         self.write_cluster_by = write_cluster_by
         self.write_cluster_files = write_cluster_files
-        # advertise the one-commit upsert to the pipeline/streaming
-        # store phases: updated ids are replaced inside the merge
-        # commit, D narrows to pure deletes (opt-out restores the
-        # delete-then-write pair for A/B or compat)
-        self.supports_atomic_upsert = atomic_upserts
         # Delta-parity CHECK constraints: name -> SQL boolean expr,
         # enforced on every write/merge via an Observation riding the
         # landing job itself (zero extra passes over the data; SQL

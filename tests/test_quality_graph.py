@@ -418,7 +418,11 @@ def test_per_doc_signals_are_zero_shuffle_and_jvm_only(spark):
     ):
         plan = _plan(out)
         assert "Exchange" not in plan, plan
-    for plan in (rep_plan, _plan(hash_split(df, "doc_id"))):
+    for plan in (
+        rep_plan,
+        _plan(hash_split(df, "doc_id")),
+        _plan(stratified_sample(df, "doc_id", "text", {"x": 0.5})),
+    ):
         for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
             assert py_node not in plan, plan
 

@@ -85,19 +85,6 @@ def test_e2e_matches_parquet_sink_and_delete_rewrites(spark):
     assert not merges[0]["remove"] and merges[0]["add"]
     assert merges[1]["remove"] and merges[1]["add"]
     assert not [e for e in hist if e["op"] == "delete"]
-    # opting out restores the delete-then-write pair
-    out_c = os.path.join(BASE, "c")
-    sink_c = TxLogKeptSink(out_c, atomic_upserts=False)
-    for r in ("r1", "r2"):
-        run_pipeline(
-            spark,
-            PipelineConfig(source_path=src, out_dir=out_c, run_id=r),
-            sink=sink_c,
-        )
-    c2 = _kept_frame(sink_c, spark)
-    pd.testing.assert_frame_equal(a2, c2)
-    dels = [e for e in sink_c.history(spark) if e["op"] == "delete"]
-    assert dels and all(e["remove"] and "add" in e for e in dels)
 
 
 def test_time_travel_and_snapshot_isolation(spark):
