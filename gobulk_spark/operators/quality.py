@@ -565,6 +565,8 @@ def _bucket_occurrences(
     # would collapse everything into 2 partitions; sort-before-
     # repartition keeps round-robin deterministic under task retries.
     # Conditional like text.spread: an already-split table skips it.
+    # Same caveat: under AQE ``df.rdd`` runs every upstream shuffle
+    # stage of a non-scan input while the plan is being built.
     n_part = df.sparkSession.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= n_part:

@@ -76,8 +76,10 @@ def spread(df: DataFrame, id_col: str) -> DataFrame:
     under-partitioned: a warehouse-scale table already scans as
     thousands of splits, and forcing it through an exchange down to
     defaultParallelism partitions would ADD a full shuffle (and cap
-    parallelism) exactly where none is needed. getNumPartitions only
-    plans — no job runs."""
+    parallelism) exactly where none is needed. Caveat: ``df.rdd`` is
+    NOT free — with AQE on (session.py) it materializes every upstream
+    shuffle stage of a non-scan input at plan-construction time, work
+    the real action then repeats."""
     n_part = df.sparkSession.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= n_part:

@@ -46,13 +46,21 @@ marker, incremental re-imports — runs against it unchanged; when real
 Iceberg/Delta jars land, ``IcebergKeptSink`` replaces this class and
 the protocol work transfers 1:1.
 
+Every mutation verb — write, merge, delete, delete_where, optimize,
+restore — commits through ONE step (``TxLogKeptSink._mutate``):
+snapshot, stage files and build the entry, commit, or discard the
+staged files and re-derive when the snapshot went stale. ``_commit``
+is the one place an entry gets the table's settings and constraints,
+so every log entry the change feed replays is built the same way.
+
 Scale notes: the log holds file-level metadata only (O(files), never
 O(rows)); data files are written by executors through the normal
 parquet path; the delete rewrite reads only AFFECTED files (found by
 one semi-join over the live set) and rewrites them in one Spark job.
-Log compaction (Delta's checkpoint every N commits) is the known
-growth bound at 10^6+ commits and is noted, not implemented — the
-replay here is a driver-side read of small JSON files.
+Log growth is bounded by checkpoints (Delta's checkpoint every N
+commits): every ``CHECKPOINT_EVERY`` commits the replayed state is
+written as one JSON file, so a reader replays the newest checkpoint
+plus fewer than ``CHECKPOINT_EVERY`` small commit files.
 """
 
 from __future__ import annotations
@@ -60,7 +68,7 @@ from __future__ import annotations
 import json
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import lineage
@@ -74,7 +82,7 @@ MAX_COMMIT_ATTEMPTS = 50
 #: a checkpoint file materializes the replayed state every N commits
 #: (Delta writes parquet checkpoints every 10), so readers pay
 #: O(commits mod N) JSON reads instead of O(commits) — the log-growth
-#: bound flagged in the module doc
+#: bound described in the module doc
 CHECKPOINT_EVERY = 10
 
 #: per-file column stats (Delta's add.stats / Iceberg's manifest
@@ -201,9 +209,10 @@ def _uri_rel_mapper(paths: dict[str, str]):
     ``input_file_name()`` returns a URI (file:///..., hdfs://...,
     s3a://...); lookup is O(1) on the scheme-stripped path, with a
     suffix scan only as the fallback for exotic URI normalizations.
-    The ONE mapping backing stats, blooms, the write purge, delete and
-    merge — the commit paths must never disagree about which file a
-    rewrite removed."""
+    The ONE mapping backing stats, blooms and the touched-file rewrite
+    (``_rewrite_touched``) that the write purge, delete, delete_where
+    and merge share — the commit paths must never disagree about which
+    file a rewrite removed."""
     by_path = {
         a.split("://")[-1].lstrip("/"): rel for a, rel in paths.items()
     }
@@ -608,26 +617,36 @@ class TxLogKeptSink:
     # ``delete``-rewrite files are tagged by the deleting run but carry
     # prior runs' rows, so only write-adds supersede.
 
-    def _settings_for_commit(self, fs: Fs) -> dict:
-        """Settings a new commit entry records: what this instance
-        declares, or — when it declares none — the store's recorded
-        settings carried FORWARD. A default-constructed maintenance
-        sink (the CLI's --optimize/--vacuum/--delete path) must not
-        stamp {} over a settings-carrying store: the next writer's
-        validate reads the LAST entry's settings, would see {}, and
-        reject its own store — bricked by its own maintenance job."""
-        if self.settings:
-            return self.settings
+    def _last_entry(self, fs: Fs) -> dict:
         names = self._entry_names(fs)
         if not names:
-            return self.settings
+            return {}
+        return json.loads(fs.read_text(lineage._join(self.log_dir, names[-1])))
+
+    def _table_meta(self, fs: Fs) -> tuple[dict, dict]:
+        """(settings, constraints) a new commit records, from one read
+        of the last entry: what this instance declares or — when it
+        declares none — the store's recorded value carried FORWARD.
+
+        - settings: a default-constructed maintenance sink (the CLI's
+          --optimize/--vacuum/--delete path) must not stamp {} over a
+          settings-carrying store — the next writer's validate reads
+          the LAST entry's settings, would see {}, and reject its own
+          store, bricked by its own maintenance job.
+        - constraints: CHECK constraints bind the TABLE, not the writer
+          (Delta keeps them in table metadata). A writer constructed
+          without ``constraints=`` — the CLI's default sink,
+          maintenance jobs, recovery — inherits and enforces the
+          recorded set; an instance that DOES declare constraints
+          replaces it (the ALTER CONSTRAINT verb)."""
         try:
-            last = json.loads(
-                fs.read_text(lineage._join(self.log_dir, names[-1]))
-            )
+            last = self._last_entry(fs)
         except Exception:
-            return self.settings
-        return last.get("settings", {}) or {}
+            last = {}
+        return (
+            self.settings or last.get("settings") or {},
+            self.constraints or last.get("constraints") or {},
+        )
 
     def _commit(
         self, spark: SparkSession, entry: dict, base_version: int | None = None
@@ -637,19 +656,20 @@ class TxLogKeptSink:
         The tmp file is fully written first; ``Fs.rename`` refuses to
         clobber an existing destination, so exactly one contender wins
         each version (Delta's HDFS commit protocol). When
-        ``base_version`` is given (delete rewrites), the commit only
+        ``base_version`` is given (versioned commits), the commit only
         succeeds as version ``base_version + 1`` — if another commit
         got there first the snapshot this entry was computed from is
-        stale, and the caller must re-derive it (returns None)."""
+        stale, and the caller must re-derive it (returns None).
+
+        Table metadata rides EVERY commit, stamped here and nowhere
+        else: an entry that dropped settings or constraints would break
+        the carry-forward chain the next writer's validate and
+        enforcement read."""
         fs = self._fs(spark)
         fs.mkdirs(self.log_dir)
-        if "constraints" not in entry:
-            # table metadata rides EVERY commit (like settings): a
-            # maintenance entry that dropped the key would break the
-            # carry-forward chain for the next writer's enforcement
-            cons = self._constraints_for_commit(fs)
-            if cons:
-                entry["constraints"] = cons
+        entry["settings"], cons = self._table_meta(fs)
+        if cons:
+            entry["constraints"] = cons
         for _ in range(MAX_COMMIT_ATTEMPTS):
             versions = [int(n.split(".")[0]) for n in self._entry_names(fs)]
             v = (max(versions) + 1) if versions else 1
@@ -657,7 +677,7 @@ class TxLogKeptSink:
                 return None  # snapshot went stale; caller re-derives
             entry["version"] = v
             tmp = lineage._join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-            fs.write_text_atomic(tmp, json.dumps(entry))
+            fs.write_text_atomic(tmp, json.dumps(entry, default=str))
             if fs.rename(tmp, lineage._join(self.log_dir, f"{v:020d}.json")):
                 self._maybe_checkpoint(spark, v)
                 return v
@@ -681,13 +701,6 @@ class TxLogKeptSink:
         footers) makes pre-evolution rows carry NULL instead."""
         reader = spark.read.schema(schema_ddl) if schema_ddl else spark.read
         return reader.parquet(*[self._abs(r) for r in rels])
-
-    def _list_parquet(self, fs: Fs, d: str, rel_prefix: str) -> list[str]:
-        return [
-            f"{rel_prefix}/{n}"
-            for n in fs.listdir(d)
-            if n.endswith(".parquet")
-        ]
 
     def _dir_files(self, fs: Fs, d: str, rel_prefix: str) -> dict[str, int]:
         """rel path -> byte length for a landed directory's parquet
@@ -1058,16 +1071,11 @@ class TxLogKeptSink:
         survives its min/max bounds AND its bloom — so a 100-id delete
         against a clustered 10^6-file table opens the bloom-hit files,
         not the table. Conservative: unknown stats keep the file."""
-        out = []
-        for p, tag in snap.items():
-            for v in values:
-                pred = [(key, "=", v)]
-                if self._file_matches(
-                    tag[3], pred, fields
-                ) and not self._bloom_excludes(spark, p, tag[3], pred, fields):
-                    out.append(p)
-                    break
-        return sorted(out)
+        hit: set[str] = set()
+        for v in values:
+            rest = {p: tag for p, tag in snap.items() if p not in hit}
+            hit.update(self._surviving(spark, rest, [(key, "=", v)], fields))
+        return sorted(hit)
 
     def _dfp_candidates(
         self,
@@ -1076,23 +1084,23 @@ class TxLogKeptSink:
         log_schema: str | None,
         keys: DataFrame,
         key: str,
-    ) -> list[str] | None:
-        """The live-file subset a small ``keys`` frame could touch, or
-        None when the key set exceeds the cap (caller scans everything).
-        One bounded collect (cap+1 rows) decides which."""
+    ) -> list[str]:
+        """The live-file subset a small ``keys`` frame could touch —
+        every live file when the key set exceeds the cap or the key has
+        no stats column. One bounded collect (cap+1 rows) decides."""
+        if not snap:
+            return []
         raw = keys.limit(self._DFP_KEY_CAP + 1).collect()
+        fields = _ddl_to_fields(spark, log_schema) if log_schema else {}
         # overflow decides on the RAW row count: dropping NULLs first
         # could make an over-cap key set look small and prune against
         # an incomplete key list (missed delete victims)
-        if len(raw) > self._DFP_KEY_CAP:
-            return None
+        if len(raw) > self._DFP_KEY_CAP or key not in fields:
+            return sorted(snap)
         # NULL keys never equi-join (the discovery semi-join ignores
         # them), so they must not reach the per-key stats probe — a
         # None would crash the min/max comparison there
         vals = [r[key] for r in raw if r[key] is not None]
-        fields = _ddl_to_fields(spark, log_schema) if log_schema else {}
-        if key not in fields:
-            return None
         return self._files_possibly_containing(spark, snap, fields, key, vals)
 
     def prune_files(
@@ -1147,12 +1155,7 @@ class TxLogKeptSink:
         # a run declaring different settings against a live store is a
         # setup error (gobulk validates resolved index configs the same
         # way, output/elasticsearch.go:92-109)
-        fs = self._fs(spark)
-        names = self._entry_names(fs)
-        last_entry = json.loads(
-            fs.read_text(lineage._join(self.log_dir, names[-1]))
-        )
-        recorded = last_entry.get("settings", {})
+        recorded = self._last_entry(self._fs(spark)).get("settings", {})
         if recorded != self.settings:
             raise SinkSchemaMismatch(
                 f"txlog store at {self.root} was committed with settings "
@@ -1218,11 +1221,7 @@ class TxLogKeptSink:
         NULL in the columns it omits. Re-typing is refused, so direct
         API writes (which skip the pipeline's validate gate) cannot
         corrupt the log schema."""
-        merged = (
-            {n: t for n, t in _ddl_to_fields(spark, log_schema).items()}
-            if log_schema
-            else {}
-        )
+        merged = _ddl_to_fields(spark, log_schema) if log_schema else {}
         for n, t in df_fields.items():
             if n in merged and merged[n] != t:
                 raise SinkSchemaMismatch(
@@ -1233,54 +1232,96 @@ class TxLogKeptSink:
             merged.setdefault(n, t)
         return ", ".join(f"{n} {t}" for n, t in merged.items())
 
-    def _constraints_for_commit(self, fs: Fs) -> dict:
-        """CHECK constraints bind the TABLE, not the writer (Delta
-        keeps them in table metadata): a writer constructed without
-        ``constraints=`` — the CLI's default sink, maintenance jobs,
-        recovery — inherits the store's recorded constraints instead
-        of silently skipping enforcement while history keeps claiming
-        the invariant. An instance that DOES declare constraints
-        replaces the recorded set (the ALTER CONSTRAINT verb)."""
-        if self.constraints:
-            return self.constraints
-        names = self._entry_names(fs)
-        if not names:
-            return {}
-        try:
-            last = json.loads(
-                fs.read_text(lineage._join(self.log_dir, names[-1]))
-            )
-        except Exception:
-            return {}
-        return last.get("constraints", {}) or {}
+    # -- the one mutation path ----------------------------------------------
 
-    def _constrained(self, df: DataFrame, constraints: dict[str, str]):
-        """(df', check) — df' carries an Observation whose aggregates
-        count CHECK violations per constraint DURING the next action
-        over df' (the landing write itself — no extra pass). Call
-        ``check()`` after that action and before committing; it raises
-        ConstraintViolation when any constraint saw a FALSE row. SQL
-        CHECK semantics: NULL passes, only FALSE violates."""
-        if not constraints:
-            return df, lambda: None
-        from pyspark.sql import Observation
+    def _mutate(self, spark: SparkSession, verb: str, derive, blind=None):
+        """The ONE optimistic-concurrency loop every mutation verb
+        commits through. Each attempt takes the ``_state`` snapshot and
+        calls the verb's ``derive(snapshot)``, which stages its files
+        and returns ``(entry, staged_dirs)``, or None when there is
+        nothing to do. The entry commits only as the snapshot's next
+        version unless ``blind(snapshot, entry)`` holds (nothing was
+        derived from the live set); a stale snapshot discards the
+        staged dirs and re-derives. Returns the committed entry
+        (``_commit`` sets its ``version``) or None."""
+        fs = self._fs(spark)
+        for _ in range(MAX_COMMIT_ATTEMPTS):
+            snap = self._state(spark)
+            step = derive(snap)
+            if step is None:
+                return None
+            entry, staged = step
+            base = None if blind and blind(snap, entry) else snap[2]
+            if self._commit(spark, entry, base_version=base) is not None:
+                return entry
+            for d in staged:
+                fs.delete(d)  # stale snapshot: discard and re-derive
+        raise OSError(f"txlog {verb} lost {MAX_COMMIT_ATTEMPTS} snapshot races")
 
-        obs = Observation(f"txlog-check-{uuid.uuid4().hex[:8]}")
-        aggs = [
-            F.sum(
-                F.coalesce(~F.expr(e), F.lit(False)).cast("long")
-            ).alias(n)
-            for n, e in sorted(constraints.items())
-        ]
-        df = df.observe(obs, *aggs)
+    def _entry(self, spark, op, run_id, add_map, remove, schema, **extra):
+        """A commit entry for files this commit landed (``add_map``:
+        rel path -> bytes), with their per-file stats from one narrow
+        scan. ``_commit`` stamps the table metadata."""
+        return {
+            "op": op,
+            "run_id": run_id,
+            "add": sorted(add_map),
+            "add_bytes": add_map,
+            "remove": remove,
+            "schema": schema,
+            "stats": self._collect_stats(spark, sorted(add_map), schema),
+            **extra,
+        }
 
-        def check():
-            got = obs.get
-            bad = {n: int(got[n]) for n in constraints if got.get(n)}
-            if bad:
-                raise ConstraintViolation(self.root, bad)
+    def _land(self, spark: SparkSession, df: DataFrame, rel: str) -> dict:
+        """Write ``df`` into the fresh data dir ``rel``; return its
+        ``add_map``. The table's CHECK constraints (``_table_meta``)
+        ride the landing job as an Observation counting FALSE rows per
+        constraint — no extra pass; NULL passes, as in SQL. A violation
+        deletes the landing and raises ConstraintViolation before any
+        commit, so readers never see the rows."""
+        fs = self._fs(spark)
+        abs_dir = self._abs(rel)
+        cons = self._table_meta(fs)[1]
+        obs = None
+        if cons:
+            obs = Observation(f"txlog-check-{uuid.uuid4().hex[:8]}")
+            df = df.observe(obs, *[
+                F.sum((~F.expr(e)).cast("long")).alias(n)
+                for n, e in sorted(cons.items())
+            ])
+        df.write.mode("overwrite").parquet(abs_dir)
+        bad = {n: int(c) for n, c in obs.get.items() if c} if obs else {}
+        if bad:
+            fs.delete(abs_dir)
+            raise ConstraintViolation(self.root, bad)
+        return self._dir_files(fs, abs_dir, rel)
 
-        return df, check
+    def _rewrite_touched(self, spark, files, schema, prefix, victims, survivors):
+        """The touched-file rewrite of the write purge, delete,
+        delete_where and merge. Stats and blooms only BOUND the
+        candidate ``files`` (a straddling [min,max] says "maybe", never
+        "contains"), so ONE column-pruned ``input_file_name()`` probe
+        of ``victims(df)`` finds the files holding a victim row, and
+        only those are rewritten as ``survivors(df)`` into one fresh
+        ``<prefix>-<hex>`` dir. Returns (removed, add_map, staged dirs),
+        all empty when no candidate holds a victim."""
+        if not files:
+            return [], {}, []
+        probe = self._read_files(spark, files, schema).withColumn(
+            "_f", F.input_file_name()
+        )
+        hit = [r["_f"] for r in victims(probe).select("_f").distinct().collect()]
+        if not hit:
+            return [], {}, []
+        rel_of = _uri_rel_mapper({self._abs(p): p for p in files})
+        removed = sorted({rel_of(u) for u in hit})
+        rel = f"{prefix}-{uuid.uuid4().hex[:8]}"
+        out = self._abs(rel)
+        survivors(self._read_files(spark, removed, schema)).write.mode(
+            "overwrite"
+        ).parquet(out)
+        return removed, self._dir_files(self._fs(spark), out, rel), [out]
 
     def write(self, df: DataFrame, run_id: str):
         """Land a run's kept rows as immutable files + ONE commit.
@@ -1290,7 +1331,6 @@ class TxLogKeptSink:
         the item level, like ParquetKeptSink (a failed Spark write
         raises; task retry is the executor tier)."""
         spark = df.sparkSession
-        fs = self._fs(spark)
         out = df.withColumn("run", F.lit(run_id))
         if self.write_cluster_by:
             missing = [
@@ -1310,42 +1350,27 @@ class TxLogKeptSink:
         df_fields = {
             f.name: f.dataType.simpleString() for f in out.schema.fields
         }
-        staged: list[str] = []
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            for d in staged:  # prior attempt's landing, superseded by retry
-                fs.delete(d)
-            staged = []
-            live, ever, base_version, log_schema = self._state(spark)
-            cons = self._constraints_for_commit(fs)
+        base_rel = f"data/run-{run_id}"
+
+        def derive(snap):
+            live, ever, _, log_schema = snap
             schema_ddl = self._union_schema(
                 spark, log_schema, df_fields, run_id
             )
-            base_rel = f"data/run-{run_id}"
             # per-run overwrite contract: replace this run's own torn,
             # UNCOMMITTED earlier attempt — but a dir ANY commit has
             # ever referenced is history (time travel reads it even
             # after later deletes rewrote it out of the live set), so
             # the retry of a previously-committed run lands under a
             # fresh suffix instead. The EVER set is the right guard;
-            # the live set alone would let fs.delete erase
+            # the live set alone would let the overwrite erase
             # still-readable historical files
             rel_dir = (
                 f"data/run-{run_id}-{uuid.uuid4().hex[:8]}"
                 if any(p.startswith(base_rel + "/") for p in ever)
                 else base_rel
             )
-            abs_dir = self._abs(rel_dir)
-            fs.delete(abs_dir)
-            out_obs, _check = self._constrained(out, cons)
-            out_obs.write.mode("overwrite").parquet(abs_dir)
-            staged.append(abs_dir)
-            try:
-                _check()
-            except ConstraintViolation:
-                for d in staged:
-                    fs.delete(d)
-                raise
-            add_map = self._dir_files(fs, abs_dir, rel_dir)
+            add_map = self._land(spark, out, rel_dir)
             appended = sorted(add_map)
             # a RETRIED run's surviving rows can also live in files this
             # run's write entries never added — delete-rewrite files
@@ -1354,7 +1379,6 @@ class TxLogKeptSink:
             # replay rule cannot touch; without this purge the retry's
             # full re-write would DUPLICATE those rows. Rewrite the
             # affected files without this run's rows in the SAME commit
-            removed: list[str] = []
             rw_snap = {
                 p: tag for p, tag in live.items() if tag[0] != "write"
             }
@@ -1364,67 +1388,30 @@ class TxLogKeptSink:
             # prunes to ZERO files driver-side; without this, one
             # OPTIMIZE makes rw_snap == the whole table and every
             # subsequent write pays a full-table scan for a probe that
-            # almost always finds nothing
-            rw_live: list[str] = []
-            if rw_snap:
-                fields = (
-                    _ddl_to_fields(spark, log_schema) if log_schema else {}
-                )
-                rw_live = (
-                    self._files_possibly_containing(
-                        spark, rw_snap, fields, "run", [run_id]
-                    )
-                    if "run" in fields
-                    else sorted(rw_snap)
-                )
-            if rw_live:
-                rw_paths = {self._abs(p): p for p in rw_live}
-                rw = self._read_files(spark, rw_live, log_schema).withColumn(
-                    "_f", F.input_file_name()
-                )
-                hit_abs = [
-                    r["_f"]
-                    for r in rw.where(F.col("run") == run_id)
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                ]
-                if hit_abs:
-                    rel_of = _uri_rel_mapper(rw_paths)
-                    removed = sorted({rel_of(u) for u in hit_abs})
-                    purge_rel = f"data/purge-{run_id}-{uuid.uuid4().hex[:8]}"
-                    purge_abs = self._abs(purge_rel)
-                    self._read_files(spark, removed, log_schema).where(
-                        F.col("run") != run_id
-                    ).write.mode("overwrite").parquet(purge_abs)
-                    staged.append(purge_abs)
-                    add_map.update(self._dir_files(fs, purge_abs, purge_rel))
-            v = self._commit(
+            # almost always finds nothing (no stats on `run`: every file)
+            fields = _ddl_to_fields(spark, log_schema) if log_schema else {}
+            removed, purged, staged = self._rewrite_touched(
                 spark,
-                {
-                    "op": "write",
-                    **({"constraints": cons} if cons else {}),
-                    "run_id": run_id,
-                    "add": sorted(add_map),
-                    "add_bytes": add_map,
-                    # the APPEND subset of add (run-dir files, not purge
-                    # rewrites) — read_changes derives inserts from it
-                    "appended": appended,
-                    "remove": removed,
-                    "schema": schema_ddl,
-                    "settings": self._settings_for_commit(fs),
-                    "stats": self._collect_stats(
-                        spark, sorted(add_map), schema_ddl
-                    ),
-                },
-                # the purge was derived from a snapshot: commit only
-                # against that exact version, else re-derive (same OCC
-                # rule as delete). A purge-free write appends blindly.
-                base_version=base_version if removed else None,
+                self._files_possibly_containing(
+                    spark, rw_snap, fields, "run", [run_id]
+                ),
+                log_schema,
+                f"data/purge-{run_id}",
+                victims=lambda d: d.where(F.col("run") == run_id),
+                survivors=lambda d: d.where(F.col("run") != run_id),
             )
-            if v is not None:
-                return None
-        raise OSError(f"txlog write lost {MAX_COMMIT_ATTEMPTS} snapshot races")
+            add_map.update(purged)
+            entry = self._entry(
+                spark, "write", run_id, add_map, removed, schema_ddl,
+                # the APPEND subset of add (run-dir files, not purge
+                # rewrites) — read_changes derives inserts from it
+                appended=appended,
+            )
+            return entry, [self._abs(rel_dir), *staged]
+
+        # a purge was derived from the snapshot and commits against
+        # exactly that version; a purge-free write appends blindly
+        self._mutate(spark, "write", derive, lambda snap, e: not e["remove"])
 
     @staticmethod
     def _file_all_match(
@@ -1469,8 +1456,9 @@ class TxLogKeptSink:
         whose stats PROVE every row matches are dropped METADATA-ONLY
         (no read, no rewrite — at 10^12 rows this is how a whole
         lang/day partition disappears without touching a byte of data);
-        files the stats cannot decide are rewritten without the
-        matching rows; files the stats rule out are never opened.
+        files the stats cannot decide go through the touched-file
+        rewrite (only those holding a matching row are rewritten,
+        without those rows); files the stats rule out are never opened.
         Rows where the predicate is NULL survive (SQL DELETE
         semantics). Unlike ``delete`` (the pipeline's re-delivery verb,
         prior-runs-only), this removes matching rows from EVERY run.
@@ -1480,167 +1468,95 @@ class TxLogKeptSink:
         Same OCC discipline as delete/merge: derived from a snapshot,
         committed against exactly that version, re-derived on a race.
         """
-        fs = self._fs(spark)
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            snap, _, base_version, last_schema = self._state(spark)
-            if not base_version or not snap:
-                return {"dropped_files": 0, "rewritten_files": 0, "version": None}
-            fields = _ddl_to_fields(spark, last_schema) if last_schema else {}
-            predicates = self._check_predicates(predicates, fields)
-            cand = self._surviving(spark, snap, predicates, fields)
+        counts = {"dropped_files": 0, "rewritten_files": 0}
+
+        def derive(snap):
+            live, _, base_version, schema = snap
+            if not base_version or not live:
+                return None
+            fields = _ddl_to_fields(spark, schema) if schema else {}
+            preds = self._check_predicates(predicates, fields)
+            cand = self._surviving(spark, live, preds, fields)
             whole = [
                 p
                 for p in cand
-                if self._file_all_match(snap[p][3], predicates, fields)
+                if self._file_all_match(live[p][3], preds, fields)
             ]
-            maybe = [p for p in cand if p not in set(whole)]
-            pred_expr = self._predicate_expr(predicates)
-            add_map: dict[str, int] = {}
-            rewritten: list[str] = []
-            rw_abs = None
-            if maybe:
-                # touched-file refinement (the probe delete()/merge()
-                # already use): stats only BOUND the candidates — a
-                # straddling [min,max] says "maybe", never "contains".
-                # One column-pruned pass finds the files holding actual
-                # victims, so a point delete rewrites 1 file instead of
-                # every straddler (and a no-match predicate rewrites 0)
-                probe = self._read_files(
-                    spark, maybe, last_schema
-                ).withColumn("_f", F.input_file_name())
-                hit_abs = [
-                    r["_f"]
-                    for r in probe.where(pred_expr)
-                    .select("_f")
-                    .distinct()
-                    .collect()
-                ]
-                rel_of = _uri_rel_mapper({self._abs(p): p for p in maybe})
-                rewritten = sorted({rel_of(u) for u in hit_abs})
-            if rewritten:
-                rw_rel = f"data/rw-{run_id}-{uuid.uuid4().hex[:8]}"
-                rw_abs = self._abs(rw_rel)
-                # survivors: predicate FALSE or NULL (null never deletes)
-                self._read_files(spark, rewritten, last_schema).where(
-                    ~F.coalesce(pred_expr, F.lit(False))
-                ).write.mode("overwrite").parquet(rw_abs)
-                add_map = self._dir_files(fs, rw_abs, rw_rel)
-            removed = sorted(whole) + sorted(rewritten)
-            if not removed:
-                return {"dropped_files": 0, "rewritten_files": 0, "version": None}
-            v = self._commit(
+            pred_expr = self._predicate_expr(preds)
+            rewritten, add_map, staged = self._rewrite_touched(
                 spark,
-                {
-                    "op": "delete",
-                    "settings": self._settings_for_commit(fs),
-                    "run_id": run_id,
-                    "remove": removed,
-                    "add": sorted(add_map),
-                    "add_bytes": add_map,
-                    "schema": last_schema,
-                    # informational: lets history explain WHY files left
-                    "predicate": [
-                        [
-                            c,
-                            o,
-                            pv
-                            if isinstance(pv, (int, float, str, bool))
-                            else str(pv),
-                        ]
-                        for c, o, pv in predicates
-                    ],
-                    "stats": self._collect_stats(
-                        spark, sorted(add_map), last_schema
-                    ),
-                },
-                base_version=base_version,
+                [p for p in cand if p not in set(whole)],
+                schema,
+                f"data/rw-{run_id}",
+                victims=lambda d: d.where(pred_expr),
+                # survivors: predicate FALSE or NULL (null never deletes)
+                survivors=lambda d: d.where(
+                    ~F.coalesce(pred_expr, F.lit(False))
+                ),
             )
-            if v is not None:
-                return {
-                    "dropped_files": len(whole),
-                    "rewritten_files": len(rewritten),
-                    "version": v,
-                }
-            if rw_abs:
-                fs.delete(rw_abs)  # stale snapshot: discard and re-derive
-        raise OSError(
-            f"txlog delete_where lost {MAX_COMMIT_ATTEMPTS} snapshot races"
-        )
+            if not whole and not rewritten:
+                return None
+            counts.update(
+                dropped_files=len(whole), rewritten_files=len(rewritten)
+            )
+            entry = self._entry(
+                spark, "delete", run_id, add_map,
+                sorted(whole) + rewritten, schema,
+                # informational: lets history explain WHY files left
+                # (``_commit`` records non-JSON literals by their str())
+                predicate=preds,
+            )
+            return entry, staged
+
+        done = self._mutate(spark, "delete_where", derive)
+        if done is None:
+            return {"dropped_files": 0, "rewritten_files": 0, "version": None}
+        return {**counts, "version": done["version"]}
 
     def delete(self, spark: SparkSession, run_id: str, keys: DataFrame) -> None:
-        """MERGE-shaped delete of ``keys`` from prior runs' rows: find
-        the files that actually contain victims (one semi-join over the
-        live set), rewrite ONLY those without the victim rows, and swap
-        old-for-new in one commit. Optimistic concurrency: if another
-        commit lands between the snapshot and ours, the file set is
-        re-derived and the rewrite re-runs against the new snapshot."""
-        fs = self._fs(spark)
+        """MERGE-shaped delete of ``keys`` from prior runs' rows — the
+        same prior-runs-only semantics as ``ParquetKeptSink.delete``: a
+        row stamped by ``run_id`` itself is never a victim. The
+        touched-file rewrite finds the files that actually contain
+        victims (one semi-join over the live set), rewrites ONLY those
+        without the victim rows, and swaps old-for-new in one commit.
+        Optimistic concurrency: if another commit lands between the
+        snapshot and ours, the file set is re-derived and the rewrite
+        re-runs against the new snapshot."""
         keys = keys.select("image_id").distinct()
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            snap, _, base_version, last_schema = self._state(spark)
-            if not base_version or not snap:
-                return
+        marked = keys.withColumn("_victim", F.lit(True))
+
+        def derive(snap):
+            live, _, base_version, schema = snap
+            if not base_version or not live:
+                return None
             # dynamic file pruning: a small victim set probes the log's
             # stats + blooms and scans only candidate files
-            cand = self._dfp_candidates(
-                spark, snap, last_schema, keys, "image_id"
-            )
-            scan_files = sorted(snap) if cand is None else cand
-            if not scan_files:
-                return  # no live file can hold a victim
-            paths = {self._abs(p): p for p in scan_files}
-            live = self._read_files(spark, scan_files, last_schema).withColumn(
-                "_f", F.input_file_name()
-            )
-            affected_abs = [
-                r["_f"]
-                for r in live.join(keys, "image_id", "left_semi")
-                .where(F.col("run") != run_id)
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
-            if not affected_abs:
-                return
-            rel_of = _uri_rel_mapper(paths)
-            removed = sorted({rel_of(u) for u in affected_abs})
-            rw_rel = f"data/rw-{run_id}-{uuid.uuid4().hex[:8]}"
-            rw_abs = self._abs(rw_rel)
-            # ONE read of the affected files: a row survives the
-            # rewrite unless it matches a victim key AND was stamped by
-            # another run (prior-runs-only semantics, mirroring
-            # delete_keys_from_prior_runs) — the broadcast-left-join
-            # marker replaces the earlier anti-join + semi-join pair
-            # that scanned every affected file twice
-            marked = keys.withColumn("_victim", F.lit(True))
-            kept_rows = (
-                self._read_files(spark, removed, last_schema)
-                .join(marked, "image_id", "left")
-                .where(F.col("_victim").isNull() | (F.col("run") == run_id))
-                .drop("_victim")
-            )
-            kept_rows.write.mode("overwrite").parquet(rw_abs)
-            add_map = self._dir_files(fs, rw_abs, rw_rel)
-            v = self._commit(
+            removed, add_map, staged = self._rewrite_touched(
                 spark,
-                {
-                    "op": "delete",
-                    "settings": self._settings_for_commit(fs),
-                    "run_id": run_id,
-                    "remove": removed,
-                    "add": sorted(add_map),
-                    "add_bytes": add_map,
-                    "schema": last_schema,
-                    "stats": self._collect_stats(
-                        spark, sorted(add_map), last_schema
-                    ),
-                },
-                base_version=base_version,
+                self._dfp_candidates(spark, live, schema, keys, "image_id"),
+                schema,
+                f"data/rw-{run_id}",
+                victims=lambda d: d.join(keys, "image_id", "left_semi").where(
+                    F.col("run") != run_id
+                ),
+                # ONE read of the affected files: a row survives unless
+                # it matches a victim key AND was stamped by another
+                # run — the broadcast-left-join marker replaces an
+                # anti-join + semi-join pair that scanned every
+                # affected file twice
+                survivors=lambda d: d.join(marked, "image_id", "left")
+                .where(F.col("_victim").isNull() | (F.col("run") == run_id))
+                .drop("_victim"),
             )
-            if v is not None:
-                return
-            fs.delete(rw_abs)  # stale snapshot: discard and re-derive
-        raise OSError(f"txlog delete lost {MAX_COMMIT_ATTEMPTS} snapshot races")
+            if not removed:
+                return None
+            return (
+                self._entry(spark, "delete", run_id, add_map, removed, schema),
+                staged,
+            )
+
+        self._mutate(spark, "delete", derive)
 
     def merge(
         self,
@@ -1662,11 +1578,10 @@ class TxLogKeptSink:
         a silent data bug, not a semantics.
 
         OCC like delete: derived from a snapshot, committed against
-        exactly that version, re-derived on a race. Cites gobulk's
-        upsert path (output/gorm.go:78-112, ON CONFLICT DO UPDATE) —
-        here expressed as the file-rewrite form a log-structured table
-        needs."""
-        fs = self._fs(spark)
+        exactly that version, re-derived on a race (a merge into an
+        empty table appends blindly). Cites gobulk's upsert path
+        (output/gorm.go:78-112, ON CONFLICT DO UPDATE) — here expressed
+        as the file-rewrite form a log-structured table needs."""
         dup = (
             updates.groupBy(key).count().where(F.col("count") > 1).limit(1)
         ).collect()
@@ -1680,93 +1595,42 @@ class TxLogKeptSink:
             f.name: f.dataType.simpleString() for f in out.schema.fields
         }
         keys = updates.select(key).distinct()
-        staged: list[str] = []
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            for d in staged:  # prior attempt's landing, superseded
-                fs.delete(d)
-            staged = []
-            snap, _, base_version, log_schema = self._state(spark)
-            cons = self._constraints_for_commit(fs)
+
+        def derive(snap):
+            live, _, _, log_schema = snap
             schema_ddl = self._union_schema(
                 spark, log_schema, df_fields, run_id
             )
             # land the update rows (always a fresh dir: merge files are
             # never the supersede target a write's run-dir is)
             new_rel = f"data/mrg-{run_id}-{uuid.uuid4().hex[:8]}"
-            new_abs = self._abs(new_rel)
-            out_obs, _check = self._constrained(out, cons)
-            out_obs.write.mode("overwrite").parquet(new_abs)
-            staged.append(new_abs)
-            try:
-                _check()
-            except ConstraintViolation:
-                for d in staged:
-                    fs.delete(d)
-                raise
-            add_map = self._dir_files(fs, new_abs, new_rel)
+            add_map = self._land(spark, out, new_rel)
             appended = sorted(add_map)
-            removed: list[str] = []
-            if snap:
-                # matched files: ONE semi-join over the candidate set
-                # finds exactly the files holding a matched key — only
-                # those are rewritten. Dynamic file pruning bounds the
-                # candidates first: a small update set probes the log's
-                # stats + blooms instead of scanning the live set
-                cand = self._dfp_candidates(
-                    spark, snap, log_schema, keys, key
-                )
-                kept_files = sorted(snap) if cand is None else cand
-                hit_abs: list[str] = []
-                paths = {self._abs(p): p for p in kept_files}
-                if kept_files:
-                    live_rows = self._read_files(
-                        spark, kept_files, log_schema
-                    ).withColumn("_f", F.input_file_name())
-                    hit_abs = [
-                        r["_f"]
-                        for r in live_rows.join(keys, key, "left_semi")
-                        .select("_f")
-                        .distinct()
-                        .collect()
-                    ]
-                rel_of = _uri_rel_mapper(paths)
-                removed = sorted({rel_of(u) for u in hit_abs})
-                if removed:
-                    # bystander rewrite: affected files minus matched
-                    # rows, via one broadcast-ish anti-join on the key
-                    rw_rel = f"data/mrgrw-{run_id}-{uuid.uuid4().hex[:8]}"
-                    rw_abs = self._abs(rw_rel)
-                    self._read_files(spark, removed, log_schema).join(
-                        keys, key, "left_anti"
-                    ).write.mode("overwrite").parquet(rw_abs)
-                    staged.append(rw_abs)
-                    add_map.update(self._dir_files(fs, rw_abs, rw_rel))
-            v = self._commit(
+            # matched files: dynamic file pruning bounds the candidates
+            # (a small update set probes the log's stats + blooms), then
+            # the touched-file probe finds exactly the files holding a
+            # matched key; the bystander rewrite drops the matched rows
+            removed, rewrites, staged = self._rewrite_touched(
                 spark,
-                {
-                    "op": "merge",
-                    **({"constraints": cons} if cons else {}),
-                    "run_id": run_id,
-                    "add": sorted(add_map),
-                    "add_bytes": add_map,
-                    # feed contract: inserts = the update rows' files;
-                    # deletes = removed rows minus BYSTANDER rewrites
-                    # (never minus the updates — an update identical to
-                    # its old row must still feed as delete+insert or
-                    # the multiset reconstruction drifts)
-                    "appended": appended,
-                    "remove": removed,
-                    "schema": schema_ddl,
-                    "settings": self._settings_for_commit(fs),
-                    "stats": self._collect_stats(
-                        spark, sorted(add_map), schema_ddl
-                    ),
-                },
-                base_version=base_version if base_version else None,
+                self._dfp_candidates(spark, live, log_schema, keys, key),
+                log_schema,
+                f"data/mrgrw-{run_id}",
+                victims=lambda d: d.join(keys, key, "left_semi"),
+                survivors=lambda d: d.join(keys, key, "left_anti"),
             )
-            if v is not None:
-                return
-        raise OSError(f"txlog merge lost {MAX_COMMIT_ATTEMPTS} snapshot races")
+            add_map.update(rewrites)
+            entry = self._entry(
+                spark, "merge", run_id, add_map, removed, schema_ddl,
+                # feed contract: inserts = the update rows' files;
+                # deletes = removed rows minus BYSTANDER rewrites
+                # (never minus the updates — an update identical to
+                # its old row must still feed as delete+insert or
+                # the multiset reconstruction drifts)
+                appended=appended,
+            )
+            return entry, [self._abs(new_rel), *staged]
+
+        self._mutate(spark, "merge", derive, lambda snap, e: not snap[2])
 
     def read(
         self,
@@ -1841,13 +1705,14 @@ class TxLogKeptSink:
         OCC like every mutation: derived from a snapshot, committed
         against exactly that version, re-derived on a race."""
         fs = self._fs(spark)
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            now, _, base_version, last_schema = self._state(spark)
+
+        def derive(snap):
+            now, _, base_version, schema = snap
             if to_version > base_version:
                 raise ValueError(
                     f"restore to v{to_version}: table is at v{base_version}"
                 )
-            then, _, _, _ = self._state(spark, to_version)
+            then = self._state(spark, to_version)[0]
             add = {p: t for p, t in then.items() if p not in now}
             remove = sorted(p for p in now if p not in then)
             if not add and not remove:
@@ -1871,30 +1736,24 @@ class TxLogKeptSink:
                     + ", ".join(missing[:5])
                     + ("..." if len(missing) > 5 else "")
                 )
-            v = self._commit(
-                spark,
-                {
-                    "op": "restore",
-                    "settings": self._settings_for_commit(fs),
-                    "run_id": run_id,
-                    "restore_of": to_version,
-                    "add": sorted(add),
-                    "add_bytes": {
-                        p: t[2] for p, t in add.items() if t[2] is not None
-                    },
-                    "stats": {
-                        p: t[3] for p, t in add.items() if t[3] is not None
-                    },
-                    "remove": remove,
-                    "schema": last_schema,
+            entry = {
+                "op": "restore",
+                "run_id": run_id,
+                "restore_of": to_version,
+                "add": sorted(add),
+                "add_bytes": {
+                    p: t[2] for p, t in add.items() if t[2] is not None
                 },
-                base_version=base_version,
-            )
-            if v is not None:
-                return v
-        raise OSError(
-            f"txlog restore lost {MAX_COMMIT_ATTEMPTS} snapshot races"
-        )
+                "stats": {
+                    p: t[3] for p, t in add.items() if t[3] is not None
+                },
+                "remove": remove,
+                "schema": schema,
+            }
+            return entry, []  # metadata-only: nothing staged
+
+        done = self._mutate(spark, "restore", derive)
+        return done["version"] if done else None
 
     def vacuum(self, spark: SparkSession, retain_last: int = 0) -> int:
         """Delete data files not live at any of the last
@@ -2040,10 +1899,11 @@ class TxLogKeptSink:
             raise ValueError("cluster_by and zorder_by are exclusive")
         if small_file_bytes is None:
             small_file_bytes = target_file_bytes // 2
-        for _ in range(MAX_COMMIT_ATTEMPTS):
-            live, _, base_version, schema = self._state(spark)
+
+        def derive(snap):
+            live, _, base_version, schema = snap
             if not base_version or not live:
-                return 0
+                return None
             # sizes come from the LOG (add_bytes rides every commit,
             # Delta's add.size) — the FS is consulted only for files
             # added by pre-size log entries
@@ -2062,12 +1922,10 @@ class TxLogKeptSink:
             total = sum(sizes[p] for p in small)
             n_out = max(1, math.ceil(total / target_file_bytes))
             if not cluster_by and not zorder_by and len(small) <= n_out:
-                return 0  # packing would not reduce the file count
-            rel = f"data/opt-{uuid.uuid4().hex[:8]}"
-            abs_dir = self._abs(rel)
+                return None  # packing would not reduce the file count
             df = self._read_files(spark, small, schema)
+            fields = _ddl_to_fields(spark, schema) if schema else {}
             if cluster_by:
-                fields = _ddl_to_fields(spark, schema) if schema else {}
                 missing = [c for c in cluster_by if c not in fields]
                 if missing:
                     raise ValueError(
@@ -2081,7 +1939,6 @@ class TxLogKeptSink:
                     n_out, *cluster_by
                 ).sortWithinPartitions(*cluster_by)
             elif zorder_by:
-                fields = _ddl_to_fields(spark, schema) if schema else {}
                 bad = [
                     c
                     for c in zorder_by
@@ -2104,30 +1961,16 @@ class TxLogKeptSink:
                 )
             else:
                 df = df.coalesce(n_out)
-            df.write.mode("overwrite").parquet(abs_dir)
-            add_map = self._dir_files(fs, abs_dir, rel)
-            v = self._commit(
-                spark,
-                {
-                    "op": "optimize",
-                    "run_id": "optimize",
-                    "remove": small,
-                    "add": sorted(add_map),
-                    "add_bytes": add_map,
-                    "schema": schema,
-                    "settings": self._settings_for_commit(fs),
-                    "stats": self._collect_stats(
-                        spark, sorted(add_map), schema
-                    ),
-                },
-                base_version=base_version,
+            rel = f"data/opt-{uuid.uuid4().hex[:8]}"
+            df.write.mode("overwrite").parquet(self._abs(rel))
+            add_map = self._dir_files(fs, self._abs(rel), rel)
+            entry = self._entry(
+                spark, "optimize", "optimize", add_map, small, schema
             )
-            if v is not None:
-                return len(small)
-            fs.delete(abs_dir)  # stale snapshot: discard and re-derive
-        raise OSError(
-            f"txlog optimize lost {MAX_COMMIT_ATTEMPTS} snapshot races"
-        )
+            return entry, [self._abs(rel)]
+
+        done = self._mutate(spark, "optimize", derive)
+        return len(done["remove"]) if done else 0
 
     def maintain(self, spark: SparkSession) -> dict:
         """Post-epoch maintenance hook: compact once the live-file

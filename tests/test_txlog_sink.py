@@ -1319,6 +1319,89 @@ def test_merge_retries_on_stale_snapshot(spark):
     assert got == {("a", 10), ("z", 9)}
 
 
+def _unreferenced_parquet(sink, spark) -> set[str]:
+    """.parquet files under data/ that no log entry ever added."""
+    ever = sink._state(spark)[1]
+    on_disk = {
+        os.path.relpath(os.path.join(d, n), sink.root)
+        for d, _, names in os.walk(sink.data_dir)
+        for n in names
+        if n.endswith(".parquet")
+    }
+    return on_disk - ever
+
+
+@pytest.mark.parametrize(
+    "verb", ["write_purge", "delete_where", "optimize", "restore"]
+)
+def test_verb_lost_race_rederives_and_discards_staged_files(
+    spark, monkeypatch, verb
+):
+    """Every versioned verb shares one commit step: a rival write that
+    lands before the verb's first commit attempt makes that attempt
+    stale, the verb re-derives against the new snapshot (the rival's
+    row is subject to it), and the losing attempt's staged files are
+    deleted — no data file is left that the log never referenced."""
+    shutil.rmtree(BASE, ignore_errors=True)
+    sink = TxLogKeptSink(os.path.join(BASE, f"race-{verb}"))
+    ddl = "image_id string, lang string, v int"
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), ddl).coalesce(1)
+
+    sink.write(rows(("a", "x", 1), ("b", "x", 2)), "r1")  # v1
+    sink.write(rows(("c", "x", 3)), "r2")  # v2
+    if verb == "write_purge":
+        # r1's rows move into the compaction output, so the retry of r1
+        # below must purge them from it: a versioned write
+        assert sink.optimize(spark, target_file_bytes=1 << 30) == 2
+    real_commit = TxLogKeptSink._commit
+    attempts: list[int | None] = []
+    run_id = {
+        "write_purge": "r1",
+        "delete_where": "dw",
+        "optimize": "optimize",
+        "restore": "roll",
+    }[verb]
+
+    def racing_commit(self, spark_, entry, base_version=None):
+        if entry["run_id"] == run_id:
+            attempts.append(base_version)
+            if len(attempts) == 1:
+                TxLogKeptSink(self.out_dir).write(rows(("z", "x", 0)), "rival")
+        return real_commit(self, spark_, entry, base_version)
+
+    monkeypatch.setattr(TxLogKeptSink, "_commit", racing_commit)
+    if verb == "write_purge":
+        sink.write(rows(("a", "x", 10), ("b", "x", 20)), "r1")
+    elif verb == "delete_where":
+        res = sink.delete_where(spark, "dw", [("v", "<=", 1)])
+    elif verb == "optimize":
+        n = sink.optimize(spark, target_file_bytes=1 << 30)
+    else:
+        rv = sink.restore(spark, "roll", 1)
+    monkeypatch.undo()
+    # first attempt was versioned and lost; the re-derived one landed
+    assert len(attempts) == 2 and attempts[1] == attempts[0] + 1, attempts
+    last = sink.history(spark)[-1]
+    got = {(r["image_id"], r["v"]) for r in sink.read(spark).collect()}
+    if verb == "write_purge":
+        assert last["op"] == "write" and last["remove"]
+        assert got == {("a", 10), ("b", 20), ("c", 3), ("z", 0)}
+    elif verb == "delete_where":
+        # the rival's row matches the predicate: the retry deletes it too
+        assert res["version"] == last["version"]
+        assert got == {("b", 2), ("c", 3)}
+    elif verb == "optimize":
+        assert n == 3 and len(sink._state(spark)[0]) == 1
+        assert got == {("a", 1), ("b", 2), ("c", 3), ("z", 0)}
+    else:
+        assert rv == last["version"]
+        assert set(sink._state(spark)[0]) == set(sink._state(spark, 1)[0])
+        assert got == {("a", 1), ("b", 2)}
+    assert not _unreferenced_parquet(sink, spark)
+
+
 # -- vacuum retention window / clustered ingest ----------------------------
 
 
@@ -2062,6 +2145,41 @@ def test_check_constraints_bind_the_table_not_the_writer(spark):
     alter = TxLogKeptSink(path, constraints={"v_small": "v < 100"})
     alter.write(spark.createDataFrame([("c", "x", -3)], ddl), "r3")
     assert sink_last_constraints(plain, spark) == {"v_small": "v < 100"}
+
+
+def test_table_metadata_rides_every_verb_commit(spark):
+    """Settings and CHECK constraints are stamped on every commit in
+    one place: merge, delete, delete_where, optimize and restore run
+    through a default-constructed sink all carry the declared store's
+    metadata forward, so the declaring writer still validates."""
+    shutil.rmtree(BASE, ignore_errors=True)
+    path = os.path.join(BASE, "metaverbs")
+    ddl = "image_id string, lang string, v int"
+    settings = {"replicas": 2}
+    cons = {"v_positive": "v > 0"}
+    declared = TxLogKeptSink(path, settings=settings, constraints=cons)
+    declared.write(
+        spark.createDataFrame(
+            [("a", "x", 1), ("b", "x", 2), ("d", "x", 4)], ddl
+        ).coalesce(1),
+        "r1",
+    )
+    declared.write(spark.createDataFrame([("c", "x", 3)], ddl), "r2")
+    plain = TxLogKeptSink(path)
+    n0 = len(plain.history(spark))
+    plain.merge(spark, "m1", spark.createDataFrame([("a", "x", 10)], ddl))
+    plain.delete(spark, "d1", spark.createDataFrame([("b",)], "image_id string"))
+    assert plain.delete_where(spark, "dw", [("v", "=", 3)])["version"]
+    assert plain.optimize(spark, target_file_bytes=1 << 30) > 0
+    assert plain.restore(spark, "roll", 2) is not None
+    new = plain.history(spark)[n0:]
+    assert [e["op"] for e in new] == [
+        "merge", "delete", "delete", "optimize", "restore"
+    ]
+    for e in new:
+        assert e["settings"] == settings, e["op"]
+        assert e["constraints"] == cons, e["op"]
+    declared.validate(spark, ddl)
 
 
 def sink_last_constraints(sink, spark):
