@@ -2,8 +2,9 @@
 
 gobulk analogue: the Format's knobs (format.go:36-44 bulk sizes,
 format.go:132-138 error policy, format.go:20-21 NewIterationOnRestart).
-Spark owns task sizing, so the bulk-size knobs map to Arrow batch size
-and shuffle partition count.
+Spark owns task sizing, so the bulk-size knobs are Spark session
+settings (Arrow batch size and shuffle partition count, set by
+session.get_spark or the job's CLI), not fields here.
 """
 
 from __future__ import annotations
@@ -34,8 +35,6 @@ class PipelineConfig:
     # broadcast the duplicate-id list when it has fewer rows than this
     # (falls back to a shuffle join above it)
     dup_broadcast_max: int = 5_000_000
-    shuffle_partitions: int | None = None  # None = leave session setting
-    arrow_batch_rows: int = 2048
     # fused throughput mode: parse is not staged to parquet, it fuses
     # into the store job (decided frame cached for the three writes).
     # Resume granularity coarsens from per-phase to per-run.

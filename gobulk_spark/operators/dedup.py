@@ -11,6 +11,11 @@ All four scale paths avoid the quadratic all-pairs comparison:
   trick);
 - SimHash: banding (operators/text.py).
 
+The building blocks every near-dup operator in ``operators/`` shares
+live here, once: ``pin`` (persist a frame several subtrees consume),
+``drop_hot_buckets`` (the hot-bucket guard) and ``counted_self_join``
+(the inverted-index self-join behind minhash, Jaccard and winnowing).
+
 MinHash here is md5-based so the DuckDB oracle can reproduce signatures
 bit-for-bit: h_i(s) = md5(i || '|' || s), minimized as hex strings
 (lexicographic order on fixed-width hex == numeric order).
@@ -19,6 +24,8 @@ bit-for-bit: h_i(s) = md5(i || '|' || s), minimized as hex strings
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import and_
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -26,9 +33,20 @@ from pyspark.sql import functions as F
 
 from .text import fingerprint, shingles
 
-#: broadcast the index side of banded self-joins (minhash LSH) when the
-#: signature table holds at most this many rows — same rationale and
-#: scale fallback as text.SIMHASH_BROADCAST_INDEX_ROWS
+#: broadcast the index side of counted_self_join when the pinned index
+#: held at most this many rows before the hot-bucket guard — same
+#: rationale and scale fallback as text.SIMHASH_BROADCAST_INDEX_ROWS.
+#: Its three users and their index rows:
+#: - minhash_lsh_candidates: (id, band int, minhash 32-char md5 hex),
+#:   n_docs x num_hashes rows;
+#: - ngram_jaccard_pairs: (id, xxhash64 shingle long), one row per
+#:   distinct shingle per doc;
+#: - winnow_overlap_pairs: (id, fingerprint long), one row per distinct
+#:   fingerprint per doc.
+#: With a long id the broadcast hash relation Spark 4.1 builds
+#: measured 704 MiB for 4M minhash rows (~185 B/row) and 256 MiB for
+#: 4M shingle or fingerprint rows (~67 B/row), held on the driver and
+#: on every executor.
 LSH_BROADCAST_INDEX_ROWS = int(
     os.environ.get("GOBULK_LSH_BCAST_ROWS", str(4_000_000))
 )
@@ -74,6 +92,50 @@ def release_pins() -> int:
     return n
 
 
+def drop_hot_buckets(
+    df: DataFrame, keys: list[str], max_bucket_size: int | None
+) -> DataFrame:
+    """The hot-bucket guard: drop every row whose ``keys`` bucket holds
+    more than ``max_bucket_size`` rows (None keeps everything).
+
+    Over-full buckets are non-discriminative and quadratic in a
+    self-join (the standard LSH hot-bucket / stop-shingle guard; the
+    skew story of SURVEY §4 applied to joins). The hot-key set holds at
+    most n / max_bucket_size keys, so it is broadcast into the anti-join."""
+    if max_bucket_size is None:
+        return df
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("bs"))
+        .where(F.col("bs") > max_bucket_size)
+        .select(*keys)
+    )
+    return df.join(F.broadcast(hot), keys, "left_anti")
+
+
+def counted_self_join(
+    index: DataFrame, keys: list[str], id_col: str, n_rows: int, count_col: str
+) -> DataFrame:
+    """(id_a, id_b, ``count_col``): for every pair id_a < id_b, how many
+    ``keys`` entries of the inverted index the two ids share.
+
+    ``n_rows`` is the index's row count before the hot-bucket guard. At
+    most LSH_BROADCAST_INDEX_ROWS rows broadcast the index side: the
+    planner cannot size a relation produced by explode-over-aggregate,
+    and a sort-merge join sorts both copies of the whole index (measured
+    2.3 s -> 1.3 s for minhash, 3.7 s -> 2.7 s for Jaccard at sf1.0).
+    Above the cap the planner's shuffled join stands (the 10^12 path)."""
+    l, r = index.alias("l"), index.alias("r")
+    if n_rows <= LSH_BROADCAST_INDEX_ROWS:
+        r = F.broadcast(r)
+    same_keys = reduce(and_, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys])
+    return (
+        l.join(r, same_keys & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .agg(F.count("*").alias(count_col))
+    )
+
+
 def exact_dups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Groups of identical (normalized) texts with >1 member."""
     fp = df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
@@ -90,29 +152,6 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     fp = df.withColumn("fp", fingerprint(F.col(text_col)))
     survivors = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
     return df.join(survivors, id_col, "left_semi")
-
-
-def phash_near_dup_candidates(
-    df: DataFrame,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-    max_hamming: int = 8,
-    max_bucket_size: int | str | None = 256,
-) -> DataFrame:
-    """Near-duplicate IMAGE candidates by perceptual-hash banding.
-
-    Alias of :func:`operators.images.phash_near_dup_images` (kept for
-    the round-1 call signature): the round-1 fixed 4x16-bit banding
-    guaranteed recall only to hamming 3 while defaulting the radius to
-    8 — the radius-sized multi-probe banding underneath the images
-    operator guarantees recall 1.0 at ANY radius by generalized
-    pigeonhole (before the hot-bucket guard), so the one
-    implementation now serves both entry points."""
-    from .images import phash_near_dup_images
-
-    return phash_near_dup_images(
-        df, id_col, phash_col, max_hamming, max_bucket_size
-    )
 
 
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -156,41 +195,15 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Candidate near-dup pairs: docs agreeing on >=1 minhash band.
 
-    max_bucket_size drops (band, minhash) buckets with more members —
-    over-full buckets are non-discriminative and quadratic (the standard
-    LSH hot-bucket guard; the skew story of SURVEY §4 applied to joins).
+    max_bucket_size drops (band, minhash) buckets with more members
+    (drop_hot_buckets).
     """
     sig = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
-    # one cheap count on the pinned signatures decides the join side:
-    # the planner cannot size a relation produced by explode-over-
-    # aggregate, and a sort-merge join here sorts both copies of the
-    # whole signature table. n * num_hashes rows of (id, band, 32-char
-    # minhash) broadcast fine into the tens of millions of rows
-    # (measured 2.3 s -> 1.3 s at sf1.0); above the cap the planner's
-    # shuffled join stands (the 10^12 path).
+    # one cheap count on the pinned signatures decides the join side
     n_sig = sig.count()
-    if max_bucket_size is not None:
-        hot = (
-            sig.groupBy("band", "minhash")
-            .agg(F.count("*").alias("bs"))
-            .where(F.col("bs") > max_bucket_size)
-            .select("band", "minhash")
-        )
-        sig = sig.join(F.broadcast(hot), ["band", "minhash"], "left_anti")
-    l, r = sig.alias("l"), sig.alias("r")
-    if n_sig <= LSH_BROADCAST_INDEX_ROWS:
-        r = F.broadcast(r)
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.minhash") == F.col("r.minhash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("bands_agreeing"))
+    sig = drop_hot_buckets(sig, ["band", "minhash"], max_bucket_size)
+    return counted_self_join(
+        sig, ["band", "minhash"], id_col, n_sig, "bands_agreeing"
     )
 
 
@@ -224,30 +237,11 @@ def ngram_jaccard_pairs(
             id_col, F.xxhash64("shingle").alias("shingle")
         )
     )
-    # same sized-broadcast decision as minhash_lsh_candidates: the
-    # pinned (id, shingle-hash) table is narrow, and broadcasting the
-    # index side of the self-join keeps the probe side map-local
-    # (measured 3.7 s -> 2.7 s at sf1.0); above the cap the planner's
-    # shuffled join stands
+    # same sized-broadcast decision as minhash_lsh_candidates
     n_sh = sh.count()
-    if max_shingle_df is not None:
-        hot = sh.groupBy("shingle").agg(F.count("*").alias("df")).where(
-            F.col("df") > max_shingle_df
-        )
-        sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
+    sh = drop_hot_buckets(sh, ["shingle"], max_shingle_df)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    l, r = sh.alias("l"), sh.alias("r")
-    if n_sh <= LSH_BROADCAST_INDEX_ROWS:
-        r = F.broadcast(r)
-    inter = (
-        l.join(
-            r,
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
+    inter = counted_self_join(sh, ["shingle"], id_col, n_sh, "n_common")
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("size_b"))
     return (

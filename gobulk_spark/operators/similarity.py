@@ -3,12 +3,16 @@
 - brute_force_topk: exact cosine top-k against one query vector. The
   dot product folds left-to-right in DOUBLE via F.aggregate — the same
   sequential order DuckDB's list_cosine_similarity uses, so the oracle
-  matches to the last bit (rounded defensively anyway).
-- lsh_bucket_ann / lsh_candidate_pairs: random-hyperplane LSH. The
-  hyperplanes are derived from a seeded numpy RNG broadcast into a
-  pandas UDF — the scale path: shuffle on bucket id only, candidates
-  compared within buckets.
-- embedding_near_dups: cosine near-duplicate pairs via LSH buckets.
+  matches to the last bit (rounded defensively anyway). Every ANN
+  operator ends in it: lsh_bucket_ann / lsh_ann_pruned (random-
+  hyperplane LSH bucket), ivf_ann / ivf_ann_pruned (probed IVF cells,
+  chosen by _probe_cells) and pq_ann's exact re-rank; ivfpq_ann
+  composes IVF probing with pq_ann. The hyperplanes and codebooks are
+  seeded numpy matrices shipped in pandas-UDF closures.
+- embedding_near_dup_pairs / embedding_near_dup_pairs_ivf: cosine
+  near-duplicate pairs via banded LSH keys (_band_keys), optionally
+  scoped inside IVF cells, the dedup.drop_hot_buckets guard, and one
+  exact pairwise verify (_cosine_pairs).
 
 Scale notes: brute force is O(n) per query (a map + top-k, no shuffle;
 fine for one query vector, wrong for n x n). The bucketed variants are
@@ -21,9 +25,27 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns, folded left-to-right in double."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _norm(v: Column) -> Column:
+    """L2 norm of an array column, folded left-to-right in double."""
+    return F.sqrt(
+        F.aggregate(
+            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+        )
+    )
 
 
 def cosine_to(query: list[float]):
@@ -31,26 +53,17 @@ def cosine_to(query: list[float]):
     q = [float(x) for x in query]
     qnorm = float(np.sqrt(np.dot(q, q)))
     qcol = F.array(*[F.lit(x) for x in q])
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), qcol, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-    return dot / (norm * F.lit(qnorm))
+    emb = F.col("embedding")
+    return _dot(emb, qcol) / (_norm(emb) * F.lit(qnorm))
 
 
 def brute_force_topk(
     emb: DataFrame, query: list[float], k: int = 10, id_col: str = "vec_id"
 ) -> DataFrame:
     """Exact top-k by cosine: map-side score + global top-k (sort-limit
-    is optimized to per-partition top-k + driver merge; no full sort)."""
+    is optimized to per-partition top-k + driver merge; no full sort).
+    The tail of every ANN operator here: each narrows ``emb`` to its
+    candidates and ranks them with this."""
     return (
         emb.select(F.col(id_col), cosine_to(query).alias("cosine"))
         .orderBy(F.desc("cosine"), F.col(id_col))
@@ -117,11 +130,8 @@ def lsh_bucket_ann(
     pruned scan if the table is written partitioned by bucket)."""
     qbucket = lsh_query_bucket(query, dim, n_planes, seed)
     bucketed = with_lsh_bucket(emb, dim, n_planes, seed, id_col)
-    return (
-        bucketed.where(F.col("bucket") == qbucket)
-        .select(F.col(id_col), cosine_to(query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return brute_force_topk(
+        bucketed.where(F.col("bucket") == qbucket), query, k, id_col
     )
 
 
@@ -231,6 +241,13 @@ def with_ivf_cell(
     return emb.withColumn("ivf_cell", _cell(F.col("embedding")))
 
 
+def _probe_cells(centroids: np.ndarray, query: list[float], n_probe: int) -> list[int]:
+    """The query's ``n_probe`` closest IVF cells, best first (driver-side,
+    against the centroids — the index metadata)."""
+    scores = centroids @ np.asarray(query, dtype=np.float64)
+    return [int(i) for i in np.argsort(-scores)[:n_probe]]
+
+
 def ivf_ann(
     emb: DataFrame,
     query: list[float],
@@ -261,14 +278,60 @@ def ivf_ann(
             if train
             else _ivf_centroids(dim, n_cells, seed)
         )
-    scores = centroids @ np.asarray(query, dtype=np.float64)
-    probes = [int(i) for i in np.argsort(-scores)[:n_probe]]
+    probes = _probe_cells(centroids, query, n_probe)
     celled = with_ivf_cell(emb, dim, n_cells, seed, id_col, centroids=centroids)
+    return brute_force_topk(
+        celled.where(F.col("ivf_cell").isin(probes)), query, k, id_col
+    )
+
+
+def _band_keys(dim: int, n_bands: int, band_planes: int, seed: int):
+    """pandas UDF: array<long> of the ``n_bands`` band keys of each
+    vector — b independent random-hyperplane tables of ``band_planes``
+    planes each, ALL computed in one matmul per Arrow batch."""
+
+    # hoisted: regenerating (n_bands*band_planes, dim) normals per Arrow
+    # batch is pure wasted CPU; the matrix ships once in the closure
+    planes = _hyperplanes(dim, n_bands * band_planes, seed)
+
+    # int64 keys: band_sizing emits band_planes > 31 past ~3e10 rows
+    # (r = ceil(log2(4n/guard))) — int32 would wrap, merge unrelated
+    # buckets past the guard and silently zero recall at exactly the
+    # scale this module is for
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def _keys(vecs: pd.Series) -> pd.Series:
+        m = np.stack(vecs.to_numpy()).astype(np.float64)
+        signs = (m @ planes.T > 0).reshape(len(m), n_bands, band_planes)
+        weights = (1 << np.arange(band_planes, dtype=np.int64))[None, None, :]
+        keys = (signs * weights).sum(axis=2).astype(np.int64)
+        return pd.Series(list(keys), index=vecs.index)
+
+    return _keys
+
+
+def _cosine_pairs(
+    banded: DataFrame, keys: list[str], id_col: str, min_cosine: float
+) -> DataFrame:
+    """(id_a, id_b, cosine) for every pair sharing a ``keys`` bucket with
+    exact cosine >= min_cosine, each pair once.
+
+    The threshold runs BEFORE the distinct: the dedup shuffle then
+    carries only true pairs, not every band co-occurrence."""
+    l = banded.select(
+        *keys, F.col(id_col).alias("id_a"), F.col("embedding").alias("emb_a")
+    )
+    r = banded.select(
+        *keys, F.col(id_col).alias("id_b"), F.col("embedding").alias("emb_b")
+    )
+    cosine = _dot(F.col("emb_a"), F.col("emb_b")) / (
+        _norm(F.col("emb_a")) * _norm(F.col("emb_b"))
+    )
     return (
-        celled.where(F.col("ivf_cell").isin(probes))
-        .select(F.col(id_col), cosine_to(query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+        l.join(r, keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine.alias("cosine"))
+        .where(F.col("cosine") >= min_cosine)
+        .distinct()
     )
 
 
@@ -287,27 +350,11 @@ def with_banded_lsh_keys(
     cosine filter. One pandas UDF computes ALL band keys per batch
     (single matmul), then posexplode — never b UDF evaluations.
     """
-
-    # hoisted: regenerating (n_bands*band_planes, dim) normals per Arrow
-    # batch is pure wasted CPU; the matrix ships once in the closure
-    planes = _hyperplanes(dim, n_bands * band_planes, seed)
-
-    # int64 keys: band_sizing emits band_planes > 31 past ~3e10 rows
-    # (r = ceil(log2(4n/guard))) — int32 would wrap, merge unrelated
-    # buckets past the guard and silently zero recall at exactly the
-    # scale this module is for
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _keys(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        signs = (m @ planes.T > 0).reshape(len(m), n_bands, band_planes)
-        weights = (1 << np.arange(band_planes, dtype=np.int64))[None, None, :]
-        keys = (signs * weights).sum(axis=2).astype(np.int64)
-        return pd.Series(list(keys), index=vecs.index)
-
+    band_keys = _band_keys(dim, n_bands, band_planes, seed)
     return emb.select(
         F.col(id_col),
         F.col("embedding"),
-        F.posexplode(_keys(F.col("embedding"))).alias("band", "band_key"),
+        F.posexplode(band_keys(F.col("embedding"))).alias("band", "band_key"),
     )
 
 
@@ -439,7 +486,6 @@ def embedding_near_dup_pairs_ivf(
         target_recall,
         max_bands,
     )
-    planes = _hyperplanes(dim, n_bands * band_planes, seed)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _cells(vecs: pd.Series) -> pd.Series:
@@ -448,23 +494,15 @@ def embedding_near_dup_pairs_ivf(
         top = np.argsort(-(m @ cents.T), axis=1)[:, :n_probe].astype(np.int32)
         return pd.Series(list(top), index=vecs.index)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _keys(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        signs = (m @ planes.T > 0).reshape(len(m), n_bands, band_planes)
-        weights = (1 << np.arange(band_planes, dtype=np.int64))[None, None, :]
-        return pd.Series(
-            list((signs * weights).sum(axis=2).astype(np.int64)), index=vecs.index
-        )
-
-    from .dedup import pin
+    band_keys = _band_keys(dim, n_bands, band_planes, seed)
+    from .dedup import drop_hot_buckets, pin
 
     banded = pin(
         emb.select(
             F.col(id_col),
             F.col("embedding"),
             F.explode(_cells(F.col("embedding"))).alias("cell"),
-            _keys(F.col("embedding")).alias("_keys"),
+            band_keys(F.col("embedding")).alias("_keys"),
         ).select(
             id_col,
             "embedding",
@@ -472,46 +510,9 @@ def embedding_near_dup_pairs_ivf(
             F.posexplode(F.col("_keys")).alias("band", "band_key"),
         )
     )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("cell", "band", "band_key")
-            .agg(F.count("*").alias("bs"))
-            .where(F.col("bs") > max_bucket_size)
-            .select("cell", "band", "band_key")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["cell", "band", "band_key"], "left_anti"
-        )
-    l = banded.select(
-        "cell", "band", "band_key",
-        F.col(id_col).alias("id_a"), F.col("embedding").alias("emb_a"),
-    )
-    r = banded.select(
-        "cell", "band", "band_key",
-        F.col(id_col).alias("id_b"), F.col("embedding").alias("emb_b"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda a, x: a.cast("double") * x),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.col(c), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        )
-
-    return (
-        l.join(r, ["cell", "band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", (dot / (_norm("emb_a") * _norm("emb_b"))).alias("cosine")
-        )
-        .where(F.col("cosine") >= min_cosine)  # map-side, pre-distinct
-        .distinct()
-    )
+    keys = ["cell", "band", "band_key"]
+    banded = drop_hot_buckets(banded, keys, max_bucket_size)
+    return _cosine_pairs(banded, keys, id_col, min_cosine)
 
 
 def embedding_near_dup_pairs(
@@ -561,53 +562,13 @@ def embedding_near_dup_pairs(
             F.lit(0).cast("long").alias("band_key"),
         )
     else:
-        from .dedup import pin
+        from .dedup import drop_hot_buckets, pin
 
         # pinned: the guard aggregation and both join sides would each
         # re-run the banding UDF over the full table otherwise
         banded = pin(with_banded_lsh_keys(emb, dim, n_bands, band_planes, seed, id_col))
-        if max_bucket_size is not None:
-            hot = (
-                banded.groupBy("band", "band_key")
-                .agg(F.count("*").alias("bs"))
-                .where(F.col("bs") > max_bucket_size)
-                .select("band", "band_key")
-            )
-            banded = banded.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
-    l = banded.select(
-        "band",
-        "band_key",
-        F.col(id_col).alias("id_a"),
-        F.col("embedding").alias("emb_a"),
-    )
-    r = banded.select(
-        "band",
-        "band_key",
-        F.col(id_col).alias("id_b"),
-        F.col("embedding").alias("emb_b"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("emb_a"), F.col("emb_b"), lambda a, x: a.cast("double") * x),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.col(c), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-            )
-        )
-
-    return (
-        l.join(r, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (dot / (_norm("emb_a") * _norm("emb_b"))).alias("cosine"))
-        # threshold BEFORE the distinct: the dedup shuffle then carries
-        # only true pairs, not every band co-occurrence
-        .where(F.col("cosine") >= min_cosine)
-        .distinct()
-    )
+        banded = drop_hot_buckets(banded, ["band", "band_key"], max_bucket_size)
+    return _cosine_pairs(banded, ["band", "band_key"], id_col, min_cosine)
 
 
 # ------------------------------------------------------------------ PQ
@@ -777,18 +738,12 @@ def pq_ann(
     scored = codes.select(
         F.col(id_col), (1.0 - _adc(F.col("codes")) / 2.0).alias("approx_cosine")
     )
+    ranked = scored.orderBy(F.desc("approx_cosine"), F.col(id_col))
     if rerank_factor <= 0:
-        return scored.orderBy(F.desc("approx_cosine"), F.col(id_col)).limit(k)
-    shortlist = (
-        scored.orderBy(F.desc("approx_cosine"), F.col(id_col))
-        .limit(k * rerank_factor)
-        .select(id_col)
-    )
-    return (
-        emb.join(F.broadcast(shortlist), id_col, "left_semi")
-        .select(F.col(id_col), cosine_to(list(q)).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+        return ranked.limit(k)
+    shortlist = ranked.limit(k * rerank_factor).select(id_col)
+    return brute_force_topk(
+        emb.join(F.broadcast(shortlist), id_col, "left_semi"), list(q), k, id_col
     )
 
 
@@ -830,8 +785,7 @@ def ivfpq_ann(
             codebook = fit_pq_codebook(
                 emb, dim, n_sub, n_codes, seed=seed, id_col=id_col, sample=sample
             )
-    scores = centroids @ np.asarray(query, dtype=np.float64)
-    probes = [int(i) for i in np.argsort(-scores)[:n_probe]]
+    probes = _probe_cells(centroids, query, n_probe)
     celled = with_ivf_cell(emb, dim, n_cells, seed, id_col, centroids=centroids)
     probed = celled.where(F.col("ivf_cell").isin(probes)).drop("ivf_cell")
     return pq_ann(
@@ -893,8 +847,7 @@ def ivf_ann_pruned(
     (asserted in tests/test_physical_plans.py). Scoring and top-k are
     identical to ivf_ann: exact cosine over the probed subset,
     TakeOrdered, deterministic (cosine desc, id) ordering."""
-    scores = centroids @ np.asarray(query, dtype=np.float64)
-    probes = [int(i) for i in np.argsort(-scores)[:n_probe]]
+    probes = _probe_cells(centroids, query, n_probe)
     df = spark.read.parquet(path)
     # match the DISCOVERED partition-column type: this engine disables
     # partitionColumnTypeInference globally (numeric run ids must stay
@@ -902,11 +855,8 @@ def ivf_ann_pruned(
     # literals would wrap the partition column in a cast
     if dict(df.dtypes).get("ivf_cell") == "string":
         probes = [str(p) for p in probes]
-    df = df.where(F.col("ivf_cell").isin(probes))
-    return (
-        df.select(F.col(id_col), cosine_to(query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return brute_force_topk(
+        df.where(F.col("ivf_cell").isin(probes)), query, k, id_col
     )
 
 
@@ -1030,9 +980,4 @@ def lsh_ann_pruned(
     qbucket = lsh_query_bucket(query, dim, n_planes, seed)
     df = spark.read.parquet(path)
     val = str(qbucket) if dict(df.dtypes).get("bucket") == "string" else qbucket
-    return (
-        df.where(F.col("bucket") == val)
-        .select(F.col(id_col), cosine_to(query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return brute_force_topk(df.where(F.col("bucket") == val), query, k, id_col)

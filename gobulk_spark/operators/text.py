@@ -398,40 +398,19 @@ def winnow_overlap_pairs(
     ``min_shared`` winnowing fingerprints. Inverted-index self-join on
     the fingerprint (same shape as the shingle index), stop-fingerprint
     guard drops fingerprints present in > max_fp_df docs."""
-    from .dedup import pin
+    from .dedup import counted_self_join, drop_hot_buckets, pin
 
     # positions=False: the UDF already emits per-doc DISTINCT
     # fingerprints, so the former corpus-wide .distinct() exchange of
     # every (id, fingerprint) row is gone (see winnow_fingerprints)
     fp = pin(winnow_fingerprints(df, id_col, text_col, k, window, positions=False))
-    # sized-broadcast decision for the self-join index side — same
-    # pattern (and scale fallback above the cap) as the minhash and
-    # jaccard inverted-index joins; the pinned frame makes the count
-    # a cache scan
+    # the count sizes the self-join's index side (same decision as the
+    # minhash and Jaccard joins); the pinned frame makes it a cache scan
     n_fp = fp.count()
-    if max_fp_df is not None:
-        hot = (
-            fp.groupBy("fingerprint")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_fp_df)
-            .select("fingerprint")
-        )
-        fp = fp.join(F.broadcast(hot), "fingerprint", "left_anti")
-    l, r = fp.alias("l"), fp.alias("r")
-    from .dedup import LSH_BROADCAST_INDEX_ROWS
-
-    if n_fp <= LSH_BROADCAST_INDEX_ROWS:
-        r = F.broadcast(r)
-    return (
-        l.join(
-            r,
-            (F.col("l.fingerprint") == F.col("r.fingerprint"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("shared_fingerprints"))
-        .where(F.col("shared_fingerprints") >= min_shared)
-    )
+    fp = drop_hot_buckets(fp, ["fingerprint"], max_fp_df)
+    return counted_self_join(
+        fp, ["fingerprint"], id_col, n_fp, "shared_fingerprints"
+    ).where(F.col("shared_fingerprints") >= min_shared)
 
 
 SIMHASH_BITS = 64
@@ -672,7 +651,7 @@ def simhash_near_dups(
     # pinned: probe sizing/guard count, the guard aggregation and both
     # join sides would each re-trigger the upstream Arrow UDF otherwise
     # (dedup.pin rationale)
-    from .dedup import pin
+    from .dedup import drop_hot_buckets, pin
 
     sig = pin(sig.select(F.col(id_col), F.col("simhash")))
     if n_rows is None and (probe_radius is None or max_bucket_size == "auto"):
@@ -700,14 +679,7 @@ def simhash_near_dups(
     if max_bucket_size == "auto":
         min_width = min(w for _, w in plan)
         max_bucket_size = max(64, -(-8 * n_rows // (1 << min_width)))
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_key")
-            .agg(F.count("*").alias("bs"))
-            .where(F.col("bs") > max_bucket_size)
-            .select("band", "band_key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "band_key"], "left_anti")
+    banded = drop_hot_buckets(banded, ["band", "band_key"], max_bucket_size)
     if probe_radius == 0:
         probe = banded.withColumnRenamed("band_key", "probe_key")
     else:

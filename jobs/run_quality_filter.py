@@ -188,7 +188,6 @@ def main() -> None:
         incremental=args.incremental,
         stop_on_error=args.stop_on_error,
         resume=not args.no_resume,
-        arrow_batch_rows=args.arrow_batch_rows,
         fused=args.fused,
     )
     sink = None

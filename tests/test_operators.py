@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gobulk_spark.operators import dedup, similarity
+from gobulk_spark.operators.images import phash_near_dup_images
+from gobulk_spark.operators.text import winnow_overlap_pairs
 
 
 @pytest.fixture(scope="module")
@@ -45,10 +47,44 @@ def test_jaccard_exact_values(spark, docs):
     assert 0.5 <= pairs[(0, 1)] < 1.0  # one token differs
 
 
+@pytest.mark.parametrize(
+    "op",
+    [dedup.minhash_lsh_candidates, dedup.ngram_jaccard_pairs, winnow_overlap_pairs],
+    ids=lambda f: f.__name__,
+)
+def test_counted_self_join_shuffled_branch_matches_broadcast(spark, docs, monkeypatch, op):
+    """Above LSH_BROADCAST_INDEX_ROWS the index self-join is left to the
+    planner's shuffled join: same pairs and counts, one broadcast fewer."""
+
+    def run():
+        out = op(docs, "doc_id", "text")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(map(tuple, out.collect())), plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    # the pinned index is counted, so Spark knows its size and would
+    # broadcast the small side on its own; switch that off so the plans
+    # differ only in the hint the cap decides
+    spark.conf.set(key, "-1")
+    try:
+        default_rows, default_plan = run()
+        monkeypatch.setattr(dedup, "LSH_BROADCAST_INDEX_ROWS", 0)
+        forced_rows, forced_plan = run()
+    finally:
+        spark.conf.set(key, old)
+        dedup.release_pins()
+    assert default_rows and forced_rows == default_rows
+    assert (
+        forced_plan.count("BroadcastHashJoin")
+        == default_plan.count("BroadcastHashJoin") - 1
+    )
+
+
 def test_phash_banding_finds_planted_duplicates(spark, corpus_1500):
     path, pairs, planted = corpus_1500
     src = spark.read.parquet(path)
-    cand = dedup.phash_near_dup_candidates(src, max_hamming=8).toPandas()
+    cand = phash_near_dup_images(src, max_hamming=8, max_bucket_size=256).toPandas()
     # exact duplicates share phash (hamming 0) and must all be found
     dup_ids = set(planted.loc[planted.planted == "dup_exact", "image_id"])
     found = set(cand["id_a"]) | set(cand["id_b"])
