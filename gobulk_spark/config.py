@@ -32,8 +32,11 @@ class PipelineConfig:
     # salted repartition of the expensive parse stage: phash buckets x salt
     phash_buckets: int = 64
     salt_buckets: int = 8
-    # broadcast the duplicate-id list when it has fewer rows than this
-    # (falls back to a shuffle join above it)
+    # broadcast the duplicate-id list when it has at most this many rows
+    # (falls back to a shuffle join above it). A row cap, not Spark's
+    # byte sizing: the other side of this anti-join carries the image
+    # bytes, which a shuffled join would move, and the row count comes
+    # free from the scan-audit write (no extra job)
     dup_broadcast_max: int = 5_000_000
     # fused throughput mode: parse is not staged to parquet, it fuses
     # into the store job (decided frame cached for the three writes).

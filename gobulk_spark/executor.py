@@ -123,9 +123,7 @@ def probe_decided(decided: DataFrame) -> tuple[int, int, int, int, int, int]:
     )
 
 
-def resolve_conflicting_ids(
-    decided: DataFrame, probe: tuple[int, int] | None = None
-) -> DataFrame:
+def resolve_conflicting_ids(decided: DataFrame, probe: tuple[int, int]) -> DataFrame:
     """Same image_id arriving with DIFFERENT kept content in ONE batch
     — two source files claiming one id, with no happened-before order
     to arbitrate. The row with the max content_hash survives
@@ -139,24 +137,14 @@ def resolve_conflicting_ids(
     identical epoch forever.
 
     Gated like dedup_exact_redeliveries: the window shuffle is paid
-    only when the probe (foldable into probe_decided's single job)
-    finds an actual collision.
-
-    ``probe``: precomputed (n_kept_pairs, n_kept_ids)."""
+    only when the probe — (n_kept_pairs, n_kept_ids) from the single
+    probe_decided job — finds an actual collision."""
     from pyspark.sql import Window
 
-    kept = F.col("action").isin("update", "create")
-    if probe is not None:
-        n_pairs, n_ids = probe
-    else:
-        n_pairs, n_ids = decided.select(
-            F.count_distinct(
-                F.when(kept, F.struct("image_id", "content_hash"))
-            ),
-            F.count_distinct(F.when(kept, F.col("image_id"))),
-        ).first()
-    if int(n_pairs or 0) == int(n_ids or 0):
+    n_pairs, n_ids = probe
+    if n_pairs == n_ids:
         return decided
+    kept = F.col("action").isin("update", "create")
     # kept rows sort first within the id, so ranks 1..k are exactly the
     # competing kept siblings; rank 1 = the max-hash winner. Hashes are
     # distinct within an id here (exact duplicates were collapsed by

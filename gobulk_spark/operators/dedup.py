@@ -15,6 +15,10 @@ The building blocks every near-dup operator in ``operators/`` shares
 live here, once: ``pin`` (persist a frame several subtrees consume),
 ``drop_hot_buckets`` (the hot-bucket guard) and ``counted_self_join``
 (the inverted-index self-join behind minhash, Jaccard and winnowing).
+Spark sizes that self-join in bytes: the planner broadcasts a side it
+estimates below ``spark.sql.autoBroadcastJoinThreshold``, and AQE
+decides at run time from the measured stage sizes otherwise. No row cap
+or per-deployment knob chooses the join here.
 
 MinHash here is md5-based so the DuckDB oracle can reproduce signatures
 bit-for-bit: h_i(s) = md5(i || '|' || s), minimized as hex strings
@@ -23,7 +27,6 @@ bit-for-bit: h_i(s) = md5(i || '|' || s), minimized as hex strings
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from operator import and_
 
@@ -32,24 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import fingerprint, shingles
-
-#: broadcast the index side of counted_self_join when the pinned index
-#: held at most this many rows before the hot-bucket guard — same
-#: rationale and scale fallback as text.SIMHASH_BROADCAST_INDEX_ROWS.
-#: Its three users and their index rows:
-#: - minhash_lsh_candidates: (id, band int, minhash 32-char md5 hex),
-#:   n_docs x num_hashes rows;
-#: - ngram_jaccard_pairs: (id, xxhash64 shingle long), one row per
-#:   distinct shingle per doc;
-#: - winnow_overlap_pairs: (id, fingerprint long), one row per distinct
-#:   fingerprint per doc.
-#: With a long id the broadcast hash relation Spark 4.1 builds
-#: measured 704 MiB for 4M minhash rows (~185 B/row) and 256 MiB for
-#: 4M shingle or fingerprint rows (~67 B/row), held on the driver and
-#: on every executor.
-LSH_BROADCAST_INDEX_ROWS = int(
-    os.environ.get("GOBULK_LSH_BCAST_ROWS", str(4_000_000))
-)
 
 #: every frame pin() persisted and nobody released yet. STRONG refs,
 #: deliberately: pin() is called on function-local frames that go out
@@ -114,20 +99,17 @@ def drop_hot_buckets(
 
 
 def counted_self_join(
-    index: DataFrame, keys: list[str], id_col: str, n_rows: int, count_col: str
+    index: DataFrame, keys: list[str], id_col: str, count_col: str
 ) -> DataFrame:
     """(id_a, id_b, ``count_col``): for every pair id_a < id_b, how many
     ``keys`` entries of the inverted index the two ids share.
 
-    ``n_rows`` is the index's row count before the hot-bucket guard. At
-    most LSH_BROADCAST_INDEX_ROWS rows broadcast the index side: the
-    planner cannot size a relation produced by explode-over-aggregate,
-    and a sort-merge join sorts both copies of the whole index (measured
-    2.3 s -> 1.3 s for minhash, 3.7 s -> 2.7 s for Jaccard at sf1.0).
-    Above the cap the planner's shuffled join stands (the 10^12 path)."""
+    Spark chooses the join by size in bytes. Each caller pins the index
+    and materializes the pin with one ``count()``, so the planner reads
+    the cached relation's size: it broadcasts the index side below
+    ``spark.sql.autoBroadcastJoinThreshold``, and above it AQE picks the
+    shuffled strategy from the measured stage sizes (the 10^12 path)."""
     l, r = index.alias("l"), index.alias("r")
-    if n_rows <= LSH_BROADCAST_INDEX_ROWS:
-        r = F.broadcast(r)
     same_keys = reduce(and_, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys])
     return (
         l.join(r, same_keys & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
@@ -199,12 +181,12 @@ def minhash_lsh_candidates(
     (drop_hot_buckets).
     """
     sig = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
-    # one cheap count on the pinned signatures decides the join side
-    n_sig = sig.count()
+    # materializes the pin, so the planner sizes the self-join from the
+    # cached relation (counted_self_join); without it AQE runs extra
+    # stage jobs to size the join
+    sig.count()
     sig = drop_hot_buckets(sig, ["band", "minhash"], max_bucket_size)
-    return counted_self_join(
-        sig, ["band", "minhash"], id_col, n_sig, "bands_agreeing"
-    )
+    return counted_self_join(sig, ["band", "minhash"], id_col, "bands_agreeing")
 
 
 def ngram_jaccard_pairs(
@@ -237,11 +219,11 @@ def ngram_jaccard_pairs(
             id_col, F.xxhash64("shingle").alias("shingle")
         )
     )
-    # same sized-broadcast decision as minhash_lsh_candidates
-    n_sh = sh.count()
+    # materializes the pin, as in minhash_lsh_candidates
+    sh.count()
     sh = drop_hot_buckets(sh, ["shingle"], max_shingle_df)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    inter = counted_self_join(sh, ["shingle"], id_col, n_sh, "n_common")
+    inter = counted_self_join(sh, ["shingle"], id_col, "n_common")
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("size_b"))
     return (

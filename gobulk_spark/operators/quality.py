@@ -22,8 +22,6 @@ Design rules, in force throughout:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,16 +29,6 @@ from .text import tokens
 
 
 from .text import ngram_array as _ngram_occurrences  # multiset, in order
-
-#: broadcast a duplicated-hash set when it holds at most this many
-#: rows. Three users: duplicate_token_spans (xxhash64 window hashes,
-#: longs) and segment_dedup_stats / segment_dedup_rewrite (32-char md5
-#: hex segment hashes). The broadcast hash relation Spark 4.1 builds
-#: measured 256 MiB for 4M longs (~67 B/row) and 576 MiB for 4M md5
-#: strings (~151 B/row), held on the driver and on every executor.
-DUP_HASH_BROADCAST_ROWS = int(
-    os.environ.get("GOBULK_DUP_BCAST_ROWS", str(4_000_000))
-)
 
 
 def _top_frac_of_sorted(s: Column) -> Column:
@@ -144,12 +132,12 @@ def segment_dedup_stats(
 
     # round 6: the per-doc rollup only needs each segment's boolean
     # "appears in >1 docs", so instead of joining the FULL
-    # document-frequency table back onto every segment row (a shuffled
-    # join of the whole segment frame), the SHARED hash set — usually a
-    # small fraction — is broadcast and counted via one semi-join.
-    # Above the broadcast cap the old full join stands. The segment
-    # frame is pinned: the frequency aggregate and the rollup both
-    # consume it.
+    # document-frequency table back onto every segment row, the SHARED
+    # hash set — usually a small fraction — is counted per doc via one
+    # semi-join, exact at any size. Spark sizes that join in bytes: AQE
+    # broadcasts the shared set when its measured stage is below
+    # autoBroadcastJoinThreshold. The segment frame is pinned: the
+    # frequency aggregate and the rollup both consume it.
     seg = pin(segment_hashes(df, id_col, text_col, seg_len))
     hot = (
         seg.groupBy("seg_hash")
@@ -157,35 +145,19 @@ def segment_dedup_stats(
         .where(F.col("_ndocs") > 1)
         .select("seg_hash")
     )
-    if hot.count() <= DUP_HASH_BROADCAST_ROWS:
-        n_shared = (
-            seg.join(F.broadcast(hot), "seg_hash", "left_semi")
-            .groupBy(id_col)
-            .agg(F.count("*").cast("long").alias("_n_sh"))
-        )
-        totals = seg.groupBy(id_col).agg(
-            F.count("*").cast("long").alias("n_segments")
-        )
-        out = totals.join(n_shared, id_col, "left")
-        sh = F.coalesce(F.col("_n_sh"), F.lit(0).cast("long"))
-        return out.select(
-            id_col,
-            "n_segments",
-            sh.alias("n_shared_segments"),
-            F.round(sh / F.col("n_segments"), 6).alias("shared_frac"),
-        )
-    dfreq = seg.groupBy("seg_hash").agg(
-        F.countDistinct(id_col).alias("_ndocs")
-    )
-    shared = F.sum(F.when(F.col("_ndocs") > 1, 1).otherwise(0))
-    return (
-        seg.join(dfreq, "seg_hash")
+    n_shared = (
+        seg.join(hot, "seg_hash", "left_semi")
         .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_segments"),
-            shared.cast("long").alias("n_shared_segments"),
-            F.round(shared / F.count("*"), 6).alias("shared_frac"),
-        )
+        .agg(F.count("*").cast("long").alias("_n_sh"))
+    )
+    totals = seg.groupBy(id_col).agg(F.count("*").cast("long").alias("n_segments"))
+    out = totals.join(n_shared, id_col, "left")
+    sh = F.coalesce(F.col("_n_sh"), F.lit(0).cast("long"))
+    return out.select(
+        id_col,
+        "n_segments",
+        sh.alias("n_shared_segments"),
+        F.round(sh / F.col("n_segments"), 6).alias("shared_frac"),
     )
 
 
@@ -432,8 +404,9 @@ def segment_dedup_rewrite(
     with_toks = spread(df, id_col).withColumn("_toks", tokens(F.col(text_col)))
     # pinned: the frequency aggregate AND the removal-set probe both
     # consume the segment explode — unpinned, the tokenize+md5 explode
-    # ran once per consumer (round 6); the over-frequent hash set is
-    # broadcast below the shared row cap so the probe stays map-side
+    # ran once per consumer (round 6); Spark sizes the probe join of the
+    # over-frequent hash set (broadcast below its byte threshold, so
+    # the probe stays map-side)
     segs = pin(
         with_toks.select(
             id_col,
@@ -450,8 +423,6 @@ def segment_dedup_rewrite(
         .where(F.col("_ndocs") > max_df)
         .select("seg_hash")
     )
-    if hot.count() <= DUP_HASH_BROADCAST_ROWS:
-        hot = F.broadcast(hot)
     removed = (
         segs.join(hot, "seg_hash", "left_semi")
         .groupBy(id_col)
@@ -876,7 +847,7 @@ def duplicate_token_spans(
             F.col(id_col), F.posexplode(wins).alias("_p0", "_h")
         ).select(id_col, (F.col("_p0") + 1).alias("_pos"), "_h")
     )
-    dup = pin(
+    dup = (
         win.groupBy("_h")
         .agg(F.countDistinct(id_col).alias("_nd"))
         .where(F.col("_nd") > 1)
@@ -885,13 +856,10 @@ def duplicate_token_spans(
     from pyspark.sql import Window as W
 
     # the duplicated-hash set is usually a tiny fraction of all windows
-    # (only cross-document repeats survive) — broadcast it below a row
-    # cap so the 1-hash-per-token window frame never shuffles for the
-    # probe; above the cap the planner's shuffled join stands
-    dup_side = (
-        F.broadcast(dup) if dup.count() <= DUP_HASH_BROADCAST_ROWS else dup
-    )
-    dwin = win.join(dup_side, "_h").select(id_col, "_pos")
+    # (only cross-document repeats survive); Spark sizes the probe join,
+    # broadcasting the set below its byte threshold so the
+    # 1-hash-per-token window frame never shuffles for the probe
+    dwin = win.join(dup, "_h").select(id_col, "_pos")
     grp = F.col("_pos") - F.row_number().over(
         W.partitionBy(id_col).orderBy("_pos")
     )

@@ -12,7 +12,6 @@ hex output on both engines).
 from __future__ import annotations
 
 import math
-import os
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -404,12 +403,11 @@ def winnow_overlap_pairs(
     # fingerprints, so the former corpus-wide .distinct() exchange of
     # every (id, fingerprint) row is gone (see winnow_fingerprints)
     fp = pin(winnow_fingerprints(df, id_col, text_col, k, window, positions=False))
-    # the count sizes the self-join's index side (same decision as the
-    # minhash and Jaccard joins); the pinned frame makes it a cache scan
-    n_fp = fp.count()
+    # materializes the pin, as in minhash_lsh_candidates
+    fp.count()
     fp = drop_hot_buckets(fp, ["fingerprint"], max_fp_df)
     return counted_self_join(
-        fp, ["fingerprint"], id_col, n_fp, "shared_fingerprints"
+        fp, ["fingerprint"], id_col, "shared_fingerprints"
     ).where(F.col("shared_fingerprints") >= min_shared)
 
 
@@ -564,18 +562,24 @@ def _n_probe_masks(width: int, t: int) -> int:
 PROBE_ROW_COST = 50.0
 
 #: broadcast the index side of the banding join when it holds at most
-#: this many (id, simhash, band, band_key) rows = n_rows * n_bands
-#: (~32 B each -> <=128 MiB). Above it (the 10^12-row regime) the join
-#: falls back to the planner's shuffled strategies and probe rows pay
-#: exchange cost. Env-tunable for bigger executors. NOTE: the probe
+#: this many (id, simhash, band, band_key) rows = n_rows * n_bands.
+#: Measured at the cap (Spark 4.1 BroadcastExchange dataSize, local[2],
+#: 4M index rows): the index relation is 336 MiB (~88 B/row, with or
+#: without the guard's survivor mask) and, with the guard on, each of
+#: the two survivor-mask broadcasts of (id, mask) over n_rows adds
+#: 74 MiB at 3 bands; all held on the driver and on every executor.
+#: Above the cap (the 10^12-row regime) the join falls back to the
+#: planner's shuffled strategies and probe rows pay exchange cost.
+#: This row cap stays although the other near-dup operators let Spark
+#: size their joins: its hint picks the BUILD side, and without it the
+#: planner's estimate after posexplode broadcasts the ~7x larger probe
+#: relation instead (BuildLeft, the plan round 6 fixed below). The probe
 #: radius deliberately does NOT depend on this — the auto guard's
 #: bucketing is a function of the band plan, so changing the plan with
 #: scale would change which buckets the guard drops (i.e. the RESULT
 #: wherever the guard fires); the join-side hint below is plan-only
 #: and result-identical.
-SIMHASH_BROADCAST_INDEX_ROWS = int(
-    os.environ.get("GOBULK_SIMHASH_BCAST_ROWS", str(4_000_000))
-)
+SIMHASH_BROADCAST_INDEX_ROWS = 4_000_000
 
 
 def _index_broadcastable(n_rows: int, n_bands: int) -> bool:

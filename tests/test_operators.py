@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gobulk_spark.operators import dedup, similarity
+from gobulk_spark.operators import dedup, quality, similarity
 from gobulk_spark.operators.images import phash_near_dup_images
 from gobulk_spark.operators.text import winnow_overlap_pairs
 
@@ -47,38 +47,67 @@ def test_jaccard_exact_values(spark, docs):
     assert 0.5 <= pairs[(0, 1)] < 1.0  # one token differs
 
 
-@pytest.mark.parametrize(
-    "op",
-    [dedup.minhash_lsh_candidates, dedup.ngram_jaccard_pairs, winnow_overlap_pairs],
-    ids=lambda f: f.__name__,
-)
-def test_counted_self_join_shuffled_branch_matches_broadcast(spark, docs, monkeypatch, op):
-    """Above LSH_BROADCAST_INDEX_ROWS the index self-join is left to the
-    planner's shuffled join: same pairs and counts, one broadcast fewer."""
+#: the near-dup operators whose joins Spark sizes (no row cap, no hint);
+#: winnow runs without its stop-fingerprint guard, whose hot-key set is
+#: always broadcast by hint
+SIZED_BY_SPARK = {
+    "minhash": lambda d: dedup.minhash_lsh_candidates(d, "doc_id", "text"),
+    "jaccard": lambda d: dedup.ngram_jaccard_pairs(d, "doc_id", "text"),
+    "winnow": lambda d: winnow_overlap_pairs(d, "doc_id", "text", max_fp_df=None),
+    "segment_dedup_stats": lambda d: quality.segment_dedup_stats(d, "doc_id", "text"),
+    "segment_dedup_rewrite": lambda d: quality.segment_dedup_rewrite(
+        d, "doc_id", "text"
+    ),
+    "duplicate_token_spans": lambda d: quality.duplicate_token_spans(
+        d, "doc_id", "text"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(SIZED_BY_SPARK))
+def test_spark_sizes_the_broadcast(spark, docs, op):
+    """With Spark's broadcast threshold switched off, each operator gives
+    the same rows as at the default threshold and its final plan holds
+    no BroadcastHashJoin: nothing forces a broadcast past Spark's own
+    byte sizing."""
 
     def run():
-        out = op(docs, "doc_id", "text")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        return sorted(map(tuple, out.collect())), plan
+        out = SIZED_BY_SPARK[op](docs)
+        rows = sorted(map(tuple, out.collect()))
+        # after the action the adaptive plan is the final one
+        return rows, out._jdf.queryExecution().executedPlan().toString()
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    # the pinned index is counted, so Spark knows its size and would
-    # broadcast the small side on its own; switch that off so the plans
-    # differ only in the hint the cap decides
-    spark.conf.set(key, "-1")
     try:
-        default_rows, default_plan = run()
-        monkeypatch.setattr(dedup, "LSH_BROADCAST_INDEX_ROWS", 0)
-        forced_rows, forced_plan = run()
+        default_rows, _ = run()
+        spark.conf.set(key, "-1")
+        off_rows, off_plan = run()
     finally:
         spark.conf.set(key, old)
         dedup.release_pins()
-    assert default_rows and forced_rows == default_rows
-    assert (
-        forced_plan.count("BroadcastHashJoin")
-        == default_plan.count("BroadcastHashJoin") - 1
-    )
+    assert default_rows and off_rows == default_rows
+    assert "BroadcastHashJoin" not in off_plan
+
+
+@pytest.mark.parametrize(
+    "op", ["segment_dedup_stats", "segment_dedup_rewrite", "duplicate_token_spans"]
+)
+def test_building_the_plan_runs_no_job(spark, docs, op):
+    """Building the operator's plan runs no Spark job: no count() or
+    other eager action decides a join while the frame is built."""
+    sc = spark.sparkContext
+    group = f"plan-only-{op}"
+    sc.setJobGroup(group, group)
+    try:
+        out = SIZED_BY_SPARK[op](docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out.count() > 0
+    finally:
+        dedup.release_pins()
 
 
 def test_phash_banding_finds_planted_duplicates(spark, corpus_1500):

@@ -273,8 +273,9 @@ def test_resolve_conflicting_ids_unit(spark):
     ]
     out = {
         (r["image_id"], r["content_hash"]): r
+        # probe: 3 kept (id, hash) pairs over 2 kept ids
         for r in executor.resolve_conflicting_ids(
-            spark.createDataFrame(rows, ddl)
+            spark.createDataFrame(rows, ddl), probe=(3, 2)
         ).collect()
     }
     assert out[("a", "h2")]["action"] == "create"
