@@ -15,6 +15,8 @@ primitive.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import SparkSession
 
 
@@ -119,10 +121,10 @@ class Fs:
         The replace is ONE FileContext rename-with-overwrite wherever
         the store supports it — plain FileSystem.rename refuses to
         clobber, and delete-then-rename leaves a window where the
-        pointer file is ABSENT (a crash there would silently demote
-        marker reads to the O(history) legacy scan). The two-step form
-        survives only as the fallback for stores without FileContext
-        overwrite."""
+        pointer file is ABSENT (a crash there would make the marker
+        read as empty and the next incremental run re-process every
+        row). The two-step form survives only as the fallback for
+        stores without FileContext overwrite."""
         parent = path.rsplit("/", 1)[0]
         self.mkdirs(parent)
         tmp = f"{path}.tmp"
@@ -137,6 +139,33 @@ class Fs:
             self.delete(path)
         if not self.rename(tmp, path):
             raise OSError(f"atomic write failed: rename {tmp} -> {path}")
+
+    def read_pointer(self, path: str, exclude_run_id: str | None = None) -> dict | None:
+        """The state a run-stamped pointer (``commit_pointer``) shows a
+        reader: None when there is no pointer; its ``prev`` when the
+        pointer belongs to ``exclude_run_id`` — a torn run being retried
+        sees exactly the committed state its first attempt saw; else
+        the pointer itself (its state plus ``run_id`` and ``prev``)."""
+        if not self.exists(path):
+            return None
+        ptr = json.loads(self.read_text(path))
+        if exclude_run_id is not None and ptr["run_id"] == exclude_run_id:
+            return ptr.get("prev")
+        return ptr
+
+    def commit_pointer(self, path: str, run_id: str, state: dict) -> dict:
+        """Atomically point ``path`` at run ``run_id``'s ``state``,
+        keeping the predecessor state as ``prev``. A re-commit by the
+        same run keeps the ORIGINAL predecessor (its state read with
+        this run excluded), so a retry can never make its own torn
+        state the baseline. The one torn-retry rule of the marker and
+        the source file manifest."""
+        prev = self.read_pointer(path, exclude_run_id=run_id)
+        if prev is not None:
+            prev = {k: v for k, v in prev.items() if k not in ("run_id", "prev")}
+        ptr = {"run_id": run_id, **state, "prev": prev}
+        self.write_text_atomic(path, json.dumps(ptr))
+        return ptr
 
     def replace_dir(self, staged: str, dst: str, backup: str) -> None:
         """Swap ``staged`` into ``dst`` with crash recovery.

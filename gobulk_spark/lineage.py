@@ -15,6 +15,14 @@ local change, per SURVEY §7):
   tmp-then-rename so the commit flip is atomic — phase outputs staged
   first, checkpoint flipped last (idempotent resume under partial
   failure).
+- marker        ≙ the tracker's per-identifier content hash
+  (tracker/gorm.go:441-449): the latest (image_id, content_hash) pair
+  per id, a compacted snapshot plus a bounded delta tier named by the
+  run-stamped ``_marker/LATEST`` pointer (Fs.commit_pointer, the same
+  torn-retry rule as the source file manifest). It advances at store
+  commit; the audit is never read to rebuild it, so an out_dir with
+  audit rows but no pointer reads an empty marker (its next
+  incremental run re-processes every row, which is idempotent).
 
 All manifest/directory metadata goes through the Hadoop FileSystem API
 (fsutil.Fs), so ``out_dir`` may be any Hadoop-supported URI (file://,
@@ -217,69 +225,13 @@ def marker_root(out_dir: str) -> str:
     return _join(out_dir, "_marker")
 
 
-def _marker_latest(fs: Fs, out_dir: str) -> dict | None:
-    p = _join(marker_root(out_dir), "LATEST")
-    if not fs.exists(p):
-        return None
-    return json.loads(fs.read_text(p))
-
-
-def _legacy_marker(
-    spark: SparkSession, out_dir: str, exclude_run_id: str | None
-) -> DataFrame | None:
-    """Pre-snapshot marker: latest hash per id from the FULL audit log.
-
-    Kept as the migration/bootstrap path for out_dirs written before the
-    compacted ``_marker`` table existed — O(total history) per call, the
-    round-2 scale weakness the snapshot replaces. created is
-    query-constant per write, so max_by orders runs; the (created,
-    content_hash) struct breaks SAME-WRITE ties deterministically.
-    """
-    audit = read_audit(spark, out_dir)
-    if audit is None:
-        return None
-    if exclude_run_id is not None:
-        audit = audit.where(F.col("run") != exclude_run_id)
-    return audit.groupBy("image_id").agg(
-        F.expr("max_by(content_hash, struct(created, content_hash))").alias(
-            "content_hash"
-        )
-    )
-
-
-def _marker_state(
-    latest: dict, exclude_run_id: str | None
-) -> tuple[str | None, list[dict], bool]:
-    """(snapshot_name, ordered delta entries, legacy_fallback) visible
-    to a run.
-
-    Deltas written by the excluded run are dropped (a torn epoch retry
-    must not see its own half-committed delta); when the SNAPSHOT
-    itself belongs to the excluded run and no later deltas exist, the
-    recorded predecessor state (snapshot + the deltas it compacted
-    over) is returned instead — the retried run sees exactly its first
-    attempt's input. A torn BOOTSTRAP snapshot (prev is None: the first
-    attempt compacted the legacy audit baseline) has no predecessor
-    snapshot to fall back to — legacy_fallback=True tells the caller
-    to re-read the legacy audit marker, exactly what the first attempt
-    consumed; returning "empty" there would silently drop every
-    pre-marker (image_id, content_hash) pair.
-    """
-    deltas = [
-        d
-        for d in latest.get("deltas", [])
-        if exclude_run_id is None or d["run_id"] != exclude_run_id
+def _marker_frames(spark: SparkSession, root: str, state: dict | None) -> list[DataFrame]:
+    """One marker state's snapshot then its deltas, oldest first."""
+    if state is None:
+        return []
+    return [spark.read.parquet(_join(root, state["path"]))] + [
+        spark.read.parquet(_join(root, d["name"])) for d in state["deltas"]
     ]
-    if (
-        exclude_run_id is not None
-        and latest["run_id"] == exclude_run_id
-        and not latest.get("deltas")
-    ):
-        prev = latest.get("prev")
-        if prev is None:  # torn bootstrap: predecessor IS the legacy audit
-            return None, [], True
-        return prev.get("path"), prev.get("deltas", []), False
-    return latest["path"], deltas, False
 
 
 def _merge_marker_frames(frames: list[DataFrame]) -> DataFrame:
@@ -308,7 +260,7 @@ def processed_keys(
     """Marker for incremental runs: the LATEST (image_id, content_hash)
     pair per id across committed runs — read from the compacted
     ``_marker`` table (snapshot + bounded delta tier), O(ids), never
-    O(audit history).
+    O(audit history). None when no run has advanced the marker.
 
     gobulk's dedup/track key is (IterationID, InputRepository,
     InputIdentifier, ContentHash) (tracker/gorm.go:441-449): the SAME
@@ -319,29 +271,20 @@ def processed_keys(
     content reverts to a previously-seen hash must re-enter, or the
     kept store stays stale forever.
 
-    Merge-on-read: with live deltas the read is snapshot ∪ deltas with
-    latest-wins priority (one map-side-combined aggregation over
-    O(ids + K·epoch) rows, K bounded by the compaction threshold);
-    with none it is a bare snapshot scan. ``exclude_run_id`` guarantees
-    crash-retry idempotency (see _marker_state). The audit table
-    remains the immutable log; it is consulted only for out_dirs
-    predating the marker layout (_legacy_marker).
+    Read the ``LATEST`` pointer, then scan the state it names: with
+    live deltas the read is snapshot ∪ deltas with latest-wins priority
+    (one map-side-combined aggregation over O(ids + K·epoch) rows, K
+    bounded by the compaction threshold); with none it is a bare
+    snapshot scan. ``exclude_run_id`` guarantees crash-retry
+    idempotency: when the pointer belongs to that run, its predecessor
+    state is read (``Fs.read_pointer``).
     """
-    fs = Fs(spark, out_dir)
-    latest = _marker_latest(fs, out_dir)
-    if latest is None:
-        return _legacy_marker(spark, out_dir, exclude_run_id)
-    snap, deltas, legacy_fb = _marker_state(latest, exclude_run_id)
-    if legacy_fb:  # torn bootstrap retry: first attempt's input
-        return _legacy_marker(spark, out_dir, exclude_run_id)
     root = marker_root(out_dir)
-    frames = [spark.read.parquet(_join(root, snap))] if snap else []
-    frames += [spark.read.parquet(_join(root, d["name"])) for d in deltas]
+    state = Fs(spark, out_dir).read_pointer(_join(root, "LATEST"), exclude_run_id)
+    frames = _marker_frames(spark, root, state)
     if not frames:
         return None
-    if len(frames) == 1:
-        return frames[0]
-    return _merge_marker_frames(frames)
+    return frames[0] if len(frames) == 1 else _merge_marker_frames(frames)
 
 
 def advance_marker(
@@ -356,92 +299,50 @@ def advance_marker(
     LSM-shaped two-tier commit, because a full snapshot rewrite per
     advance is O(total ids) — fine for occasional batch runs, fatal for
     a long-lived stream committing small epochs against a 10^12-id
-    corpus:
+    corpus. Starting from the pre-run state (the marker read with this
+    run excluded):
 
     - delta append (when fewer than ``compact_every`` deltas are live):
       write ONLY this run's pairs, O(epoch); readers merge-on-read;
-    - compaction (every ``compact_every``-th advance, and always when
-      compact_every=1 — the batch default): fold snapshot + deltas +
-      new pairs into a fresh snapshot, latest-per-id.
+    - compaction (every ``compact_every``-th advance, on the first
+      advance, and always when compact_every=1 — the batch default):
+      fold snapshot + deltas + new pairs into a fresh snapshot,
+      latest-per-id.
 
-    The LATEST pointer flip (write_text_atomic) is the commit point in
-    both shapes — readers see the old or the new state, never a torn
-    one. The predecessor state (prev snapshot + the delta set a
-    compaction folded) outlives the flip so a torn retry of THIS run
-    reads its first attempt's input (processed_keys exclusion); GC then
-    removes everything unreferenced. Idempotent under crash-retry: a
-    re-advance by the same run excludes its own torn delta/snapshot and
-    reproduces identical content. At warehouse scale this whole
-    function is one Iceberg MERGE snapshot commit.
+    The LATEST pointer flip (``Fs.commit_pointer``) is the commit point
+    in both shapes — readers see the old or the new state, never a torn
+    one. The pointer keeps the pre-run state as ``prev``, so a torn
+    retry of THIS run reads and re-derives from its first attempt's
+    input; new dirs take their sequence number from the live pointer,
+    so a retry never overwrites a dir it references. GC then removes
+    every dir neither the new state nor its ``prev`` references. At
+    warehouse scale this whole function is one Iceberg MERGE snapshot
+    commit.
     """
     fs = Fs(spark, out_dir)
     root = marker_root(out_dir)
-    latest = _marker_latest(fs, out_dir)
+    pointer = _join(root, "LATEST")
+    live = fs.read_pointer(pointer)
+    base = fs.read_pointer(pointer, exclude_run_id=run_id)
+    seq = 0 if live is None else live["seq"] + 1
     new = new_pairs.select("image_id", "content_hash")
-    if latest is None:
-        seq = 0
-        base = _legacy_marker(spark, out_dir, exclude_run_id=run_id)
-        snap, deltas = None, []
-        prev: dict | None = None
-        frames = ([base] if base is not None else []) + [new]
-        compact = True
+    if base is None or len(base["deltas"]) + 1 >= compact_every:
+        name = f"snap-{seq:08d}-{run_id}"
+        merged = _merge_marker_frames(_marker_frames(spark, root, base) + [new])
+        state = {"seq": seq, "path": name, "deltas": []}
     else:
-        seq = latest["seq"] + 1
-        snap, deltas, legacy_fb = _marker_state(latest, exclude_run_id=run_id)
-        if legacy_fb:
-            # torn BOOTSTRAP retry: rebuild from the legacy audit, like
-            # the first attempt did — compacting only `new` here would
-            # permanently drop every pre-marker pair
-            base = _legacy_marker(spark, out_dir, exclude_run_id=run_id)
-            frames = ([base] if base is not None else []) + [new]
-            compact = True
-            prev = None
-        else:
-            frames = (
-                [spark.read.parquet(_join(root, snap))] if snap else []
-            ) + [spark.read.parquet(_join(root, d["name"])) for d in deltas]
-            frames.append(new)
-            # force compaction when the live snapshot is this run's own
-            # torn one: a delta appended on top of it would leave no
-            # state readers excluding this run could fall back to
-            compact = (
-                len(deltas) + 1 >= compact_every or latest["run_id"] == run_id
-            )
-            prev = {"path": snap, "deltas": deltas}
-    if compact:
-        snap_name = f"snap-{seq:08d}-{run_id}"
-        merged = frames[0] if len(frames) == 1 else _merge_marker_frames(frames)
-        merged.write.mode("overwrite").parquet(_join(root, snap_name))
-        manifest = {
-            "run_id": run_id,
-            "seq": seq,
-            "path": snap_name,
-            "deltas": [],
-            "prev": prev,
-        }
-    else:
-        delta_name = f"delta-{seq:08d}-{run_id}"
-        # dedup within the epoch so the delta is one row per id
-        _merge_marker_frames([new]).write.mode("overwrite").parquet(
-            _join(root, delta_name)
-        )
-        manifest = {
-            "run_id": latest["run_id"],  # the snapshot's producer
-            "seq": seq,
-            "path": latest["path"],
-            "deltas": deltas + [{"name": delta_name, "run_id": run_id}],
-            "prev": latest.get("prev"),
-        }
-    fs.write_text_atomic(_join(root, "LATEST"), json.dumps(manifest))
-    keep = {manifest["path"], "LATEST"}
-    keep.update(d["name"] for d in manifest["deltas"])
-    if manifest.get("prev"):
-        keep.add(manifest["prev"].get("path"))
-        keep.update(d["name"] for d in manifest["prev"].get("deltas", []))
+        name = f"delta-{seq:08d}-{run_id}"
+        merged = _merge_marker_frames([new])  # one row per id
+        deltas = base["deltas"] + [{"name": name, "run_id": run_id}]
+        state = {"seq": seq, "path": base["path"], "deltas": deltas}
+    merged.write.mode("overwrite").parquet(_join(root, name))
+    manifest = fs.commit_pointer(pointer, run_id, state)
+    keep = set()
+    for s in (manifest, manifest["prev"] or {}):
+        keep.add(s.get("path"))
+        keep.update(d["name"] for d in s.get("deltas", []))
     for name in fs.listdir(root):
-        if name not in keep and (
-            name.startswith("snap-") or name.startswith("delta-")
-        ):
+        if name.startswith(("snap-", "delta-")) and name not in keep:
             fs.delete(_join(root, name))
     return manifest
 

@@ -565,9 +565,9 @@ PROBE_ROW_COST = 50.0
 #: this many (id, simhash, band, band_key) rows = n_rows * n_bands.
 #: Measured at the cap (Spark 4.1 BroadcastExchange dataSize, local[2],
 #: 4M index rows): the index relation is 336 MiB (~88 B/row, with or
-#: without the guard's survivor mask) and, with the guard on, each of
-#: the two survivor-mask broadcasts of (id, mask) over n_rows adds
-#: 74 MiB at 3 bands; all held on the driver and on every executor.
+#: without the guard's survivor mask) and, with the guard on, the one
+#: survivor-mask broadcast of (id, mask) over n_rows adds 74 MiB at 3
+#: bands; all held on the driver and on every executor.
 #: Above the cap (the 10^12-row regime) the join falls back to the
 #: planner's shuffled strategies and probe rows pay exchange cost.
 #: This row cap stays although the other near-dup operators let Spark
@@ -673,17 +673,34 @@ def simhash_near_dups(
             "default to the cost-model optimum)"
         )
     plan = simhash_band_plan(max_hamming, probe_radius)
-    banded = sig.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(*[_segment(F.col("simhash"), off, w) for off, w in plan])
-        ).alias("band", "band_key"),
-    )
+    bands = F.posexplode(
+        F.array(*[_segment(F.col("simhash"), off, w) for off, w in plan])
+    ).alias("band", "band_key")
+    banded = sig.select(F.col(id_col), F.col("simhash"), bands)
     if max_bucket_size == "auto":
         min_width = min(w for _, w in plan)
         max_bucket_size = max(64, -(-8 * n_rows // (1 << min_width)))
     banded = drop_hot_buckets(banded, ["band", "band_key"], max_bucket_size)
+    use_bcast = n_rows is not None and _index_broadcastable(n_rows, len(plan))
+    carry = [id_col, "simhash", "band"]
+    if use_bcast and max_bucket_size is not None:
+        # per-doc survivor bitmask of fix 2 below, joined to the
+        # signatures ONCE and pinned before either join side is
+        # derived: both sides re-band the pinned rows (a set bit is a
+        # band entry the guard kept), so the mask is broadcast once.
+        # Joined into each side instead, Spark 4.1 ships it twice: an
+        # exchange over a cached relation is not reused across the two
+        # sides (the cache stage keeps its expression ids when
+        # canonicalized)
+        surv = banded.groupBy(id_col).agg(
+            F.sum(F.expr("shiftleft(1L, band)")).alias("_surv")
+        )
+        banded = (
+            pin(sig.join(F.broadcast(surv), id_col))
+            .select(F.col(id_col), F.col("simhash"), F.col("_surv"), bands)
+            .where(F.expr("shiftright(_surv, band) & 1 = 1"))
+        )
+        carry.append("_surv")
     if probe_radius == 0:
         probe = banded.withColumnRenamed("band_key", "probe_key")
     else:
@@ -710,11 +727,9 @@ def simhash_near_dups(
             if w != plan[0][1]:
                 sel = F.when(F.col("band") == i, mask_arr[w]).otherwise(sel)
         probe = banded.select(
-            id_col, "simhash", "band", "band_key", F.explode(sel).alias("_m")
+            *carry, "band_key", F.explode(sel).alias("_m")
         ).select(
-            id_col,
-            "simhash",
-            "band",
+            *carry,
             F.col("band_key").bitwiseXOR(F.col("_m")).alias("probe_key"),
         )
     # round 6: two result-identical plan fixes for the broadcastable
@@ -745,13 +760,6 @@ def simhash_near_dups(
     # withheld: the planner shuffles the join and the distinct dedups —
     # the survivor-mask join would itself be a wide join there.
     xor = F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-    use_bcast = n_rows is not None and _index_broadcastable(n_rows, len(plan))
-    if use_bcast and max_bucket_size is not None:
-        surv = banded.groupBy(id_col).agg(
-            F.sum(F.expr("shiftleft(1L, band)")).alias("_surv")
-        )
-        banded = banded.join(F.broadcast(surv), id_col)
-        probe = probe.join(F.broadcast(surv), id_col)
     # pack (band, key) into ONE long join key: a single-long equi-key
     # gets Spark's specialized LongHashedRelation / long-keyed exchange
     # instead of the generic two-column UnsafeRow path — measured 6.6 s

@@ -111,9 +111,9 @@ def run_pipeline(
             # re-scanned id with NEW (or reverted) content passes the
             # anti-join and re-enters as an update/delete (gobulk
             # tracker/gorm.go:441-449 re-tracks per iteration). The
-            # compacted-snapshot marker advances only at store commit
-            # and excludes THIS run's torn snapshot, so a retried scan
-            # sees the same input as the first attempt.
+            # marker advances only at store commit; read with THIS run
+            # excluded it shows the pre-run state even after a torn
+            # advance, so a retried scan sees the first attempt's input.
             marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
             if marker is not None:
                 src = src.join(marker, ["image_id", "content_hash"], "left_anti")
@@ -146,9 +146,9 @@ def run_pipeline(
         repartition -> Arrow parse stage."""
         src = _source_frame()
         if cfg.incremental:
-            # snapshot marker (excluding this run's torn snapshot, so a
-            # fused-mode retry after a crashed store is not masked by
-            # its own half-committed state)
+            # the marker with this run excluded: its pre-run state, so
+            # a fused-mode retry after a crashed store is not masked by
+            # its own torn advance
             marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
             if marker is not None:
                 src = src.join(marker, ["image_id", "content_hash"], "left_anti")

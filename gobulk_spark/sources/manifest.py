@@ -105,41 +105,23 @@ def read_manifest(
 ) -> dict[str, tuple] | None:
     """path -> (length, mtime) of the last committed run's listing.
 
-    Like lineage.processed_keys, the manifest records the run that
-    committed it plus its predecessor listing: when the latest entry
-    belongs to ``exclude_run_id`` (a torn run being retried), the
-    predecessor baseline is returned, so the retry prunes exactly the
-    files the first attempt pruned — never its own half-committed
-    state."""
-    fs = Fs(spark, out_dir)
-    p = _manifest_path(out_dir)
-    if not fs.exists(p):
+    The manifest is a run-stamped pointer (``Fs.commit_pointer``), like
+    the marker: when it belongs to ``exclude_run_id`` (a torn run being
+    retried), the predecessor listing is returned, so the retry prunes
+    exactly the files the first attempt pruned."""
+    m = Fs(spark, out_dir).read_pointer(_manifest_path(out_dir), exclude_run_id)
+    if m is None:
         return None
-    m = json.loads(fs.read_text(p))
-    files = m["files"]
-    if exclude_run_id is not None and m.get("run_id") == exclude_run_id:
-        files = m.get("prev_files")
-        if files is None:
-            return None
-    return {f["path"]: (f["length"], f["mtime"]) for f in files}
+    return {f["path"]: (f["length"], f["mtime"]) for f in m["files"]}
 
 
 def commit_manifest(
     spark: SparkSession, out_dir: str, run_id: str, files: list[dict]
 ) -> None:
-    """Atomically record the listing the just-committed run processed,
-    keeping the predecessor listing for torn-retry exclusion.
-    Idempotent: a re-commit by the same run preserves the original
+    """Atomically record the listing the just-committed run processed.
+    Idempotent: a re-commit by the same run keeps the original
     predecessor."""
-    fs = Fs(spark, out_dir)
-    p = _manifest_path(out_dir)
-    prev = None
-    if fs.exists(p):
-        m = json.loads(fs.read_text(p))
-        prev = m.get("prev_files") if m.get("run_id") == run_id else m["files"]
-    fs.write_text_atomic(
-        p, json.dumps({"run_id": run_id, "files": files, "prev_files": prev})
-    )
+    Fs(spark, out_dir).commit_pointer(_manifest_path(out_dir), run_id, {"files": files})
 
 
 def run_scan_set(

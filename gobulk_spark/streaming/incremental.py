@@ -145,12 +145,11 @@ def _process_microbatch(
     )
     # in-batch content dedup (cross-batch dedup = the marker check)
     n_dups = src_scan.audit_duplicates(src, out, rid)
-    # compacted-snapshot marker on the LATEST content_hash per id:
-    # changed (or reverted) content re-enters as an update. The
-    # snapshot advances only at the END of the store step and records
+    # compacted marker on the LATEST content_hash per id: changed (or
+    # reverted) content re-enters as an update. The marker pointer
+    # advances only at the END of the store step and is stamped with
     # its epoch, so a foreachBatch RETRY of the same epoch reads the
-    # predecessor snapshot — never masked by its own half-committed
-    # outputs.
+    # pre-epoch state — never masked by its own torn advance.
     marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
     if marker is not None:
         src = src.join(marker, ["image_id", "content_hash"], "left_anti")

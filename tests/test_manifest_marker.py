@@ -7,7 +7,12 @@ The two round-2 scale weaknesses, pinned by tests:
    scan commit records how many files/bytes were actually scanned;
 2. the marker was a groupBy over the FULL audit history — now a
    compacted snapshot advanced atomically at store commit, O(ids) per
-   read, with the predecessor retained for torn-retry exclusion.
+   read. The audit is never read to rebuild it.
+
+Both the marker's ``LATEST`` and the manifest are run-stamped pointers
+(``Fs.commit_pointer``) that keep the pre-run state as ``prev``: a torn
+run being retried reads and re-derives from exactly the state its first
+attempt saw.
 """
 
 from __future__ import annotations
@@ -145,30 +150,6 @@ def test_marker_snapshot_advances_and_gcs(spark):
     assert not any("audit" in f for f in files)
 
 
-def test_legacy_audit_migration(spark):
-    """An out_dir written before the snapshot layout (audit only, no
-    _marker) must still yield a correct marker, and the next run's
-    commit creates the snapshot."""
-    shutil.rmtree(BASE, ignore_errors=True)
-    _write_sharded(400)
-    out = os.path.join(BASE, "out4")
-    run_pipeline(spark, PipelineConfig(source_path=SRC, out_dir=out, run_id="r1"))
-    shutil.rmtree(os.path.join(out, "_marker"))  # simulate pre-round-3 layout
-    legacy = lineage.processed_keys(spark, out)
-    assert legacy is not None and legacy.count() == 400  # audit fallback
-    _write_sharded(400, mutate_shard=0)
-    s2 = run_pipeline(
-        spark,
-        PipelineConfig(
-            source_path=SRC, out_dir=out, run_id="r2", incremental=True
-        ),
-    )
-    assert s2["phases"]["store"]["rows_in"] == 50
-    assert os.path.exists(os.path.join(out, "_marker", "LATEST"))
-    kept = lineage.read_kept(spark, out).toPandas()
-    assert kept["image_id"].is_unique
-
-
 def test_manifest_torn_retry_uses_predecessor(spark):
     """commit_manifest by the same run twice preserves the original
     baseline (the manifest analogue of the marker's prev snapshot)."""
@@ -256,10 +237,10 @@ def test_marker_delta_torn_epoch_retry_is_idempotent(spark):
     assert _read_marker_set(spark, out, exclude="e1") == {"a": "h1"}
 
 
-def test_marker_torn_snapshot_retry_forces_compaction(spark):
+def test_marker_torn_snapshot_retry_reads_predecessor(spark):
     """When the live snapshot belongs to the retrying run, the
-    re-advance must compact (a delta atop its own torn snapshot would
-    leave readers excluding the run nothing to fall back to)."""
+    re-advance starts from the pre-run state, and readers excluding the
+    run still fall back to that state."""
     shutil.rmtree(BASE, ignore_errors=True)
     out = os.path.join(BASE, "torn_snap")
     lineage.advance_marker(spark, out, "r1", _pairs_df(spark, [("a", "h1")]))
@@ -267,9 +248,55 @@ def test_marker_torn_snapshot_retry_forces_compaction(spark):
     # r2 retries with compact_every high enough that a delta would win
     lineage.advance_marker(spark, out, "r2", _pairs_df(spark, [("b", "h2")]), compact_every=8)
     m = json.loads(open(os.path.join(os.path.join(out, "_marker"), "LATEST")).read())
-    assert m["run_id"] == "r2" and m["deltas"] == []
+    assert m["run_id"] == "r2"
     assert _read_marker_set(spark, out) == {"a": "h1", "b": "h2"}
     assert _read_marker_set(spark, out, exclude="r2") == {"a": "h1"}
+
+
+def _kept_rows(spark, out):
+    kept = lineage.read_kept(spark, out).toPandas()
+    assert kept["image_id"].is_unique
+    return sorted(map(tuple, kept[sorted(kept.columns)].itertuples(index=False)))
+
+
+@pytest.mark.parametrize("fused", [False, True], ids=["staged", "fused"])
+def test_crash_after_marker_flip_resumes_like_a_clean_run(spark, monkeypatch, fused):
+    """Crash window of the marker commit point: an incremental run dies
+    in commit_manifest AFTER advance_marker flipped LATEST. Resumed, it
+    reads the pre-run marker (in fused mode the marker read runs inside
+    the store step) and ends where an uninterrupted run ends: same
+    rows_in, kept store and marker, and the manifest still keeps the
+    previous run's listing for its exclusion read."""
+    shutil.rmtree(BASE, ignore_errors=True)
+    _write_sharded(400)
+    clean, torn = os.path.join(BASE, "clean"), os.path.join(BASE, "torn")
+
+    def run(out, rid):
+        cfg = PipelineConfig(
+            source_path=SRC, out_dir=out, run_id=rid, incremental=rid != "r1", fused=fused
+        )
+        return run_pipeline(spark, cfg)
+
+    run(clean, "r1")
+    shutil.copytree(clean, torn)
+    r1_listing = src_manifest.read_manifest(spark, torn)
+    _write_sharded(400, mutate_shard=3)
+    ref = run(clean, "r2")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after the marker flip")
+
+    with monkeypatch.context() as m:
+        m.setattr(src_manifest, "commit_manifest", crash)
+        with pytest.raises(RuntimeError, match="after the marker flip"):
+            run(torn, "r2")
+    latest = json.loads(open(os.path.join(torn, "_marker", "LATEST")).read())
+    assert latest["run_id"] == "r2"  # the crash landed after the flip
+    got = run(torn, "r2")
+    assert got["phases"]["store"]["rows_in"] == ref["phases"]["store"]["rows_in"] > 0
+    assert _kept_rows(spark, torn) == _kept_rows(spark, clean)
+    assert _read_marker_set(spark, torn) == _read_marker_set(spark, clean)
+    assert src_manifest.read_manifest(spark, torn, exclude_run_id="r2") == r1_listing
 
 
 def test_read_changed_files_preserves_partition_columns(spark):
@@ -292,33 +319,6 @@ def test_read_changed_files_preserves_partition_columns(spark):
     # empty change set keeps the schema too (footer-only scan)
     empty = src_manifest.read_changed_files(spark, src, [])
     assert "grp" in empty.columns and empty.count() == 0
-
-
-def test_torn_bootstrap_retry_keeps_legacy_pairs(spark):
-    """First marker advance on a legacy out_dir compacts the audit
-    baseline (prev=None). If that run crashes AFTER the pointer flip,
-    its retry must re-read the LEGACY audit — not an empty predecessor
-    — or every pre-marker pair is silently dropped."""
-    shutil.rmtree(BASE, ignore_errors=True)
-    _write_sharded(200)
-    out = os.path.join(BASE, "out_boot")
-    run_pipeline(spark, PipelineConfig(source_path=SRC, out_dir=out, run_id="r1"))
-    shutil.rmtree(os.path.join(out, "_marker"))  # pre-round-3 layout
-    # bootstrap advance by r2 (the torn first attempt: LATEST flipped)
-    lineage.advance_marker(
-        spark, out, "r2", _pairs_df(spark, [("new-1", "h1")])
-    )
-    assert len(_read_marker_set(spark, out)) == 201
-    # retry of r2: must see the legacy baseline (its first attempt's
-    # input), not an empty marker
-    retry_view = _read_marker_set(spark, out, exclude="r2")
-    assert len(retry_view) == 200 and "new-1" not in retry_view
-    # and the re-advance reproduces the full state, legacy included
-    lineage.advance_marker(
-        spark, out, "r2", _pairs_df(spark, [("new-1", "h1")])
-    )
-    final = _read_marker_set(spark, out)
-    assert len(final) == 201 and final["new-1"] == "h1"
 
 
 def test_read_kept_all_runs_empty_returns_none(spark):

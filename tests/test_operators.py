@@ -110,6 +110,58 @@ def test_building_the_plan_runs_no_job(spark, docs, op):
         dedup.release_pins()
 
 
+def _broadcast_exchanges(df) -> int:
+    """BroadcastExchange nodes of a collected frame's final adaptive
+    plan, the build plans of the cached relations it scans included
+    (each cached relation counted once, however often it is scanned)."""
+    n, stack, caches = 0, [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        p = stack.pop()
+        name = p.nodeName()
+        n += name == "BroadcastExchange"
+        if name == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(p.plan())
+        elif name == "InMemoryTableScan":
+            cached = p.relation().cachedPlan()
+            if not any(cached.equals(c) for c in caches):
+                caches.append(cached)
+                stack.append(cached)
+        else:
+            children = p.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+def test_simhash_broadcasts_the_survivor_mask_once(spark, corpus_1500):
+    """Broadcast regime: the hot-bucket guard adds ONE broadcast of the
+    per-doc survivor mask on top of the unguarded plan's index
+    broadcast (plus one of the hot-key set once a bucket is hot), and
+    where no bucket is hot it gives the unguarded rows."""
+    from gobulk_spark.operators.text import simhash, simhash_near_dups
+
+    path, pairs, _ = corpus_1500
+    sig = simhash(spark.read.parquet(path), "image_id", "caption")
+
+    def run(guard):
+        out = simhash_near_dups(
+            sig, "image_id", max_hamming=16, max_bucket_size=guard, n_rows=len(pairs)
+        )
+        try:
+            return sorted(map(tuple, out.collect())), _broadcast_exchanges(out)
+        finally:
+            dedup.release_pins()
+
+    off_rows, off_bx = run(None)
+    auto_rows, auto_bx = run("auto")
+    hot_rows, hot_bx = run(8)
+    assert off_rows and auto_rows == off_rows
+    assert auto_bx == off_bx + 1
+    assert len(hot_rows) < len(off_rows)  # precondition: buckets are hot
+    assert hot_bx == off_bx + 2
+
+
 def test_phash_banding_finds_planted_duplicates(spark, corpus_1500):
     path, pairs, planted = corpus_1500
     src = spark.read.parquet(path)
