@@ -13,15 +13,18 @@ module re-expresses that contract over the kept parquet store:
   be parsed is routed, never executed (issue.go:137-146).
 - execute: Deletes first (prior kept rows of update∪delete ids are
   removed via staged directory rewrite), then Updates+Creates land
-  together as this run's kept append. Omits and issues touch only the
-  audit table.
+  together as this run's kept append. On a merge-capable sink the D
+  step runs inside the merge: one commit replaces the updated ids,
+  removes the deleted ones and appends the creates. Omits and issues
+  touch only the audit table.
 
 ``store`` runs the whole step — classify, execute, audit, metrics,
 marker — for a batch run and for a streaming epoch alike: gobulk has one
 Executor for both its one-sweep and its listen-loop modes
 (runner.go:90-105).
 
-Retry note: on a crashed store-phase retry after the delete step ran,
+Retry note: on a crashed store-phase retry after the delete step (or
+the merge commit) ran,
 re-classification sees the prior rows already gone and yields
 create/omit instead of update/delete. The kept-store END STATE is
 identical (the execution is idempotent); only the audit action label
@@ -87,11 +90,10 @@ def dedup_exact_redeliveries(decided: DataFrame, probe: tuple[int, int]) -> Data
     return decided.dropDuplicates(["image_id", "content_hash"])
 
 
-def probe_decided(decided: DataFrame) -> tuple[int, int, int, int, int, int]:
+def probe_decided(decided: DataFrame) -> tuple[int, int, int, int, int]:
     """One aggregate job answering every pre-store scalar probe:
     (n_rows, n_distinct (id, hash) keys, n update/delete rows,
-    n PURE delete rows, n distinct KEPT (id, hash) pairs, n distinct
-    KEPT ids).
+    n distinct KEPT (id, hash) pairs, n distinct KEPT ids).
 
     The first action over the freshly-persisted decided frame pays the
     full parse compute to populate the cache; folding the re-delivery
@@ -99,17 +101,15 @@ def probe_decided(decided: DataFrame) -> tuple[int, int, int, int, int, int]:
     fixed per-epoch job count down (the round-3 streaming profile:
     ~6 fixed jobs made a 7 s epoch floor at 5k rows). n_affected is
     probed PRE-dedup: dropping an exact duplicate copy never changes
-    whether any update/delete row exists. The pure-delete count gates
-    the Delete verb on merge-capable sinks, where updates are replaced
-    inside the merge commit and only true removals still need D. The
-    kept pair/id counts gate resolve_conflicting_ids: pairs > ids
-    means one id carries two different kept contents in this batch."""
+    whether any update/delete row exists. n_affected gates the D step
+    (and, on a merge sink, a delete-only merge). The kept pair/id
+    counts gate resolve_conflicting_ids: pairs > ids means one id
+    carries two different kept contents in this batch."""
     kept = F.col("action").isin("update", "create")
-    n_rows, n_keys, n_affected, n_pure, n_kept_pairs, n_kept_ids = decided.select(
+    n_rows, n_keys, n_affected, n_kept_pairs, n_kept_ids = decided.select(
         F.count(F.lit(1)),
         F.count_distinct("image_id", "content_hash"),
         F.sum(F.col("action").isin("update", "delete").cast("long")),
-        F.sum((F.col("action") == "delete").cast("long")),
         F.count_distinct(F.when(kept, F.struct("image_id", "content_hash"))),
         F.count_distinct(F.when(kept, F.col("image_id"))),
     ).first()
@@ -117,7 +117,6 @@ def probe_decided(decided: DataFrame) -> tuple[int, int, int, int, int, int]:
         n_rows,
         n_keys,
         int(n_affected or 0),
-        int(n_pure or 0),
         int(n_kept_pairs or 0),
         int(n_kept_ids or 0),
     )
@@ -202,17 +201,12 @@ def classify_actions(decided: DataFrame, existing_ids: DataFrame | None) -> Data
 
 
 def execute_deletes(
-    spark: SparkSession,
-    sink,
-    run_id: str,
-    decided: DataFrame,
-    actions: tuple[str, ...] = ("update", "delete"),
+    spark: SparkSession, sink, run_id: str, decided: DataFrame
 ) -> None:
-    """The D step: remove prior kept rows for every ``actions`` id
-    through the sink's Delete verb (sinks.KeptSink). Merge-capable
-    sinks narrow this to ("delete",): updated ids are replaced inside
-    the merge commit itself."""
-    affected = decided.where(F.col("action").isin(*actions)).select(
+    """The D step of a sink that cannot merge: remove prior kept rows
+    of every update and delete id through the sink's Delete verb
+    (sinks.KeptSink)."""
+    affected = decided.where(F.col("action").isin("update", "delete")).select(
         "image_id"
     )
     sink.delete(spark, run_id, affected)
@@ -375,37 +369,28 @@ def store(
     # question below
     decided = classify_actions(decided, existing).persist()
     cached = decided  # unpersist on a derived frame is a no-op
-    n_rows, n_keys, n_affected, n_pure_del, n_kept_pairs, n_kept_ids = probe_decided(
-        decided
-    )
+    n_rows, n_keys, n_affected, n_kept_pairs, n_kept_ids = probe_decided(decided)
     decided = dedup_exact_redeliveries(decided, probe=(n_rows, n_keys))
     # distinct-content siblings of one id: deterministic winner, losers
     # become issue rows — a merge sink would otherwise refuse the
     # duplicate-key upsert (a poison pill for a stream, whose checkpoint
     # re-delivers the failing epoch forever)
     decided = resolve_conflicting_ids(decided, probe=(n_kept_pairs, n_kept_ids))
-    # A merge-capable sink replaces updated ids INSIDE the upsert
-    # commit, so D narrows to pure deletes — one commit instead of two,
-    # and a reader never sees an updated id deleted but not rewritten
+    # A merge-capable sink runs D inside its one upsert commit, so a
+    # reader never sees an updated id deleted but not rewritten
     use_merge = hasattr(sink, "merge")
     staged = None
-    if n_affected:
+    if n_affected and not use_merge:
         # MATERIALIZE before the delete step: decided's lineage reads
         # the kept files the deletes swap out, and a lost cached
-        # partition would recompute from deleted files. With no
-        # update/delete rows nothing swaps, and this extra pass is
-        # skipped
+        # partition would recompute from deleted files. A merge sink
+        # needs no copy: its commits never delete data files (only
+        # vacuum does) and existing_ids reads a fixed file list
         staged = lineage.stage_dir(out_dir, run_id, "decided")
         decided.write.mode("overwrite").parquet(staged)
         cached.unpersist()
         decided = spark.read.parquet(staged)
-        if not use_merge:
-            _sub("delete", lambda: execute_deletes(spark, sink, run_id, decided))
-        elif n_pure_del:
-            _sub(
-                "delete",
-                lambda: execute_deletes(spark, sink, run_id, decided, actions=("delete",)),
-            )
+        _sub("delete", lambda: execute_deletes(spark, sink, run_id, decided))
     if extra_kept is not None:
         extra_kept = extra_kept.join(
             decided.select("image_id").distinct(), "image_id", "left_anti"
@@ -431,9 +416,18 @@ def store(
     failed = None
     if not use_merge:
         failed = failures_frame(spark, _sub("write_kept", lambda: sink.write(rows, run_id)))
-    elif n_kept_pairs or (extra_kept is not None and not extra_kept.isEmpty()):
-        # an empty merge would grow the log by a no-op commit per idle run
-        _sub("merge_kept", lambda: sink.merge(spark, run_id, rows))
+    else:
+        lands = n_kept_pairs or (extra_kept is not None and not extra_kept.isEmpty())
+        # an idle run merges nothing: an empty merge would grow the log
+        # by a no-op commit per run
+        if lands or n_affected:
+            deletes = decided.where(F.col("action") == "delete").select("image_id")
+            _sub(
+                "merge_kept",
+                lambda: sink.merge(
+                    spark, run_id, rows if lands else None, deletes=deletes
+                ),
+            )
     n_failed = failed.count() if failed is not None else 0
     failed_ids = failed_rows = None
     if failed is not None:

@@ -20,9 +20,11 @@ spec's snapshot/manifest model), sized to this engine's needs:
   delete rewrite gobulk's executor runs against SQL stores
   (output/gorm.go:114-152) and ParquetKeptSink approximates with
   directory swaps;
-- MERGE upsert: ``merge`` replaces matched keys and appends the rest
-  in ONE atomic remove+add commit (Delta's MERGE INTO), duplicate
-  source keys refused;
+- MERGE upsert: ``merge`` replaces matched keys, removes the run's
+  delete keys from prior runs' rows and appends the rest in ONE atomic
+  remove+add commit (Delta's MERGE INTO with a WHEN MATCHED DELETE
+  clause), so a pipeline re-import is one log entry; duplicate source
+  keys refused. ``delete`` is the same step without update rows;
 - time travel: ``read(version=N)`` replays a prefix of the log;
 - schema-in-log: ``validate`` diffs the declared schema against the
   log's recorded schema — no data files are opened to reject a
@@ -1516,121 +1518,113 @@ class TxLogKeptSink:
     def delete(self, spark: SparkSession, run_id: str, keys: DataFrame) -> None:
         """MERGE-shaped delete of ``keys`` from prior runs' rows — the
         same prior-runs-only semantics as ``ParquetKeptSink.delete``: a
-        row stamped by ``run_id`` itself is never a victim. The
-        touched-file rewrite finds the files that actually contain
-        victims (one semi-join over the live set), rewrites ONLY those
-        without the victim rows, and swaps old-for-new in one commit.
-        Optimistic concurrency: if another commit lands between the
-        snapshot and ours, the file set is re-derived and the rewrite
-        re-runs against the new snapshot."""
-        keys = keys.select("image_id").distinct()
-        marked = keys.withColumn("_victim", F.lit(True))
-
-        def derive(snap):
-            live, _, base_version, schema = snap
-            if not base_version or not live:
-                return None
-            # dynamic file pruning: a small victim set probes the log's
-            # stats + blooms and scans only candidate files
-            removed, add_map, staged = self._rewrite_touched(
-                spark,
-                self._dfp_candidates(spark, live, schema, keys, "image_id"),
-                schema,
-                f"data/rw-{run_id}",
-                victims=lambda d: d.join(keys, "image_id", "left_semi").where(
-                    F.col("run") != run_id
-                ),
-                # ONE read of the affected files: a row survives unless
-                # it matches a victim key AND was stamped by another
-                # run — the broadcast-left-join marker replaces an
-                # anti-join + semi-join pair that scanned every
-                # affected file twice
-                survivors=lambda d: d.join(marked, "image_id", "left")
-                .where(F.col("_victim").isNull() | (F.col("run") == run_id))
-                .drop("_victim"),
-            )
-            if not removed:
-                return None
-            return (
-                self._entry(spark, "delete", run_id, add_map, removed, schema),
-                staged,
-            )
-
-        self._mutate(spark, "delete", derive)
+        row stamped by ``run_id`` itself is never a victim. Only the
+        files that actually hold a victim are rewritten, swapped
+        old-for-new in one ``op: delete`` commit (``_upsert``)."""
+        self._upsert(spark, "delete", run_id, None, keys, "image_id")
 
     def merge(
         self,
         spark: SparkSession,
         run_id: str,
-        updates: DataFrame,
+        updates: DataFrame | None,
         key: str = "image_id",
+        deletes: DataFrame | None = None,
     ) -> None:
-        """Delta MERGE-shaped upsert in ONE commit: every ``updates``
-        row whose ``key`` exists in the live table REPLACES that row
-        (whichever run stamped it — matched files are rewritten without
-        the old rows, one semi-join finds them); the rest append. The
-        whole upsert — bystander rewrites + the update rows — lands as
-        one atomic remove+add entry, so readers never see the deleted
-        half without the inserted half (the pipeline's two-commit
-        delete-then-write re-delivery is visible in between; MERGE is
-        not). Duplicate source keys are refused, as Delta refuses
-        multiple-match MERGEs: 'last writer wins among the updates' is
-        a silent data bug, not a semantics.
+        """Delta MERGE-shaped upsert + delete in ONE commit: every
+        ``updates`` row whose ``key`` exists in the live table REPLACES
+        that row (whichever run stamped it); the rest append. Every
+        ``deletes`` key removes its rows stamped by PRIOR runs (the
+        ``delete`` rule). The bystander rewrites, the removals and the
+        update rows land as one atomic remove+add entry, so a reader
+        never sees one half of a re-import without the other. With
+        ``updates`` None nothing lands. Duplicate source keys are
+        refused, as Delta refuses multiple-match MERGEs: 'last writer
+        wins among the updates' is a silent data bug, not a semantics.
 
-        OCC like delete: derived from a snapshot, committed against
-        exactly that version, re-derived on a race (a merge into an
-        empty table appends blindly). Cites gobulk's upsert path
-        (output/gorm.go:78-112, ON CONFLICT DO UPDATE) — here expressed
-        as the file-rewrite form a log-structured table needs."""
-        dup = (
-            updates.groupBy(key).count().where(F.col("count") > 1).limit(1)
-        ).collect()
-        if dup:
-            raise ValueError(
-                f"merge source has duplicate {key}={dup[0][key]!r}: "
-                "a multiple-match upsert is ambiguous"
-            )
-        out = updates.withColumn("run", F.lit(run_id))
-        df_fields = {
-            f.name: f.dataType.simpleString() for f in out.schema.fields
-        }
-        keys = updates.select(key).distinct()
+        Cites gobulk's upsert path (output/gorm.go:78-152, ON CONFLICT
+        DO UPDATE plus the run's deletes) — here expressed as the
+        file-rewrite form a log-structured table needs."""
+        if updates is not None:
+            dup = (
+                updates.groupBy(key).count().where(F.col("count") > 1).limit(1)
+            ).collect()
+            if dup:
+                raise ValueError(
+                    f"merge source has duplicate {key}={dup[0][key]!r}: "
+                    "a multiple-match upsert is ambiguous"
+                )
+        self._upsert(spark, "merge", run_id, updates, deletes, key)
+
+    def _upsert(self, spark, op, run_id, updates, deletes, key):
+        """The one derive behind ``delete`` and ``merge``. ``_any_run``
+        marks each touched key: True for an update key (its rows from
+        any run are replaced), False for a delete-only key (only rows
+        of other runs go). One touched-file probe finds the files
+        holding a victim and one ``_mutate`` commits the rewrites plus
+        the landed ``updates``. OCC: derived from a snapshot, committed
+        against exactly that version, re-derived on a race (a commit
+        into an empty table is blind)."""
+        from functools import reduce
+
+        marks = [
+            f.select(key).withColumn("_any_run", F.lit(upd))
+            for f, upd in ((updates, True), (deletes, False))
+            if f is not None
+        ]
+        if not marks:
+            return
+        marked = (
+            reduce(DataFrame.unionByName, marks)
+            .groupBy(key)
+            .agg(F.max("_any_run").alias("_any_run"))
+        )
+        keys = marked.select(key)
+        victim = F.col("_any_run") | (F.col("run") != run_id)
+        out = df_fields = None
+        if updates is not None:
+            out = updates.withColumn("run", F.lit(run_id))
+            df_fields = {
+                f.name: f.dataType.simpleString() for f in out.schema.fields
+            }
 
         def derive(snap):
             live, _, _, log_schema = snap
-            schema_ddl = self._union_schema(
-                spark, log_schema, df_fields, run_id
-            )
-            # land the update rows (always a fresh dir: merge files are
-            # never the supersede target a write's run-dir is)
-            new_rel = f"data/mrg-{run_id}-{uuid.uuid4().hex[:8]}"
-            add_map = self._land(spark, out, new_rel)
-            appended = sorted(add_map)
-            # matched files: dynamic file pruning bounds the candidates
-            # (a small update set probes the log's stats + blooms), then
-            # the touched-file probe finds exactly the files holding a
-            # matched key; the bystander rewrite drops the matched rows
-            removed, rewrites, staged = self._rewrite_touched(
+            add_map, staged, extra = {}, [], {}
+            schema = log_schema
+            if out is not None:
+                schema = self._union_schema(spark, log_schema, df_fields, run_id)
+                # a fresh dir: merge files are never the supersede
+                # target a write's run-dir is
+                new_rel = f"data/mrg-{run_id}-{uuid.uuid4().hex[:8]}"
+                add_map = self._land(spark, out, new_rel)
+                staged.append(self._abs(new_rel))
+            if op == "merge":
+                # the change feed's inserts (read_changes)
+                extra["appended"] = sorted(add_map)
+            # dynamic file pruning bounds the candidates (a small key set
+            # probes the log's stats + blooms); ONE read of the touched
+            # files keeps a row unless it is a victim — the left-join
+            # marker replaces an anti-join + semi-join pair
+            removed, rewrites, rw_staged = self._rewrite_touched(
                 spark,
                 self._dfp_candidates(spark, live, log_schema, keys, key),
                 log_schema,
-                f"data/mrgrw-{run_id}",
-                victims=lambda d: d.join(keys, key, "left_semi"),
-                survivors=lambda d: d.join(keys, key, "left_anti"),
+                f"data/rw-{run_id}",
+                victims=lambda d: d.join(marked, key).where(victim),
+                survivors=lambda d: d.join(marked, key, "left")
+                .where(F.col("_any_run").isNull() | ~victim)
+                .drop("_any_run"),
             )
+            if not removed and out is None:
+                return None
             add_map.update(rewrites)
             entry = self._entry(
-                spark, "merge", run_id, add_map, removed, schema_ddl,
-                # feed contract: inserts = the update rows' files;
-                # deletes = removed rows minus BYSTANDER rewrites
-                # (never minus the updates — an update identical to
-                # its old row must still feed as delete+insert or
-                # the multiset reconstruction drifts)
-                appended=appended,
+                spark, op, run_id, add_map, removed, schema, **extra
             )
-            return entry, [self._abs(new_rel), *staged]
+            return entry, staged + rw_staged
 
-        self._mutate(spark, "merge", derive, lambda snap, e: not snap[2])
+        self._mutate(spark, op, derive, lambda snap, e: not snap[2])
 
     def read(
         self,
@@ -2012,10 +2006,9 @@ class TxLogKeptSink:
           emits deletes for its superseded prior rows (both the
           wholesale-superseded files and its rows purged out of rewrite
           files) — re-delivery made explicit, exactly once per retry.
-        - delete: deletes = removed rows minus rewritten-survivor rows
-          (multiset difference via ``exceptAll``).
-        - merge: deletes = matched pre-image rows (removed minus the
-          bystander rewrites); inserts = the update rows.
+        - merge and delete: deletes = removed rows minus the rewritten
+          survivors (multiset difference via ``exceptAll``); inserts =
+          the ``appended`` update files (a delete appends none).
         - optimize: no logical change, nothing emitted.
         - restore: re-added files' rows as inserts, dropped files'
           rows as deletes — a rollback is a logical change.
@@ -2066,17 +2059,15 @@ class TxLogKeptSink:
                             v,
                         )
                     )
-            elif e["op"] == "delete":
-                deletes = rows(removed).exceptAll(rows(adds))
-                frames.append(tag(deletes, "delete", v))
-            elif e["op"] == "merge":
+            elif e["op"] in ("delete", "merge"):
+                # a delete entry is a merge entry that appended nothing
                 appended = set(e.get("appended", ()))
                 rewrites = [p for p in adds if p not in appended]
                 if removed:
-                    # matched pre-image rows = removed minus BYSTANDER
-                    # rewrites only — subtracting the update files too
-                    # would cancel an update identical to its old row
-                    # and break the multiset reconstruction
+                    # victim rows = removed minus the REWRITES only —
+                    # subtracting the update files too would cancel an
+                    # update identical to its old row and break the
+                    # multiset reconstruction
                     old = rows(removed)
                     frames.append(
                         tag(

@@ -244,8 +244,9 @@ def test_validate_rejects_mismatched_schema_from_log_only(spark):
 
 def test_incremental_second_run_only_changed_rows(spark):
     """The marker/lineage tier composes with the txlog sink: an
-    unchanged re-delivery imports nothing; a changed shard re-imports
-    only its rows via delete+write commits."""
+    unchanged re-delivery imports nothing and commits nothing. (Changed
+    rows re-import through one merge commit; tests/test_update_delete.py
+    pins that.)"""
     shutil.rmtree(BASE, ignore_errors=True)
     src = _src(150, seed=33)
     out = os.path.join(BASE, "inc")
@@ -449,30 +450,37 @@ from hypothesis import strategies as st  # noqa: E402
 _IDS = ["a", "b", "c", "d", "e"]
 _RUNS = ["r1", "r2", "r3"]
 
+# (kind, run, ids, delete ids): only merge carries delete ids; a merge
+# with no ids is a delete-only merge (``updates`` None)
 _op = st.one_of(
     st.tuples(
         st.just("write"),
         st.sampled_from(_RUNS),
         st.lists(st.sampled_from(_IDS), min_size=1, max_size=4, unique=True),
+        st.just([]),
     ),
     st.tuples(
         st.just("delete"),
         st.sampled_from(_RUNS),
         st.lists(st.sampled_from(_IDS), min_size=1, max_size=3, unique=True),
+        st.just([]),
     ),
     st.tuples(
         st.just("merge"),
         st.sampled_from(_RUNS),
-        st.lists(st.sampled_from(_IDS), min_size=1, max_size=3, unique=True),
+        st.lists(st.sampled_from(_IDS), min_size=0, max_size=3, unique=True),
+        st.lists(st.sampled_from(_IDS), min_size=0, max_size=3, unique=True),
     ),
     st.tuples(
         st.just("optimize"),
         st.just(""),
         st.just([]),
+        st.just([]),
     ),
     st.tuples(
         st.just("restore"),
         st.just(""),
+        st.just([]),
         st.just([]),
     ),
 )
@@ -482,9 +490,11 @@ _op = st.one_of(
 @given(ops=st.lists(_op, min_size=2, max_size=6))
 def test_txlog_random_op_sequences_match_model(spark, ops):
     """Model-based check of the commit-log replay semantics: apply a
-    random write/delete sequence to the sink AND to a flat reference
-    model (write(rid, rows) supersedes rid's prior write contribution;
-    delete(rid, keys) removes victim rows stamped by OTHER runs), then
+    random op sequence to the sink AND to a flat reference model
+    (write(rid, rows) supersedes rid's prior write contribution;
+    delete(rid, keys) removes victim rows stamped by OTHER runs;
+    merge(rid, rows, deletes) replaces the rows' keys from any run and
+    applies the delete rule to its delete keys, in one commit), then
     require (a) the live table to equal the model after every op and
     (b) time travel to reproduce the model's state as of EVERY commit."""
     import uuid as _uuid
@@ -502,7 +512,7 @@ def test_txlog_random_op_sequences_match_model(spark, ops):
             else {(r["image_id"], r["run"]) for r in df.collect()}
         )
 
-    for kind, rid, ids in ops:
+    for kind, rid, ids, del_ids in ops:
         if kind == "optimize":
             # content-preserving by contract: the model does not change
             if sink.optimize(spark, target_file_bytes=1 << 30) == 0:
@@ -529,12 +539,26 @@ def test_txlog_random_op_sequences_match_model(spark, ops):
             df = spark.createDataFrame(
                 [(i, "x", 2) for i in ids], "image_id string, lang string, v int"
             )
-            sink.merge(spark, rid, df)
+            before = len(sink.history(spark))
+            sink.merge(
+                spark,
+                rid,
+                df if ids else None,
+                deletes=spark.createDataFrame(
+                    [(i,) for i in del_ids], "image_id string"
+                ),
+            )
             # upsert: matched keys replaced whatever run stamped them,
-            # the rest appended
-            model = [(i, r) for (i, r) in model if i not in ids] + [
-                (i, rid) for i in ids
-            ]
+            # the rest appended; delete keys drop other runs' rows
+            model = [
+                (i, r)
+                for (i, r) in model
+                if i not in ids and not (i in del_ids and r != rid)
+            ] + [(i, rid) for i in ids]
+            if len(sink.history(spark)) == before:
+                assert not ids  # a merge with update rows always commits
+                assert table() == set(model)
+                continue
         else:
             before = len(sink.history(spark))
             sink.delete(
