@@ -21,4 +21,9 @@ as DataFrame operations; Python appears only inside Arrow-vectorized
 pandas stages (model scoring, image decode, regex scrub).
 """
 
+from .deploy import gate_zip_invalidation
+
 __version__ = "0.1.0"
+
+# on import, so the first UDF unpickle in each Python worker installs it
+gate_zip_invalidation()

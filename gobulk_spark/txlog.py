@@ -1574,12 +1574,11 @@ class TxLogKeptSink:
         ]
         if not marks:
             return
-        marked = (
+        marker = (
             reduce(DataFrame.unionByName, marks)
             .groupBy(key)
             .agg(F.max("_any_run").alias("_any_run"))
         )
-        keys = marked.select(key)
         victim = F.col("_any_run") | (F.col("run") != run_id)
         out = df_fields = None
         if updates is not None:
@@ -1602,13 +1601,18 @@ class TxLogKeptSink:
             if op == "merge":
                 # the change feed's inserts (read_changes)
                 extra["appended"] = sorted(add_map)
+            # the key collect, the victim probe and the rewrite all read
+            # the marker: aggregate it once (an empty table reads none)
+            marked = marker.localCheckpoint() if live else marker
             # dynamic file pruning bounds the candidates (a small key set
             # probes the log's stats + blooms); ONE read of the touched
             # files keeps a row unless it is a victim — the left-join
             # marker replaces an anti-join + semi-join pair
             removed, rewrites, rw_staged = self._rewrite_touched(
                 spark,
-                self._dfp_candidates(spark, live, log_schema, keys, key),
+                self._dfp_candidates(
+                    spark, live, log_schema, marked.select(key), key
+                ),
                 log_schema,
                 f"data/rw-{run_id}",
                 victims=lambda d: d.join(marked, key).where(victim),
