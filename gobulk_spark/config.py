@@ -4,7 +4,9 @@ gobulk analogue: the Format's knobs (format.go:36-44 bulk sizes,
 format.go:132-138 error policy, format.go:20-21 NewIterationOnRestart).
 Spark owns task sizing, so the bulk-size knobs are Spark session
 settings (Arrow batch size and shuffle partition count, set by
-session.get_spark or the job's CLI), not fields here.
+session.get_spark or the job's CLI), not fields here. The parse input's
+layout (salted spread, dup-list broadcast cap) is fixed by constants in
+sources/scan.py, shared by batch runs and stream epochs.
 """
 
 from __future__ import annotations
@@ -29,15 +31,6 @@ class PipelineConfig:
     # skip rows already processed by earlier runs in the same out_dir
     # (gobulk marker / LastTrackedContainer semantics)
     incremental: bool = False
-    # salted repartition of the expensive parse stage: phash buckets x salt
-    phash_buckets: int = 64
-    salt_buckets: int = 8
-    # broadcast the duplicate-id list when it has at most this many rows
-    # (falls back to a shuffle join above it). A row cap, not Spark's
-    # byte sizing: the other side of this anti-join carries the image
-    # bytes, which a shuffled join would move, and the row count comes
-    # free from the scan-audit write (no extra job)
-    dup_broadcast_max: int = 5_000_000
     # fused throughput mode: parse is not staged to parquet, it fuses
     # into the store job (decided frame cached for the three writes).
     # Resume granularity coarsens from per-phase to per-run.

@@ -11,6 +11,7 @@ Phase map (gobulk step.go:6-19 → here):
   listener/reader → 'scan'  : source scan, marker anti-join, hash dedup
   parser          → 'parse' : salted repartition + mapInPandas features
   planner/executor→ 'store' : JVM rule chain, kept/audit/metrics writes
+  (scan and parse run the same ``sources.scan`` steps as a stream epoch)
 
 Scale design notes are inline; the short version: the binary column is
 pruned or consumed everywhere before any shuffle, the only wide shuffle
@@ -34,18 +35,6 @@ from .plan import decision_columns
 from .sinks import KeptSink, ParquetKeptSink
 from .sources import manifest as src_manifest
 from .sources import scan as src_scan
-from .stages import PARSE_OUTPUT_SCHEMA, make_parse_stage
-
-def _salted_repartition(df: DataFrame, cfg: PipelineConfig, n_partitions: int) -> DataFrame:
-    """Spread hot phash buckets before the expensive Python stage.
-
-    Deterministic salt from image_id (not rand()) so retried tasks
-    produce identical partitioning — gobulk's stable re-sort concern
-    (parser.go:92-94) solved by keying instead of ordering.
-    """
-    bucket = F.pmod(F.col("phash"), F.lit(cfg.phash_buckets))
-    salt = F.pmod(F.abs(F.xxhash64("image_id")), F.lit(cfg.salt_buckets))
-    return df.repartition(n_partitions, bucket, salt)
 
 
 def run_pipeline(
@@ -91,32 +80,19 @@ def run_pipeline(
     scan_set = src_manifest.run_scan_set(spark, out, rid, cfg.source_path)
 
     def _source_frame() -> DataFrame:
-        if cfg.incremental:
-            src = src_manifest.read_changed_files(
-                spark, cfg.source_path, scan_set["changed"]
-            )
-        else:
-            src = src_scan.read_source(spark, cfg.source_path)
-        return src_scan.with_content_hash(src)
+        """The run's unprocessed rows: the whole source on a full run,
+        the changed files minus the marker on an incremental one."""
+        if not cfg.incremental:
+            return src_scan.with_content_hash(src_scan.read_source(spark, cfg.source_path))
+        src = src_manifest.read_changed_files(spark, cfg.source_path, scan_set["changed"])
+        return src_scan.unprocessed(spark, src_scan.with_content_hash(src), out, rid)
 
-    scan_audit_path = lineage.audit_leaf(out, "scan", rid)
     ck = cfg.resume and lineage.phase_committed(out, rid, "scan")
     if not ck:
         if (p := _pause_check("scan")) is not None:
             return p
         t0 = time.time()
         src = _source_frame()
-        if cfg.incremental:
-            # marker keys on the LATEST content_hash per id: a
-            # re-scanned id with NEW (or reverted) content passes the
-            # anti-join and re-enters as an update/delete (gobulk
-            # tracker/gorm.go:441-449 re-tracks per iteration). The
-            # marker advances only at store commit; read with THIS run
-            # excluded it shows the pre-run state even after a torn
-            # advance, so a retried scan sees the first attempt's input.
-            marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
-            if marker is not None:
-                src = src.join(marker, ["image_id", "content_hash"], "left_anti")
         # narrow-projection dedup: Catalyst prunes the scan to 3 columns;
         # source_file rides along so the audit needs no join back
         n_dups = src_scan.audit_duplicates(src, out, rid)
@@ -142,24 +118,7 @@ def run_pipeline(
     feats_path = lineage.stage_dir(out, rid, "features")
 
     def _parse_frame() -> DataFrame:
-        """The (lazy) parse DataFrame: marker/dup anti-join -> salted
-        repartition -> Arrow parse stage."""
-        src = _source_frame()
-        if cfg.incremental:
-            # the marker with this run excluded: its pre-run state, so
-            # a fused-mode retry after a crashed store is not masked by
-            # its own torn advance
-            marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
-            if marker is not None:
-                src = src.join(marker, ["image_id", "content_hash"], "left_anti")
-        if n_dups:  # dup ids come from the committed scan-audit partition
-            dups = spark.read.parquet(scan_audit_path)
-            src = src_scan.anti_join_ids(src, dups, broadcast=n_dups <= cfg.dup_broadcast_max)
-        n_part = spark.sparkContext.defaultParallelism * 2
-        salted = _salted_repartition(src, cfg, n_part)
-        return salted.mapInPandas(
-            make_parse_stage(cfg.stop_on_error), schema=PARSE_OUTPUT_SCHEMA
-        )
+        return src_scan.parse_input(spark, _source_frame(), out, rid, n_dups, cfg.stop_on_error)
 
     ck = cfg.resume and lineage.phase_committed(out, rid, "parse")
     if cfg.fused:

@@ -8,9 +8,13 @@ bulk, each micro-batch is one Reader->Parser->Planner->Executor sweep,
 and Spark's checkpointLocation replaces the tracker's marker.
 
 ``foreachBatch`` reuses the *batch* stage functions unchanged — one code
-path for both modes (the engine contract, not two engines): the scan
-dedup audit, the parse stage, the plan and ``executor.store``. What is
-streaming's own is the retry queue (below) and post-epoch maintenance.
+path for both modes (the engine contract, not two engines): the marker
+anti-join, then the dedup audit of what is left, then the parse input
+(``sources.scan.unprocessed``, ``audit_duplicates``, ``parse_input``),
+the plan and ``executor.store``. An epoch thus applies the marker before
+dedup, as a batch run does, and gets the same answer for the same input.
+What is streaming's own is the ``source_file`` stamp, the retry queue
+(below) and post-epoch maintenance.
 """
 
 from __future__ import annotations
@@ -20,12 +24,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import executor, lineage
+from .. import executor
 from ..config import PipelineConfig
 from ..plan import decision_columns
 from ..sinks import KeptSink, ParquetKeptSink
 from ..sources import scan as src_scan
-from ..stages import PARSE_OUTPUT_SCHEMA, make_parse_stage
 
 SOURCE_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -93,19 +96,7 @@ def _read_retry_queue(
     ]
     if not dirs:
         return None, [], 1
-    # mergeSchema: a queue staged by a pre-stamp version of this code
-    # has no retry_epoch column (and a mixed root has it in SOME dirs);
-    # those rows drain as epoch 0 — strictly older than anything the
-    # stamped code writes (stamps start at 1), so latest-wins holds
-    raw = spark.read.option("mergeSchema", "true").parquet(
-        *[_join(root, d) for d in dirs]
-    )
-    if "retry_epoch" not in raw.columns:
-        raw = raw.withColumn("retry_epoch", F.lit(0).cast("long"))
-    else:
-        raw = raw.withColumn(
-            "retry_epoch", F.coalesce(F.col("retry_epoch"), F.lit(0).cast("long"))
-        )
+    raw = spark.read.parquet(*[_join(root, d) for d in dirs])
     next_seq = int(raw.agg(F.max("retry_epoch")).first()[0] or 0) + 1
     w = Window.partitionBy("image_id").orderBy(
         F.col("retry_epoch").desc(), F.col("content_hash").desc()
@@ -136,34 +127,19 @@ def _process_microbatch(
     if not consumed and batch.isEmpty():
         return
     # input_file_name() returns '' (not NULL) inside foreachBatch, so a
-    # plain coalesce never falls back — nullif first
+    # plain coalesce never falls back — nullif first. Stamped on the scan
+    # itself: input_file_name() is undefined after a shuffle.
     src = src_scan.with_content_hash(
         batch.withColumn(
             "source_file",
             F.coalesce(F.nullif(F.input_file_name(), F.lit("")), F.lit("stream")),
         )
     )
-    # in-batch content dedup (cross-batch dedup = the marker check)
+    # the batch scan-and-parse steps: marker anti-join (cross-batch
+    # dedup), then in-batch content dedup of what is left
+    src = src_scan.unprocessed(spark, src, out, rid)
     n_dups = src_scan.audit_duplicates(src, out, rid)
-    # compacted marker on the LATEST content_hash per id: changed (or
-    # reverted) content re-enters as an update. The marker pointer
-    # advances only at the END of the store step and is stamped with
-    # its epoch, so a foreachBatch RETRY of the same epoch reads the
-    # pre-epoch state — never masked by its own torn advance.
-    marker = lineage.processed_keys(spark, out, exclude_run_id=rid)
-    if marker is not None:
-        src = src.join(marker, ["image_id", "content_hash"], "left_anti")
-    if n_dups:
-        # an AvailableNow drain with no maxFilesPerTrigger can make one
-        # epoch of the entire backlog: the dup list gets the same
-        # broadcast guard as the batch pipeline
-        dups = spark.read.parquet(lineage.audit_leaf(out, "scan", rid))
-        src = src_scan.anti_join_ids(
-            src, dups, broadcast=n_dups <= cfg.dup_broadcast_max
-        )
-    feats = src.mapInPandas(
-        make_parse_stage(cfg.stop_on_error), schema=PARSE_OUTPUT_SCHEMA
-    )
+    feats = src_scan.parse_input(spark, src, out, rid, n_dups, cfg.stop_on_error)
     # dead-letter drain: the stream checkpoint has already consumed the
     # source files of previously-failed rows, so — unlike batch, where
     # manifest withholding forces a source re-read — the ONLY in-stream

@@ -1,12 +1,10 @@
-import sys, io
+import sys, io, tempfile
 sys.path.insert(0,"/root/repo")
 from gobulk_spark.session import get_spark
 from gobulk_spark.sources import scan as src_scan
-from gobulk_spark.stages import PARSE_OUTPUT_SCHEMA, make_parse_stage
-from gobulk_spark.pipeline import _salted_repartition
+from gobulk_spark import lineage
 from gobulk_spark.plan import decision_columns
 from gobulk_spark.rules import DEFAULT_THRESHOLDS
-from gobulk_spark.config import PipelineConfig
 import __spark_entry__ as em
 import pandas as pd
 from pyspark.sql import functions as F
@@ -27,9 +25,9 @@ sections.append(("Dedup decision (scan phase)",
   fmt(src_scan.find_duplicates(src, carry=("source_file",)))))
 
 dups = spark.createDataFrame(pd.DataFrame({"image_id": ["img-00000001"]}))
-cfg = PipelineConfig(source_path="x", out_dir="y")
-feats = _salted_repartition(src_scan.anti_join_ids(src, dups, True), cfg, 16).mapInPandas(
-    make_parse_stage(False), schema=PARSE_OUTPUT_SCHEMA)
+dup_out = tempfile.mkdtemp(prefix="gobulk_plans_")
+dups.write.parquet(lineage.audit_leaf(dup_out, "scan", "r1"))  # the scan phase's dup list
+feats = src_scan.parse_input(spark, src, dup_out, "r1", n_dups=1, stop_on_error=False)
 sections.append(("Parse job (dup anti-join -> salted repartition -> Arrow stage)",
   "One BroadcastHashJoin (LeftAnti) removes duplicates without shuffling the wide rows; "
   "the single non-broadcast Exchange is the deliberate salted repartition on "

@@ -12,8 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gobulk_spark.config import PipelineConfig
-from gobulk_spark.pipeline import _salted_repartition
+from gobulk_spark import lineage
 from gobulk_spark.sources import scan as src_scan
 from gobulk_spark.stages import PARSE_OUTPUT_SCHEMA, make_parse_stage
 
@@ -46,14 +45,13 @@ def test_dup_removal_is_broadcast_anti_join(spark, src):
     assert "SortMergeJoin" not in plan
 
 
-def test_parse_job_has_exactly_one_wide_exchange(spark, src):
+def test_parse_job_has_exactly_one_wide_exchange(spark, src, tmp_path):
     dups = spark.createDataFrame(pd.DataFrame({"image_id": ["img-00000001"]}))
-    cfg = PipelineConfig(source_path="x", out_dir="y")
-    clean = src_scan.anti_join_ids(src, dups, broadcast=True)
-    feats = _salted_repartition(clean, cfg, 8).mapInPandas(
-        make_parse_stage(False), schema=PARSE_OUTPUT_SCHEMA
-    )
+    out = str(tmp_path)
+    dups.write.parquet(lineage.audit_leaf(out, "scan", "r1"))  # the dup list
+    feats = src_scan.parse_input(spark, src, out, "r1", n_dups=1, stop_on_error=False)
     plan = _plan(feats)
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     shuffles = [
         l
         for l in plan.splitlines()
@@ -80,11 +78,8 @@ def test_decision_chain_stays_in_codegen(spark, corpus_1500):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_binary_column_absent_downstream_of_parse(spark, src):
-    cfg = PipelineConfig(source_path="x", out_dir="y")
-    feats = _salted_repartition(src, cfg, 8).mapInPandas(
-        make_parse_stage(False), schema=PARSE_OUTPUT_SCHEMA
-    )
+def test_binary_column_absent_downstream_of_parse(spark, src, tmp_path):
+    feats = src_scan.parse_input(spark, src, str(tmp_path), "r1", n_dups=0, stop_on_error=False)
     assert "bytes" not in feats.columns
     from gobulk_spark.plan import decision_columns
     from gobulk_spark.rules import DEFAULT_THRESHOLDS

@@ -430,46 +430,3 @@ def test_retry_stamp_monotonic_across_stream_restarts(spark):
     assert pend.toPandas()["caption"].tolist() == ["new run B"]
     assert sorted(consumed) == ["run=a-e5", "run=b-e0"]
 
-
-def test_pre_stamp_retry_queue_dirs_drain_as_epoch_zero(spark):
-    """Migration path: a retry-queue dir staged by the pre-round-4 code
-    has NO retry_epoch column. The queue read must tolerate it (drain as
-    epoch 0) instead of failing the max(retry_epoch) aggregate — and a
-    stamped dir for the same id must still win latest-version-wins."""
-    from gobulk_spark.pipeline import KEPT_SCHEMA_DDL
-    from gobulk_spark.streaming.incremental import (
-        _read_retry_queue,
-        _retry_root,
-        _stage_retry,
-    )
-
-    shutil.rmtree(BASE, ignore_errors=True)
-    out = os.path.join(BASE, "rq_migrate")
-    os.makedirs(out)
-    legacy = spark.createDataFrame(
-        [
-            ("x", "f", "h1", 8, 8, "png", 1, "legacy version", "en", 0.9, 5.0),
-            ("y", "f", "h3", 8, 8, "png", 3, "legacy only", "en", 0.9, 5.0),
-        ],
-        KEPT_SCHEMA_DDL,
-    )
-    # pre-stamp layout: plain kept rows, no retry_epoch column
-    legacy.write.mode("overwrite").parquet(
-        os.path.join(_retry_root(out), "run=old-e0")
-    )
-    pend, consumed, next_seq = _read_retry_queue(spark, out, "new-e0")
-    assert next_seq == 1  # legacy rows rank as epoch 0
-    rows = pend.toPandas().set_index("image_id")
-    assert set(rows.index) == {"x", "y"}
-    assert sorted(consumed) == ["run=old-e0"]
-    # a stamped re-delivery of x supersedes the legacy staging
-    v2 = spark.createDataFrame(
-        [("x", "f", "h2", 8, 8, "png", 1, "stamped version", "en", 0.9, 5.0)],
-        KEPT_SCHEMA_DDL,
-    )
-    _stage_retry(spark, out, "new-e0", next_seq, v2)
-    pend2, consumed2, _ = _read_retry_queue(spark, out, "new-e1")
-    rows2 = pend2.toPandas().set_index("image_id")
-    assert rows2.loc["x", "caption"] == "stamped version"
-    assert rows2.loc["y", "caption"] == "legacy only"
-    assert sorted(consumed2) == ["run=new-e0", "run=old-e0"]

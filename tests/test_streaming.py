@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -127,3 +128,57 @@ def test_streaming_update_delete_matches_batch(spark):
     kept_s = lineage.read_kept(spark, out_s).toPandas()
     assert kept_s["image_id"].is_unique
     assert not set(dele) & set(kept_s["image_id"])
+
+
+@pytest.mark.parametrize("prefix", ["zzz", "aaa"])
+def test_streaming_marker_applies_before_dedup_as_in_batch(spark, prefix):
+    """A second file re-delivers an already-kept row plus a byte-identical
+    copy of it under a new id. The marker removes the re-delivered row
+    BEFORE the content dedup, so the copy is new content and is kept —
+    through a stream (two sweeps) exactly as through batch (a full run,
+    then an incremental one), whether the copy's id sorts after
+    (``zzz``) or before (``aaa``) the original's."""
+    base = f"/tmp/gobulk_spark_test_out/stream_marker_dedup_{prefix}"
+    shutil.rmtree(base, ignore_errors=True)
+    pairs, _ = generate_pairs(300, seed=7)
+
+    def source(name: str) -> str:
+        d = os.path.join(base, name, "src")
+        os.makedirs(d)
+        pq.write_table(pairs, os.path.join(d, "part-000.parquet"))
+        return d
+
+    src_b, src_s = source("batch"), source("stream")
+    out_b, out_s = os.path.join(base, "batch", "out"), os.path.join(base, "stream", "out")
+    run_pipeline(spark, PipelineConfig(source_path=src_b, out_dir=out_b, run_id="r1"))
+    cfg_s = PipelineConfig(source_path=src_s, out_dir=out_s, run_id="s1")
+    run_streaming_ingest(spark, cfg_s, src_s)
+    first_epochs = set(lineage.read_audit(spark, out_s).toPandas()["run_id"])
+
+    orig = min(lineage.read_kept(spark, out_b).toPandas()["image_id"])
+    copy_id = f"{prefix}-copy-of-{orig}"
+    redo = pairs.to_pandas()
+    redo = redo[redo.image_id == orig]
+    redo = pd.concat([redo, redo.assign(image_id=copy_id)])
+    redo_table = pa.Table.from_pandas(redo, schema=pairs.schema, preserve_index=False)
+    for src in (src_b, src_s):
+        pq.write_table(redo_table, os.path.join(src, "part-001.parquet"))
+    run_pipeline(
+        spark,
+        PipelineConfig(source_path=src_b, out_dir=out_b, run_id="r2", incremental=True),
+    )
+    run_streaming_ingest(spark, cfg_s, src_s)
+
+    def kept_set(out):
+        rows = lineage.read_kept(spark, out).select("image_id", "caption", "content_hash")
+        return {tuple(r) for r in rows.collect()}
+
+    def second_run_audit(out, is_second):
+        audit = lineage.read_audit(spark, out).toPandas()
+        audit = audit[audit.run_id.map(is_second)]
+        return sorted(zip(audit.image_id, audit.wphase, audit.action))
+
+    assert kept_set(out_s) == kept_set(out_b)
+    batch_audit = second_run_audit(out_b, lambda r: r == "r2")
+    assert batch_audit == [(copy_id, "store", "create")]
+    assert second_run_audit(out_s, lambda r: r not in first_epochs) == batch_audit
