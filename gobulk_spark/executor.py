@@ -480,9 +480,9 @@ def store(
         new_pairs = new_pairs.unionByName(extra_kept.select("image_id", "content_hash"))
     if n_dups:
         new_pairs = new_pairs.unionByName(
-            spark.read.parquet(lineage.audit_leaf(out_dir, "scan", run_id)).select(
-                "image_id", "content_hash"
-            )
+            spark.read.schema(lineage.AUDIT_SCHEMA)
+            .parquet(lineage.audit_leaf(out_dir, "scan", run_id))
+            .select("image_id", "content_hash")
         )
     _sub(
         "advance_marker",

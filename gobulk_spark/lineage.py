@@ -414,32 +414,23 @@ def clear_pause(out_dir: str, spark: SparkSession | None = None) -> None:
 def recover_kept_swaps(spark: SparkSession, out_dir: str) -> list[str]:
     """Heal every half-finished kept-directory swap before ANY read.
 
-    A crash between replace_dir's two renames leaves a ``.X.bak-rid``
-    backup holding the only copy of those rows. The engine itself
-    swaps at (run, lang)-leaf granularity (delete_keys_from_prior_runs
-    is the only replace_dir call site), but recovery also handles
-    run-LEVEL backups — produced by older layouts or operator tooling
-    moving whole runs aside — so a stranded backup of either
-    granularity is restored rather than silently invisible (its rows
-    missing from the store). Called at store-phase entry; both shapes
-    are crash-sim tested.
+    A crash between replace_dir's two renames leaves a ``.lang=Y.bak-rid``
+    backup inside a run dir holding the only copy of those rows; the
+    engine swaps only (run, lang) leaves (delete_keys_from_prior_runs
+    is the only replace_dir call site). Called at store-phase entry;
+    crash-sim tested.
     """
     fs = Fs(spark, out_dir)
     root = kept_dir(out_dir)
     healed = []
     for name in fs.listdir(root):
-        if name.startswith(".run=") and ".bak-" in name:  # run-level swap
-            dst_name = name[1:].split(".bak-")[0]
-            fs.recover_replace_dir(_join(root, dst_name), _join(root, name))
-            healed.append(name)
-        elif name.startswith("run="):  # partition-level swaps inside a run
-            for sub in fs.listdir(_join(root, name)):
-                if sub.startswith(".lang=") and ".bak-" in sub:
-                    dst_name = sub[1:].split(".bak-")[0]
-                    fs.recover_replace_dir(
-                        _join(root, name, dst_name), _join(root, name, sub)
-                    )
-                    healed.append(f"{name}/{sub}")
+        if not name.startswith("run="):
+            continue
+        for sub in fs.listdir(_join(root, name)):
+            if sub.startswith(".lang=") and ".bak-" in sub:
+                dst_name = sub[1:].split(".bak-")[0]
+                fs.recover_replace_dir(_join(root, name, dst_name), _join(root, name, sub))
+                healed.append(f"{name}/{sub}")
     return healed
 
 

@@ -35,6 +35,7 @@ from .plan import decision_columns
 from .sinks import KeptSink, ParquetKeptSink
 from .sources import manifest as src_manifest
 from .sources import scan as src_scan
+from .stages import PARSE_OUTPUT_SCHEMA
 
 
 def run_pipeline(
@@ -163,7 +164,11 @@ def run_pipeline(
         if waited:
             summary["intermitted_s"] = round(waited, 3)
         t0 = time.time()
-        feats = _parse_frame() if cfg.fused else spark.read.parquet(feats_path)
+        feats = (
+            _parse_frame()
+            if cfg.fused
+            else spark.read.schema(PARSE_OUTPUT_SCHEMA).parquet(feats_path)
+        )
         decided = decision_columns(feats, cfg.thresholds)
         if cfg.stop_on_error and not cfg.fused:
             # the parse stage raises on the first undecodable row; this

@@ -28,8 +28,9 @@ backend with injectable faults exercising the ES retry contract
 (429-backoff x15, conflict-retry x3, delete-404-is-success,
 output/elasticsearch.go:309-320,343-360). PartitionedRetrySink is the
 fourth and the PRODUCTION shape of that contract: the same retry loop
-run executor-side inside one mapInPandas job, failures staged to
-parquet and read back — row data never crosses the driver.
+run executor-side inside one mapInPandas job, the landed rows written
+by ParquetKeptSink.write and the failures returned as a frame — row
+data never crosses the driver.
 txlog.TxLogKeptSink is the fifth: a from-scratch transaction-log table
 format (atomic rename commits, snapshot isolation, MERGE-shaped
 deletes, time travel) standing in for the environment-gated
@@ -44,8 +45,9 @@ import time
 from typing import Callable, Protocol
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import lineage
 
@@ -56,11 +58,22 @@ class SinkSchemaMismatch(Exception):
 
 #: schema of a sink's per-item write failures, whichever form the
 #: backend returns them in (list-of-dicts from the driver-side test
-#: doubles; a staged-parquet-backed DataFrame from PartitionedRetrySink)
+#: doubles; a DataFrame from PartitionedRetrySink)
 FAILURE_SCHEMA_DDL = (
     "image_id string, source_file string, content_hash string, "
     "payload string, error_msg string, attempts int"
 )
+
+
+# the kept store's writer options: on the local filesystem a write
+# lands no Hadoop client-side ``.crc`` sidecar next to its files, so a
+# freshly written run dir holds only parquet leaves and ``_SUCCESS``.
+# Both keys name the ``file`` scheme (other stores ignore them), and
+# the uncached filesystem keeps the raw one private to this write
+_KEPT_WRITE_OPTIONS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
 
 
 def _put_with_retries(
@@ -138,8 +151,6 @@ def _diff_schema(declared: dict[str, str], live: dict[str, str]) -> str | None:
 
 
 def _ddl_to_fields(spark: SparkSession, ddl: str) -> dict[str, str]:
-    from pyspark.sql.types import StructType
-
     return {f.name: f.dataType.simpleString() for f in StructType.fromDDL(ddl)}
 
 
@@ -177,9 +188,9 @@ class ParquetKeptSink:
     def write(self, df: DataFrame, run_id: str) -> list[dict] | None:
         # all-or-nothing: a failed Spark write raises (task retry is the
         # executor tier), so there are never per-item partial failures
-        df.write.mode("overwrite").partitionBy("lang").parquet(
-            f"{lineage.kept_dir(self.out_dir)}/run={run_id}"
-        )
+        df.write.mode("overwrite").options(**_KEPT_WRITE_OPTIONS).partitionBy(
+            "lang"
+        ).parquet(f"{lineage.kept_dir(self.out_dir)}/run={run_id}")
         return None
 
     def delete(self, spark: SparkSession, run_id: str, keys: DataFrame) -> None:
@@ -328,106 +339,6 @@ class UnreliableMemoryKeptSink(MemoryKeptSink):
         super().delete(spark, run_id, keys)
 
 
-def _make_partition_writer(
-    kept_run_dir: str,
-    fault: Callable[[dict, int], str | None],
-    max_transient: int,
-    max_conflict: int,
-    backoff_s: float,
-    arrow_schema,
-):
-    """Executor-side writer for PartitionedRetrySink.write's single
-    mapInPandas job: run the bounded per-item retry loop over this
-    partition's own rows, land accepted rows as parquet files under the
-    ParquetKeptSink layout, yield ONLY the per-item failures.
-
-    File names are deterministic per (partition, batch, lang): a
-    retried or speculative task overwrites its own output instead of
-    duplicating it (the idempotence a remote bulk API gets from
-    write-by-id)."""
-
-    def write_partition(batches):
-        import os as _os
-
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        # taskAttemptId is unique per ATTEMPT across the job: two
-        # concurrent attempts of the same task (speculative execution)
-        # each write their own temp file and the os.replace rename is
-        # atomic, so the deterministic final path never holds a torn
-        # file — last rename wins with identical content
-        attempt = ctx.taskAttemptId()
-        for seq, batch in enumerate(batches):
-            landed_mask: list[bool] = []
-            fails: list[dict] = []
-            for item in batch.to_dict("records"):
-                ok, err, attempts = _put_with_retries(
-                    item, fault, max_transient, max_conflict, backoff_s
-                )
-                landed_mask.append(ok)
-                if not ok:
-                    cap = item.get("caption")
-                    fails.append(
-                        {
-                            "image_id": item["image_id"],
-                            "source_file": item.get("source_file"),
-                            "content_hash": item.get("content_hash"),
-                            # NULL captions stay NULL in the failures
-                            # frame (driver-side sinks preserve them; a
-                            # str() here would land the literal "None")
-                            "payload": None if cap is None else str(cap),
-                            "error_msg": err,
-                            "attempts": attempts,
-                        }
-                    )
-            landed = batch[pd.Series(landed_mask, index=batch.index)]
-            if len(landed):
-                # lang is a PARTITION column of the store layout: encode
-                # it in the directory, never in the file (a column
-                # present in both breaks partition discovery)
-                for lang_val, grp in landed.groupby("lang", dropna=False):
-                    leaf = (
-                        "lang=__HIVE_DEFAULT_PARTITION__"
-                        if pd.isna(lang_val)
-                        else f"lang={lang_val}"
-                    )
-                    d = _os.path.join(kept_run_dir, leaf)
-                    _os.makedirs(d, exist_ok=True)
-                    # the EXPLICIT schema matters: without it pyarrow
-                    # infers types from the pandas group, and an
-                    # all-None string column in one batch would land a
-                    # NULL-typed parquet file that breaks the store's
-                    # schema merge on the next read
-                    final = _os.path.join(d, f"part-{pid:05d}-{seq:04d}.parquet")
-                    # dot-PREFIXED temp name: Spark's parquet reader
-                    # skips hidden files, so a tmp leaked by a killed
-                    # attempt (crash between write and rename) can
-                    # never poison a later read of the store — a
-                    # 'part-*.tmp' suffix would be scanned as data
-                    tmp = _os.path.join(
-                        d, f".part-{pid:05d}-{seq:04d}.{attempt}.tmp"
-                    )
-                    _pq.write_table(
-                        _pa.Table.from_pandas(
-                            grp.drop(columns=["lang"]),
-                            schema=arrow_schema,
-                            preserve_index=False,
-                        ),
-                        tmp,
-                    )
-                    _os.replace(tmp, final)
-            if fails:
-                f = pd.DataFrame(fails)
-                f["attempts"] = f["attempts"].astype("int32")
-                yield f
-
-    return write_partition
-
-
 class PartitionedRetrySink(ParquetKeptSink):
     """Production-shaped remote-store sink: the ES retry contract run
     EXECUTOR-SIDE, each partition retrying its own chunk.
@@ -435,38 +346,25 @@ class PartitionedRetrySink(ParquetKeptSink):
     gobulk's Elasticsearch output retries bulk chunks where the data
     is (output/elasticsearch.go:231-320,343-360); the driver-side
     UnreliableMemoryKeptSink proves that contract as a test double and
-    documents this class as its production shape. ``write`` is ONE
-    Spark job: ``df.mapInPandas`` runs the bounded retry loop
-    (transient x``max_transient_retries`` + backoff, conflict
-    x``max_conflict_retries``, permanent -> fail) inside each
-    partition, lands accepted rows as parquet files under the inherited
-    ParquetKeptSink layout (run=<rid>/lang=<l>), and yields only the
-    per-item failures, which are staged to ``_sink_failures/run=<rid>``
-    and read back as the failures DataFrame the engine joins against.
-    Row data never round-trips through the driver (pinned by
+    documents this class as its production shape. ``write`` is two
+    Spark jobs:
+
+    1. one ``mapInPandas`` runs the bounded retry loop (transient
+       x``max_transient_retries`` + backoff, conflict
+       x``max_conflict_retries``, permanent -> fail) over each row and
+       tags it with the outcome; ``localCheckpoint`` materializes the
+       tagged rows once, so every row is tried exactly once;
+    2. the landed rows go through the inherited ``ParquetKeptSink.write``
+       (run=<rid>/lang=<l> layout, Spark's committer, any Hadoop URI),
+       which also counts the failures as an observation.
+
+    The failures frame is a projection of the same checkpoint, so the
+    kept files and the failures always agree. Row data never
+    round-trips through the driver (pinned by
     tests/test_partitioned_sink.py poisoning collect/toPandas).
 
-    validate/recover/existing_ids/delete/read are inherited — the
-    storage is the same kept store; only the write path differs.
-
-    Scale notes: kept files are written with pyarrow against a
-    filesystem path (local in this sandbox; a real deployment points
-    ``out_dir`` at a fuse/NFS mount or swaps the two ``_pq.write_table``
-    calls for a pyarrow.fs S3/HDFS handle — the job shape is
-    unchanged). The failures staging keeps wholesale failure off the
-    driver: an epoch where every row fails yields a large failures
-    frame that lives entirely in parquet.
-
-    Concurrency contract: the per-attempt temp + atomic rename keeps
-    racing task attempts from TEARING a file, and with a
-    DETERMINISTIC per-(item, attempt) outcome — the write-by-id
-    idempotent remote store this class models — racing attempts land
-    identical content, so last-rename-wins is safe. If the remote
-    outcome is NONDETERMINISTIC across attempts, a speculative
-    duplicate attempt could land a file disagreeing with the committed
-    attempt's failures frame; run such sinks with
-    ``spark.speculation=false`` (the Spark default) so exactly one
-    attempt's loop decides both the file and the frame."""
+    validate/recover/existing_ids/delete/read are inherited: the
+    storage is the same kept store; only the write path differs."""
 
     def __init__(
         self,
@@ -475,73 +373,51 @@ class PartitionedRetrySink(ParquetKeptSink):
         max_transient_retries: int = 15,
         max_conflict_retries: int = 3,
         backoff_s: float = 0.0,
-        failure_staging_ttl_s: float = 3600.0,
     ):
         super().__init__(out_dir)
         self.fault = fault or (lambda item, attempt: None)
         self.max_transient_retries = max_transient_retries
         self.max_conflict_retries = max_conflict_retries
         self.backoff_s = backoff_s
-        self.failure_staging_ttl_s = failure_staging_ttl_s
 
-    def _failures_dir(self, run_id: str) -> str:
-        return lineage._join(self.out_dir, "_sink_failures", f"run={run_id}")
-
-    def write(self, df: DataFrame, run_id: str):
-        spark = df.sparkSession
-        kept_run_dir = f"{lineage.kept_dir(self.out_dir)}/run={run_id}"
-        # per-run overwrite contract: a retried write replaces its own
-        # earlier (possibly torn) attempt before re-landing
-        from .fsutil import Fs
-
-        fs = Fs(spark, self.out_dir)
-        fs.delete(kept_run_dir)
-        # prune consumed failure stagings (same discipline as the retry
-        # queue): by the time a NEW run writes, a prior SERIAL epoch's
-        # failures frame has been materialized into the audit + retry
-        # queue, so its run= dir is dead weight that would otherwise
-        # grow without bound on a long-lived streaming out_dir. The TTL
-        # guards the concurrent-runs case: a dir younger than
-        # ``failure_staging_ttl_s`` may belong to another run still
-        # between staging and consuming its failures frame (a lazy
-        # parquet read), so only aged-out dirs are reclaimed
-        import time as _time
-
-        froot = lineage._join(self.out_dir, "_sink_failures")
-        if fs.exists(froot):
-            now = _time.time()
-            for d in fs.listdir(froot):
-                if not d.startswith("run=") or d == f"run={run_id}":
-                    continue
-                m = fs.mtime(lineage._join(froot, d))
-                # mtime 0 = the store reports no time for this path
-                # (object-store synthetic dirs): UNKNOWN age must read
-                # as young, never as ancient — deleting on it would
-                # reopen the concurrent-run race the TTL exists to close
-                if m > 0 and now - m >= self.failure_staging_ttl_s:
-                    fs.delete(lineage._join(froot, d))
-        # the declared schema (minus the directory-encoded lang column)
-        # rides into every executor write — file types never drift from
-        # the store even when a batch group is all-null in a column
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        full = to_arrow_schema(df.schema)
-        arrow_schema = pa.schema([f for f in full if f.name != "lang"])
-        writer = _make_partition_writer(
-            kept_run_dir,
+    def write(self, df: DataFrame, run_id: str) -> DataFrame | None:
+        retry = (
             self.fault,
             self.max_transient_retries,
             self.max_conflict_retries,
             self.backoff_s,
-            arrow_schema,
         )
-        failures = df.mapInPandas(writer, schema=FAILURE_SCHEMA_DDL)
-        fail_dir = self._failures_dir(run_id)
-        # the ONE action: kept rows land as the job's side output,
-        # failures as its result set — staged, never driver-collected
-        failures.write.mode("overwrite").parquet(fail_dir)
-        fdf = spark.read.schema(FAILURE_SCHEMA_DDL).parquet(fail_dir)
-        if fdf.isEmpty():
+
+        def put(batches):
+            for batch in batches:
+                outcome = pd.DataFrame(
+                    [_put_with_retries(item, *retry) for item in batch.to_dict("records")],
+                    columns=["_ok", "_err", "_attempts"],
+                    index=batch.index,
+                )
+                yield batch.join(outcome)
+
+        # a copy of the field list: add() appends in place, and
+        # df.schema is cached on the frame
+        schema = (
+            StructType(list(df.schema))
+            .add("_ok", "boolean")
+            .add("_err", "string")
+            .add("_attempts", "integer")
+        )
+        # one materialization: the retry loop runs once per row, and the
+        # landing write and the failures frame read the same outcomes
+        tagged = df.mapInPandas(put, schema=schema).localCheckpoint(eager=True)
+        obs = Observation(f"sink-{run_id}")
+        landed = tagged.observe(obs, F.count_if(~F.col("_ok")).alias("n_failed"))
+        super().write(landed.where("_ok").select(*df.columns), run_id)
+        if not obs.get["n_failed"]:
             return None
-        return fdf
+        return tagged.where(~F.col("_ok")).select(
+            "image_id",
+            "source_file",
+            "content_hash",
+            F.col("caption").cast("string").alias("payload"),
+            F.col("_err").alias("error_msg"),
+            F.col("_attempts").alias("attempts"),
+        )

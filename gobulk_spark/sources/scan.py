@@ -127,7 +127,9 @@ def parse_input(
     partition identically (gobulk parser.go:92-94's stable re-sort).
     """
     if n_dups:
-        dups = spark.read.parquet(lineage.audit_leaf(out_dir, "scan", run_id))
+        dups = spark.read.schema(lineage.AUDIT_SCHEMA).parquet(
+            lineage.audit_leaf(out_dir, "scan", run_id)
+        )
         src = anti_join_ids(src, dups, broadcast=n_dups <= DUP_BROADCAST_MAX)
     bucket = F.pmod(F.col("phash"), F.lit(PHASH_BUCKETS))
     salt = F.pmod(F.abs(F.xxhash64("image_id")), F.lit(SALT_BUCKETS))

@@ -2,10 +2,10 @@
 
 Round-3 VERDICT #1: move the per-item retry loop (transient x15 +
 backoff, conflict x3, per-item issue capture) from the driver-side test
-double into the executors via one mapInPandas job, with failures staged
-to a per-run parquet dir and read back — no driver round-trip of row
-data. The reference retries bulk chunks where the data is
-(output/elasticsearch.go:231-320,343-360).
+double into the executors via one mapInPandas job; the landed rows go
+through ParquetKeptSink.write and the failures come back as a frame —
+no driver round-trip of row data. The reference retries bulk chunks
+where the data is (output/elasticsearch.go:231-320,343-360).
 
 Fault functions here are DETERMINISTIC AND STATELESS (keyed on the item
 id's hex digits / the per-item attempt counter): they execute inside
@@ -92,6 +92,28 @@ def test_healthy_write_matches_parquet_sink_exactly(spark):
     )
     pd.testing.assert_frame_equal(pa2, pb2)
     assert pa2["image_id"].is_unique
+    # NULL w/h/phash/caption/lang land exactly as ParquetKeptSink lands
+    # them (a NULL lang in the __HIVE_DEFAULT_PARTITION__ leaf)
+    nulls = _kept_frame(
+        spark,
+        [
+            ("n-1", "f", "h1", None, None, "png", None, None, None, None, 5.0),
+            ("n-2", None, "h2", 8, None, None, 2, "c", None, 0.4, None),
+            ("n-3", "f", "h3", None, 8, "png", None, None, "en", 0.9, 1.0),
+        ],
+    )
+    for out, sink_cls in ((out_a, PartitionedRetrySink), (out_b, ParquetKeptSink)):
+        assert sink_cls(out).write(nulls, "r3") is None
+    pa3, pb3 = (
+        lineage.read_kept(spark, out)
+        .select(cols)
+        .toPandas()
+        .sort_values("image_id")
+        .reset_index(drop=True)
+        for out in (out_a, out_b)
+    )
+    pd.testing.assert_frame_equal(pa3, pb3)
+    assert {"n-1", "n-2", "n-3"} <= set(pa3.image_id)
 
 
 def test_transient_faults_retry_to_success_executor_side(spark):
@@ -116,7 +138,7 @@ def test_transient_faults_retry_to_success_executor_side(spark):
 
 def test_permanent_failures_stage_reenter_and_heal(spark):
     """Deterministically-poisoned items fail executor-side, come back
-    as a parquet-backed failures frame (never a list), land as audit
+    as a failures frame (never a list), land as audit
     issues, stay out of marker AND manifest, and are re-imported by the
     next incremental run once a healthy sink replaces the faulty one."""
     shutil.rmtree(BASE, ignore_errors=True)
@@ -142,8 +164,6 @@ def test_permanent_failures_stage_reenter_and_heal(spark):
     assert victims and all(_poisoned(i) for i in victims)
     assert issues.error_msg.str.contains(r"permanent failure.*\(attempts=1\)").all()
     assert issues.payload.notna().all()
-    # the failures landed in the staging dir, not on the driver
-    assert os.path.isdir(os.path.join(out, "_sink_failures", "run=r1"))
     marker = lineage.processed_keys(spark, out)
     assert not victims & {r["image_id"] for r in marker.collect()}
     # heal: a fresh, fault-free sink instance over the same store
@@ -359,26 +379,59 @@ def test_kept_files_land_atomically_no_tmp_left(spark):
     assert all(f.endswith(".parquet") for f in leaves if not f.startswith("_"))
 
 
-def test_sink_failures_staging_pruned_on_next_write(spark):
-    """_sink_failures/run=<rid> dirs are consumed within their own epoch
-    (audit + retry queue are materialized); the NEXT write prunes aged
-    ones so a long-lived streaming out_dir doesn't grow without bound —
-    but a dir YOUNGER than the TTL survives (it may belong to a
-    concurrent run still between staging and consuming its frame)."""
+def test_file_uri_out_dir_lands_and_leaves_no_stray_dir(spark):
+    """``out_dir`` may be any Hadoop URI: a ``file://`` out_dir lands
+    through Spark's writer, reads back with read_kept, and no executor
+    treats the URI as a relative local path (which would grow a
+    ``file:`` tree in the Python worker's working directory)."""
+    shutil.rmtree(BASE, ignore_errors=True)
+    local = os.path.join(BASE, "uri_out")
+    out = "file://" + local
+    rows = _kept_frame(
+        spark,
+        [
+            ("a-0", "f", "h1", 8, 8, "png", 1, "c", "en", 0.9, 5.0),
+            ("b-1", "f", "h2", 8, 8, "png", 2, None, None, 0.9, 5.0),
+        ],
+    )
+    assert PartitionedRetrySink(out).write(rows, "r1") is None
+    assert sorted(lineage.read_kept(spark, out).toPandas().image_id) == ["a-0", "b-1"]
+    assert os.path.isdir(os.path.join(local, "kept", "run=r1"))
+
+    def cwd(batches):
+        for _ in batches:
+            yield pd.DataFrame({"cwd": [os.getcwd()]})
+
+    worker_cwd = spark.range(1).mapInPandas(cwd, "cwd string").first()["cwd"]
+    assert not os.path.exists(os.path.join(worker_cwd, "file:" + local))
+
+
+def test_write_runs_two_jobs_healthy_or_failing(spark):
+    """One job runs the retry loop into a checkpoint, one lands the kept
+    rows and counts the failures; the failures frame is left lazy."""
     shutil.rmtree(BASE, ignore_errors=True)
     out = os.path.join(BASE, "out")
     rows = _kept_frame(
-        spark, [("a-0", "f", "h1", 8, 8, "png", 1, "c", "en", 0.9, 5.0)]
+        spark,
+        [
+            ("a-0", "f", "h1", 8, 8, "png", 1, "c", "en", 0.9, 5.0),
+            ("b-7", "f", "h2", 8, 8, "png", 2, None, None, 0.9, 5.0),
+        ],
     )
-    faulty = PartitionedRetrySink(out, fault=lambda item, attempt: "permanent")
-    assert faulty.write(rows, "r1") is not None
-    froot = os.path.join(out, "_sink_failures")
-    assert os.path.isdir(os.path.join(froot, "run=r1"))
-    # default TTL: the fresh staging dir is NOT reclaimed
-    guarded = PartitionedRetrySink(out)
-    assert guarded.write(rows, "r2") is None
-    assert os.path.isdir(os.path.join(froot, "run=r1"))
-    # ttl=0 models the aged-out serial case: reclaimed on next write
-    healthy = PartitionedRetrySink(out, failure_staging_ttl_s=0.0)
-    assert healthy.write(rows, "r3") is None
-    assert not os.path.isdir(os.path.join(froot, "run=r1"))
+    sc = spark.sparkContext
+
+    def jobs(group, fault):
+        sc.setJobGroup(group, group)
+        try:
+            result = PartitionedRetrySink(out, fault=fault).write(rows, "r1")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("sink-healthy", None) == (None, 2)
+    failures, n_jobs = jobs(
+        "sink-failing",
+        lambda item, attempt: "permanent" if item["image_id"].endswith("7") else None,
+    )
+    assert n_jobs == 2
+    assert [r["image_id"] for r in failures.collect()] == ["b-7"]

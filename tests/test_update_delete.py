@@ -167,31 +167,6 @@ def test_kept_store_unique_and_untouched_elsewhere(two_runs):
     )
 
 
-def test_mid_swap_crash_is_healed_before_reads(two_runs):
-    """Crash BETWEEN replace_dir's two renames strands a prior run's
-    only copy in the .bak dir; the retry must restore it before any
-    read of the kept store (found live: classification read kept first
-    and never saw — hence never healed — the stranded run)."""
-    spark, out, kept1, upd_id, del_id = two_runs
-    kept_before = lineage.read_kept(spark, out).toPandas()
-    bak = os.path.join(out, "kept", ".run=r1.bak-r2")
-    os.rename(os.path.join(out, "kept", "run=r1"), bak)
-    os.remove(os.path.join(out, "_checkpoint", "r2", "store.json"))
-    run_pipeline(
-        spark,
-        PipelineConfig(
-            source_path=os.path.join(BASE, "src2.parquet"),
-            out_dir=out,
-            run_id="r2",
-            incremental=True,
-        ),
-    )
-    kept_after = lineage.read_kept(spark, out).toPandas()
-    assert sorted(kept_after["image_id"]) == sorted(kept_before["image_id"])
-    assert kept_after["image_id"].is_unique
-    assert not os.path.exists(bak)
-
-
 def test_partition_level_swap_crash_is_healed(two_runs):
     """Delete rewrites prune to (run, lang) LEAF partitions; a crash
     between the leaf swap's renames strands .lang=Y.bak-* inside the
