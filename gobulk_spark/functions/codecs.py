@@ -1,4 +1,4 @@
-"""Payload codec helpers (gobulk utils analogues) + multimodal plumbing.
+"""Payload codec helpers (gobulk utils analogues).
 
 gobulk ships Gunzip (utils/zip.go:10-18) and DecodeXML with entity
 expansion (utils/parse.go:13-78) as library scalar helpers for user
@@ -9,28 +9,15 @@ Parse stages; JSON parsing appears in its test formats
   used inside mapInPandas stages);
 - json_caption_schema / parse_json_captions: JVM-side from_json for
   structured caption payloads (F3);
-- xml-style entity expansion: expand_entities (F2's regex-rewrite core);
-- resize_rgb / thumbnail_batch: REAL nearest-neighbor image resize
-  (numpy) over decoded pixels — the image feature-extraction path;
-- decode_wav / decode_audio_batch: REAL PCM WAV decode (stdlib wave +
-  numpy, 8/16/32-bit, multi-channel downmix) with rms/peak/duration
-  features; compressed codecs (mp3/ogg/flac) route to the
-  decode_compressed_audio STUB as issue rows — no codec library exists
-  in this environment;
-- encode_video/sample_video_frames: REAL for the MV01 container
-  (indexed DCQ1 frames; sampling = seeks, unsampled frames never
-  decoded); mp4/webm/avi demuxers absent -> issue rows; the Spark-side
-  plumbing (schema, batch signature) is real and tested.
+- xml-style entity expansion: expand_entities (F2's regex-rewrite core).
 """
 
 from __future__ import annotations
 
 import gzip
 import re
-import struct
 import zlib
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -189,363 +176,3 @@ def decode_xml_batch(
             row["issue_note"] = f"xml decode failed: {e}"
         rows.append(row)
     return pd.DataFrame(rows)
-
-
-# --------------------------------------------------- image resize (real)
-
-
-def resize_rgb(arr: np.ndarray, max_side: int) -> np.ndarray:
-    """Nearest-neighbor downscale keeping aspect; no-op if small enough."""
-    h, w = arr.shape[:2]
-    scale = max_side / max(h, w)
-    if scale >= 1.0:
-        return arr
-    nh, nw = max(1, int(h * scale)), max(1, int(w * scale))
-    yy = (np.arange(nh) * (h / nh)).astype(np.int64)
-    xx = (np.arange(nw) * (w / nw)).astype(np.int64)
-    return arr[yy][:, xx]
-
-
-THUMBNAIL_SCHEMA = "image_id string, thumb binary, thumb_w int, thumb_h int"
-
-
-def thumbnail_batch(pdf: pd.DataFrame, max_side: int = 32) -> pd.DataFrame:
-    """One Arrow batch: decode -> resize -> re-encode thumbnails.
-
-    Used via mapInPandas; undecodable rows yield null thumbs.
-    """
-    from .imaging import PngError, decode_png, encode_png
-
-    ids, thumbs, ws, hs = [], [], [], []
-    for image_id, blob in zip(pdf["image_id"], pdf["bytes"]):
-        ids.append(image_id)
-        try:
-            t = resize_rgb(decode_png(blob), max_side)
-            thumbs.append(encode_png(t))
-            hs.append(t.shape[0])
-            ws.append(t.shape[1])
-        except PngError:
-            thumbs.append(None)
-            ws.append(-1)
-            hs.append(-1)
-    return pd.DataFrame(
-        {
-            "image_id": ids,
-            "thumb": thumbs,
-            "thumb_w": pd.array(ws, dtype="int32"),
-            "thumb_h": pd.array(hs, dtype="int32"),
-        }
-    )
-
-
-# ----------------------------------- audio: REAL for PCM WAV, stub beyond
-
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, sample_rate int, n_channels int, n_samples long, "
-    "duration_s double, rms double, peak double, decode_ok boolean, "
-    "issue_note string"
-)
-
-VIDEO_FRAMES_SCHEMA = (
-    "clip_id string, frame_idx int, ts_ms long, frame_png binary, w int, h int, "
-    "decode_ok boolean, issue_note string"
-)
-
-_VIDEO_MAGIC = (
-    (b"\x00\x00\x00\x18ftyp", "mp4"),
-    (b"\x00\x00\x00\x20ftyp", "mp4"),
-    (b"\x1aE\xdf\xa3", "webm/mkv"),
-    (b"RIFF", "avi"),
-)
-
-
-def encode_video(frames: list, frame_interval_ms: int, quality: int = 96) -> bytes:
-    """REAL minimal video container (MV01): header + per-frame blob
-    index + concatenated DCQ1-encoded frames. Same philosophy as
-    DCQ1/ADP1 — the CONTAINER is ours (no demuxer library here), the
-    per-frame codec is the real lossy DCT path, and the index makes
-    frame SAMPLING a seek, not a full decode."""
-    from .imaging import encode_dctq
-
-    blobs = [encode_dctq(f, quality) for f in frames]
-    head = struct.pack("<4sII", b"MV01", frame_interval_ms, len(blobs))
-    index = struct.pack(f"<{len(blobs)}I", *[len(b) for b in blobs])
-    return head + index + b"".join(blobs)
-
-_AUDIO_MAGIC = (
-    (b"ID3", "mp3"),
-    (b"\xff\xfb", "mp3"),
-    (b"\xff\xf3", "mp3"),
-    (b"OggS", "ogg"),
-    (b"fLaC", "flac"),
-    (b"ADP1", "adpcm"),
-)
-
-# IMA-ADPCM reference tables (IMA Digital Audio Pack, public spec —
-# the same tables every DVI4/WAV-0x11 implementation carries)
-_IMA_STEPS = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767], dtype=np.int32)
-_IMA_INDEX_ADJ = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
-
-
-def encode_adpcm(samples: np.ndarray, sample_rate: int) -> bytes:
-    """REAL IMA-ADPCM encode: float32 mono [-1,1] -> 4 bits/sample
-    (4:1 vs int16) in a minimal ADP1 container (magic, rate, n_samples,
-    initial predictor/index, packed nibbles). The quantizer is the
-    standard adaptive-step predictor — the same math as WAV format
-    0x11 / DVI4, without that format's block-header bookkeeping."""
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    pcm = np.round(pcm * 32767.0).astype(np.int32)
-    pred, idx = int(pcm[0]) if len(pcm) else 0, 0
-    codes = np.empty(len(pcm), dtype=np.uint8)
-    for i, target in enumerate(pcm):
-        step = int(_IMA_STEPS[idx])
-        diff = int(target) - pred
-        code = 0
-        if diff < 0:
-            code = 8
-            diff = -diff
-        if diff >= step:
-            code |= 4
-            diff -= step
-        if diff >= step >> 1:
-            code |= 2
-            diff -= step >> 1
-        if diff >= step >> 2:
-            code |= 1
-        codes[i] = code
-        # decoder-mirrored reconstruction keeps the predictors in sync
-        delta = step >> 3
-        if code & 4:
-            delta += step
-        if code & 2:
-            delta += step >> 1
-        if code & 1:
-            delta += step >> 2
-        pred += -delta if code & 8 else delta
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + int(_IMA_INDEX_ADJ[code & 7])))
-    if len(codes) % 2:
-        codes = np.append(codes, 0)
-    packed = (codes[0::2] | (codes[1::2] << 4)).astype(np.uint8).tobytes()
-    head = struct.pack(
-        "<4sIIhB", b"ADP1", sample_rate, len(pcm),
-        int(pcm[0]) if len(pcm) else 0, 0,
-    )
-    return head + packed
-
-
-def decode_adpcm(blob: bytes) -> tuple[int, np.ndarray]:
-    """ADP1 -> (sample_rate, float32 mono waveform). Sequential by
-    nature (each sample feeds the predictor) — per-blob scalar work
-    inside an Arrow batch, the same idiom as the image codecs."""
-    if blob[:4] != b"ADP1" or len(blob) < 15:
-        raise ValueError("not an ADP1 payload")
-    _, rate, n, pred, idx = struct.unpack("<4sIIhB", blob[:15])
-    if idx > 88:  # step-table index is 0..88; an out-of-range header
-        # byte must be a ValueError (routed to an issue row), never an
-        # IndexError that kills the whole Arrow task
-        raise ValueError(f"corrupt ADP1 header: step index {idx} > 88")
-    packed = np.frombuffer(blob[15:], dtype=np.uint8)
-    if len(packed) * 2 < n:
-        raise ValueError("truncated ADP1 payload")
-    codes = np.empty(len(packed) * 2, dtype=np.uint8)
-    codes[0::2] = packed & 0x0F
-    codes[1::2] = packed >> 4
-    codes = codes[:n]
-    out = np.empty(n, dtype=np.int32)
-    pred, idx = int(pred), int(idx)
-    for i, code in enumerate(codes):
-        step = int(_IMA_STEPS[idx])
-        delta = step >> 3
-        if code & 4:
-            delta += step
-        if code & 2:
-            delta += step >> 1
-        if code & 1:
-            delta += step >> 2
-        pred += -delta if code & 8 else delta
-        pred = max(-32768, min(32767, pred))
-        out[i] = pred
-        idx = max(0, min(88, idx + int(_IMA_INDEX_ADJ[code & 7])))
-    return rate, out.astype(np.float32) / 32768.0
-
-
-def decode_wav(blob: bytes) -> tuple[int, int, np.ndarray]:
-    """PCM WAV -> (sample_rate, n_channels, float32 mono waveform in
-    [-1, 1]). stdlib ``wave`` + numpy — no external codec. 8/16/32-bit
-    integer PCM; raises wave.Error / ValueError on anything else."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(blob), "rb") as w:
-        rate, nch, width, nframes = (
-            w.getframerate(),
-            w.getnchannels(),
-            w.getsampwidth(),
-            w.getnframes(),
-        )
-        raw = w.readframes(nframes)
-    if width == 2:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-    elif width == 4:
-        samples = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483648.0
-    elif width == 1:  # 8-bit WAV is unsigned
-        samples = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-    else:
-        raise ValueError(f"unsupported PCM sample width {width}")
-    if nch > 1:
-        samples = samples.reshape(-1, nch).mean(axis=1)
-    return rate, nch, samples
-
-
-def decode_audio_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One Arrow batch (clip_id, bytes) -> AUDIO_FEATURES_SCHEMA rows.
-
-    REAL for PCM WAV (decode_wav); recognizably compressed payloads
-    (mp3/ogg/flac magic) are routed as decode_ok=False with the codec
-    named in issue_note — the decode seam for a real codec library is
-    decode_compressed_audio below. Per-row failures never kill the
-    task: they become issue rows, gobulk's error policy
-    (format.go:132-138).
-    """
-    import wave
-
-    rows = []
-    for clip_id, blob in zip(pdf["clip_id"], pdf["bytes"]):
-        row = {
-            "clip_id": clip_id, "sample_rate": None, "n_channels": None,
-            "n_samples": None, "duration_s": None, "rms": None, "peak": None,
-            "decode_ok": False, "issue_note": None,
-        }
-        try:
-            if blob is None:
-                row["issue_note"] = "null payload"
-            elif any(blob[: len(m)] == m for m, _ in _AUDIO_MAGIC):
-                codec = next(c for m, c in _AUDIO_MAGIC if blob[: len(m)] == m)
-                rate, samples = decode_compressed_audio(blob, codec)
-                row.update(
-                    sample_rate=rate,
-                    n_channels=1,
-                    n_samples=len(samples),
-                    duration_s=len(samples) / rate if rate else 0.0,
-                    rms=float(np.sqrt(np.mean(np.square(samples)))) if len(samples) else 0.0,
-                    peak=float(np.max(np.abs(samples))) if len(samples) else 0.0,
-                    decode_ok=True,
-                )
-            else:
-                rate, nch, samples = decode_wav(blob)
-                row.update(
-                    sample_rate=rate,
-                    n_channels=nch,
-                    n_samples=len(samples),
-                    duration_s=len(samples) / rate if rate else 0.0,
-                    rms=float(np.sqrt(np.mean(np.square(samples)))) if len(samples) else 0.0,
-                    peak=float(np.max(np.abs(samples))) if len(samples) else 0.0,
-                    decode_ok=True,
-                )
-        except NotImplementedError as e:
-            row["issue_note"] = str(e)
-        except (wave.Error, ValueError, EOFError) as e:
-            row["issue_note"] = f"wav decode failed: {e}"
-        rows.append(row)
-    out = pd.DataFrame(rows)
-    out["sample_rate"] = out["sample_rate"].astype("Int32")
-    out["n_channels"] = out["n_channels"].astype("Int32")
-    out["n_samples"] = out["n_samples"].astype("Int64")
-    return out
-
-
-def decode_compressed_audio(blob: bytes, codec: str) -> tuple[int, np.ndarray]:
-    """Compressed audio -> (sample_rate, float32 mono waveform).
-
-    REAL for IMA-ADPCM (ADP1 container, encode_adpcm/decode_adpcm —
-    the standard adaptive-step quantizer, 4:1 vs int16, round-trip
-    SNR >= 25 dB contract tested in test_sources_codecs.py). mp3/ogg/
-    flac need codec libraries absent from this image and stay
-    documented stubs: recognizably compressed payloads route as issue
-    rows naming the codec, never kill the task."""
-    if codec == "adpcm":
-        return decode_adpcm(blob)
-    raise NotImplementedError(
-        f"codec_unavailable:{codec} — plug a decoder into "
-        "decode_compressed_audio returning (sample_rate, float32 mono PCM)"
-    )
-
-
-def sample_video_frames(pdf: pd.DataFrame, every_ms: int = 1000) -> pd.DataFrame:
-    """One Arrow batch (clip_id, bytes) -> sampled VIDEO_FRAMES_SCHEMA
-    rows: one decoded frame per ``every_ms`` window, re-encoded PNG.
-
-    REAL for the MV01 container: the header's frame index turns
-    sampling into SEEKS — unsampled frames are never decoded (the
-    bounded-memory contract; only the sampled frames' pixels
-    materialize). mp4/webm/avi demuxers are not in this image: those
-    magics — and corrupt payloads — become issue rows naming the
-    reason, never task failures (the audio-batch policy).
-    """
-    from .imaging import PngError, decode_image, encode_png
-
-    rows = []
-    for clip_id, blob in zip(pdf["clip_id"], pdf["bytes"]):
-        issue = None
-        try:
-            if blob is None:
-                issue = "null payload"
-            elif blob[:4] == b"MV01":
-                interval, n = struct.unpack("<II", blob[4:12])
-                if n > len(blob):  # cheap sanity bound before the index
-                    raise ValueError("frame count exceeds payload size")
-                if n == 0:
-                    # a legal-but-empty clip must still be accounted
-                    # for (every clip yields >= 1 output row — the
-                    # audio-batch policy); silently emitting nothing
-                    # would be indistinguishable from missing input
-                    raise ValueError("MV01 clip has zero frames")
-                lengths = struct.unpack(f"<{n}I", blob[12 : 12 + 4 * n])
-                offsets = np.concatenate([[0], np.cumsum(lengths)]) + 12 + 4 * n
-                if offsets[-1] > len(blob):
-                    raise ValueError("truncated MV01 payload")
-                next_ts = 0
-                for idx in range(n):
-                    ts = idx * interval
-                    if ts < next_ts:
-                        continue  # seek past unsampled frames, no decode
-                    next_ts = ts + every_ms
-                    frame = decode_image(
-                        bytes(blob[offsets[idx] : offsets[idx + 1]])
-                    )
-                    rows.append(
-                        {
-                            "clip_id": clip_id, "frame_idx": idx, "ts_ms": ts,
-                            "frame_png": encode_png(frame),
-                            "w": frame.shape[1], "h": frame.shape[0],
-                            "decode_ok": True, "issue_note": None,
-                        }
-                    )
-                continue
-            else:
-                codec = next(
-                    (c for m, c in _VIDEO_MAGIC if blob[: len(m)] == m), "unknown"
-                )
-                issue = f"codec_unavailable:{codec} — plug a demuxer into " \
-                    "sample_video_frames keeping VIDEO_FRAMES_SCHEMA"
-        except (struct.error, ValueError, PngError) as e:
-            issue = f"video decode failed: {e}"
-        rows.append(
-            {
-                "clip_id": clip_id, "frame_idx": None, "ts_ms": None,
-                "frame_png": None, "w": None, "h": None,
-                "decode_ok": False, "issue_note": issue,
-            }
-        )
-    out = pd.DataFrame(rows)
-    for c, t in (("frame_idx", "Int32"), ("ts_ms", "Int64"), ("w", "Int32"), ("h", "Int32")):
-        out[c] = out[c].astype(t)
-    return out

@@ -65,6 +65,18 @@ def kept_dir(out_dir: str) -> str:
     return _join(out_dir, "kept")
 
 
+# every writer of kept leaves (a landed run, a delete's rewrite) passes
+# these options: on the local filesystem a write lands no Hadoop
+# client-side ``.crc`` sidecar next to its files, so a kept leaf holds
+# only parquet files whichever path last wrote it. Both keys name the
+# ``file`` scheme (other stores ignore them), and the uncached
+# filesystem keeps the raw one private to the write
+KEPT_WRITE_OPTIONS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
+
 def read_kept(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """All kept rows across runs (run/lang recovered as partition cols).
 
@@ -492,6 +504,7 @@ def delete_keys_from_prior_runs(
         .parquet(*leaf_paths)
         .join(F.broadcast(keys), "image_id", "left_anti")
         .write.mode("overwrite")
+        .options(**KEPT_WRITE_OPTIONS)
         .partitionBy("run", "lang")
         .parquet(staged_root)
     )

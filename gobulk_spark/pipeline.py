@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import asdict
+from functools import cache
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -80,9 +81,12 @@ def run_pipeline(
     # round 2 re-hashed the whole corpus every sweep).
     scan_set = src_manifest.run_scan_set(spark, out, rid, cfg.source_path)
 
+    @cache
     def _source_frame() -> DataFrame:
         """The run's unprocessed rows: the whole source on a full run,
-        the changed files minus the marker on an incremental one."""
+        the changed files minus the marker on an incremental one. Built
+        once per run: scan and parse share one frame, so one listing and
+        one schema inference serve both phases."""
         if not cfg.incremental:
             return src_scan.with_content_hash(src_scan.read_source(spark, cfg.source_path))
         src = src_manifest.read_changed_files(spark, cfg.source_path, scan_set["changed"])

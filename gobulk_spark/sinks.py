@@ -65,17 +65,6 @@ FAILURE_SCHEMA_DDL = (
 )
 
 
-# the kept store's writer options: on the local filesystem a write
-# lands no Hadoop client-side ``.crc`` sidecar next to its files, so a
-# freshly written run dir holds only parquet leaves and ``_SUCCESS``.
-# Both keys name the ``file`` scheme (other stores ignore them), and
-# the uncached filesystem keeps the raw one private to this write
-_KEPT_WRITE_OPTIONS = {
-    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
-    "fs.file.impl.disable.cache": "true",
-}
-
-
 def _put_with_retries(
     item: dict,
     fault: Callable[[dict, int], str | None],
@@ -188,7 +177,7 @@ class ParquetKeptSink:
     def write(self, df: DataFrame, run_id: str) -> list[dict] | None:
         # all-or-nothing: a failed Spark write raises (task retry is the
         # executor tier), so there are never per-item partial failures
-        df.write.mode("overwrite").options(**_KEPT_WRITE_OPTIONS).partitionBy(
+        df.write.mode("overwrite").options(**lineage.KEPT_WRITE_OPTIONS).partitionBy(
             "lang"
         ).parquet(f"{lineage.kept_dir(self.out_dir)}/run={run_id}")
         return None

@@ -107,3 +107,41 @@ def test_incremental_scan_retry_is_idempotent(spark):
         audit_retry.loc[audit_retry["rule_fired"] == "dedup_content_hash", "image_id"]
     )
     assert not (set(kept_retry["image_id"]) & dup_ids)
+
+
+def test_source_frame_built_once_per_run(spark, monkeypatch):
+    """Scan and parse share one source frame: a full run reads the
+    source once and an incremental run reads its changed files once, so
+    each run infers the source schema (one Spark job) only once."""
+    from gobulk_spark.sources import manifest as src_manifest
+    from gobulk_spark.sources import scan as src_scan
+
+    out = "/tmp/gobulk_spark_test_out/incremental_source_once"
+    shutil.rmtree(out, ignore_errors=True)
+    shutil.rmtree(SRC, ignore_errors=True)
+    calls = {"read_source": 0, "read_changed_files": 0}
+
+    def _counting(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(src_scan, "read_source", _counting("read_source", src_scan.read_source))
+    monkeypatch.setattr(
+        src_manifest,
+        "read_changed_files",
+        _counting("read_changed_files", src_manifest.read_changed_files),
+    )
+
+    path = _write(200)
+    run_pipeline(spark, PipelineConfig(source_path=path, out_dir=out, run_id="r1"))
+    assert calls == {"read_source": 1, "read_changed_files": 0}
+
+    path = _write(260)
+    s2 = run_pipeline(
+        spark, PipelineConfig(source_path=path, out_dir=out, run_id="r2", incremental=True)
+    )
+    assert calls == {"read_source": 1, "read_changed_files": 1}
+    assert s2["phases"]["parse"]["n_rows"] + s2["phases"]["scan"]["n_dups"] == 60

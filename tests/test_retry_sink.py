@@ -193,8 +193,6 @@ def test_parquet_schema_validation_rejects_renamed_column(spark):
                     [c if c != "ppl" else "perplexity" for c in t.column_names]
                 )
                 pq.write_table(t, p)
-            if f.endswith(".crc"):  # stale Hadoop checksums of the rewrite
-                os.remove(os.path.join(dirpath, f))
     with pytest.raises(SinkSchemaMismatch) as ei:
         run_pipeline(
             spark,

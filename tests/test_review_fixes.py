@@ -1,9 +1,7 @@
 """Regression tests for review findings: pin registry, threshold
-boundaries, codec header validation, accounting, join aliases."""
+boundaries, accounting, join aliases."""
 
 from __future__ import annotations
-
-import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,25 +40,6 @@ def test_hex_threshold_full_fraction_keeps_everything(spark):
         .groupBy("split").count().collect()
     }
     assert counts.get("test", 0) == 0 and counts.get("val", 0) > 0
-
-
-def test_adpcm_corrupt_step_index_is_valueerror():
-    from gobulk_spark.functions.codecs import decode_adpcm
-
-    blob = b"ADP1" + struct.pack("<IIhB", 8000, 4, 0, 99) + b"\x00\x00"
-    with pytest.raises(ValueError, match="step index"):
-        decode_adpcm(blob)  # never IndexError (would kill the task)
-
-
-def test_video_zero_frames_yields_issue_row():
-    import pandas as pd
-
-    from gobulk_spark.functions.codecs import sample_video_frames
-
-    blob = b"MV01" + struct.pack("<II", 1000, 0)
-    out = sample_video_frames(pd.DataFrame({"clip_id": ["c0"], "bytes": [blob]}))
-    assert len(out) == 1 and not out["decode_ok"].iloc[0]
-    assert "zero frames" in out["issue_note"].iloc[0]
 
 
 def test_salted_join_accepts_spark_aliases(spark):

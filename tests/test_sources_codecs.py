@@ -1,17 +1,15 @@
-"""binaryFile source, codec helpers, multimodal plumbing."""
+"""binaryFile source and the gzip, JSON and XML codec helpers."""
 
 from __future__ import annotations
 
 import gzip
-import os
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from gobulk_spark.functions import codecs
-from gobulk_spark.functions.imaging import decode_png, encode_png, synth_image
+from gobulk_spark.functions.imaging import encode_png, synth_image
 from gobulk_spark.sources.binaryfiles import read_binary_dir
 
 
@@ -70,209 +68,6 @@ def test_expand_entities():
     s = pd.Series(["a &amp; b &custom; &unknown;"])
     out = codecs.expand_entities(s, {"amp": "&", "custom": "X"})
     assert out[0] == "a & b X &unknown;"
-
-
-def test_resize_rgb_and_thumbnails(spark):
-    img = synth_image(3, 64, 48)
-    small = codecs.resize_rgb(img, 16)
-    assert max(small.shape[:2]) == 16
-    assert codecs.resize_rgb(small, 32).shape == small.shape  # no upscale
-    pdf = pd.DataFrame(
-        {
-            "image_id": ["a", "b"],
-            "bytes": [encode_png(img), b"corrupt"],
-        }
-    )
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        sdf.mapInPandas(
-            lambda it: (codecs.thumbnail_batch(p, 16) for p in it),
-            schema=codecs.THUMBNAIL_SCHEMA,
-        )
-        .orderBy("image_id")
-        .collect()
-    )
-    assert out[0].thumb_w == 16
-    assert decode_png(out[0].thumb).shape[1] == 16
-    assert out[1].thumb is None and out[1].thumb_w == -1
-
-
-def test_foreign_video_and_audio_codecs_issue_route(spark):
-    pdf = pd.DataFrame(
-        {
-            "clip_id": ["unknown", "mp4ish"],
-            "bytes": [b"\x00\x01", b"\x00\x00\x00\x18ftypisom" + b"\x00" * 32],
-        }
-    )
-    out = codecs.sample_video_frames(pdf).set_index("clip_id")
-    assert not out.loc["unknown"].decode_ok
-    assert "codec_unavailable:unknown" in out.loc["unknown"].issue_note
-    assert "codec_unavailable:mp4" in out.loc["mp4ish"].issue_note
-    with pytest.raises(NotImplementedError, match="codec_unavailable:mp3"):
-        codecs.decode_compressed_audio(b"ID3abc", "mp3")
-
-
-def _psnr(a, b):
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    return 10 * np.log10(255.0**2 / mse)
-
-
-def test_mv01_video_frame_sampling_via_spark(spark):
-    """REAL video path: 10-frame MV01 clip at 200 ms/frame, sampled
-    every 500 ms -> frames 0/3/6/9, decoded pixels within the DCQ1
-    lossy contract (PSNR >= 40) of the originals, unsampled frames
-    untouched; truncated payloads issue-route."""
-    from gobulk_spark.functions.imaging import decode_png
-
-    rng = np.random.default_rng(5)
-    frames = [
-        np.clip(
-            np.linspace(0, 200, 24 * 32 * 3).reshape(24, 32, 3) + i * 5
-            + rng.integers(0, 20, (24, 32, 3)),
-            0, 255,
-        ).astype(np.uint8)
-        for i in range(10)
-    ]
-    blob = codecs.encode_video(frames, frame_interval_ms=200)
-    pdf = pd.DataFrame(
-        {"clip_id": ["clip", "cut"], "bytes": [blob, blob[: len(blob) // 2]]}
-    )
-    out = (
-        spark.createDataFrame(pdf)
-        .mapInPandas(
-            lambda it: (codecs.sample_video_frames(p, every_ms=500) for p in it),
-            schema=codecs.VIDEO_FRAMES_SCHEMA,
-        )
-        .toPandas()
-    )
-    clip = out[out.clip_id == "clip"].sort_values("frame_idx")
-    assert list(clip.frame_idx) == [0, 3, 6, 9]
-    assert list(clip.ts_ms) == [0, 600, 1200, 1800]
-    assert clip.decode_ok.all()
-    for _, r in clip.iterrows():
-        decoded = decode_png(bytes(r.frame_png))
-        assert decoded.shape == (24, 32, 3) and (r.w, r.h) == (32, 24)
-        assert _psnr(decoded, frames[int(r.frame_idx)]) >= 40.0
-    cut = out[out.clip_id == "cut"]
-    assert len(cut) == 1 and not cut.iloc[0].decode_ok
-    assert "video decode failed" in cut.iloc[0].issue_note
-
-
-def _wav_bytes(samples: np.ndarray, rate: int, nch: int, width: int) -> bytes:
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(nch)
-        w.setsampwidth(width)
-        w.setframerate(rate)
-        if width == 2:
-            raw = (samples * 32767).astype("<i2").tobytes()
-        elif width == 1:
-            raw = (samples * 127 + 128).astype(np.uint8).tobytes()
-        else:
-            raw = (samples * 2147483647).astype("<i4").tobytes()
-        w.writeframes(raw)
-    return buf.getvalue()
-
-
-def test_wav_decode_features_via_spark(spark):
-    """Real PCM WAV decode through the mapInPandas surface: rms/peak of
-    a sine match closed form; 8-bit mono, stereo downmix, compressed
-    and corrupt payloads become issue rows (never task failures)."""
-    rate, dur = 8000, 0.5
-    t = np.arange(int(rate * dur)) / rate
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    stereo = np.column_stack([sine, sine]).ravel()
-    pdf = pd.DataFrame(
-        {
-            "clip_id": ["sine16", "silence8", "stereo16", "mp3ish", "corrupt"],
-            "bytes": [
-                _wav_bytes(sine, rate, 1, 2),
-                _wav_bytes(np.zeros(100), rate, 1, 1),
-                _wav_bytes(stereo, rate, 2, 2),
-                b"ID3" + b"\x00" * 64,
-                b"RIFFgarbage",
-            ],
-        }
-    )
-    out = (
-        spark.createDataFrame(pdf)
-        .mapInPandas(
-            lambda it: (codecs.decode_audio_batch(p) for p in it),
-            schema=codecs.AUDIO_FEATURES_SCHEMA,
-        )
-        .toPandas()
-        .set_index("clip_id")
-    )
-    s = out.loc["sine16"]
-    assert s.decode_ok and s.sample_rate == rate and s.n_samples == len(sine)
-    assert abs(s.rms - 0.5 / np.sqrt(2)) < 1e-3  # sine rms = amp/sqrt(2)
-    assert abs(s.peak - 0.5) < 1e-3
-    assert abs(s.duration_s - dur) < 1e-6
-    z = out.loc["silence8"]
-    assert z.decode_ok and z.rms == 0.0 and z.peak == 0.0
-    st = out.loc["stereo16"]
-    assert st.decode_ok and st.n_channels == 2
-    assert abs(st.rms - 0.5 / np.sqrt(2)) < 1e-3  # identical channels downmix
-    assert not out.loc["mp3ish"].decode_ok
-    assert "codec_unavailable:mp3" in out.loc["mp3ish"].issue_note
-    assert not out.loc["corrupt"].decode_ok
-    assert "wav decode failed" in out.loc["corrupt"].issue_note
-
-
-def test_adpcm_roundtrip_snr_and_compression():
-    """REAL compressed-audio codec: IMA-ADPCM round-trip SNR >= 25 dB
-    at 4:1 compression vs int16 (the standard adaptive-step quantizer
-    is lossy but musical-signal-transparent for features)."""
-    rate = 16000
-    t = np.arange(rate) / rate
-    sig = (0.5 * np.sin(2 * np.pi * 440 * t) + 0.2 * np.sin(2 * np.pi * 1313 * t)).astype(
-        np.float32
-    )
-    blob = codecs.encode_adpcm(sig, rate)
-    assert blob[:4] == b"ADP1"
-    assert len(blob) <= len(sig) // 2 + 32  # 4 bits/sample + header
-    rate2, out = codecs.decode_adpcm(blob)
-    assert rate2 == rate and len(out) == len(sig)
-    err = out - sig
-    snr = 10 * np.log10(float(np.mean(sig**2)) / float(np.mean(err**2)))
-    assert snr >= 25.0, f"SNR {snr:.1f} dB"
-
-
-def test_adpcm_features_via_spark(spark):
-    """ADP1 payloads decode for real through the batch surface (the
-    mp3/ogg/flac seam stays issue-routed); features match the WAV path
-    on the same signal to ADPCM quantization tolerance; corrupt ADP1
-    becomes an issue row."""
-    rate = 8000
-    t = np.arange(rate // 2) / rate
-    sine = (0.5 * np.sin(2 * np.pi * 440 * t)).astype(np.float32)
-    pdf = pd.DataFrame(
-        {
-            "clip_id": ["adpcm", "wav", "truncated"],
-            "bytes": [
-                codecs.encode_adpcm(sine, rate),
-                _wav_bytes(sine, rate, 1, 2),
-                codecs.encode_adpcm(sine, rate)[:20],
-            ],
-        }
-    )
-    out = (
-        spark.createDataFrame(pdf)
-        .mapInPandas(
-            lambda it: (codecs.decode_audio_batch(p) for p in it),
-            schema=codecs.AUDIO_FEATURES_SCHEMA,
-        )
-        .toPandas()
-        .set_index("clip_id")
-    )
-    a, w = out.loc["adpcm"], out.loc["wav"]
-    assert a.decode_ok and a.sample_rate == rate and a.n_samples == len(sine)
-    assert abs(a.rms - w.rms) < 0.01 and abs(a.peak - w.peak) < 0.03
-    tr = out.loc["truncated"]
-    assert not tr.decode_ok and "truncated" in tr.issue_note
 
 
 def test_decode_xml_entity_merge_and_charset(spark):

@@ -217,6 +217,14 @@ def test_delete_rewrite_prunes_to_affected_partitions(two_runs):
     if os.path.isdir(rewrite_dir):
         staged_langs = {e.split("=")[1] for e in os.listdir(rewrite_dir)}
         assert staged_langs <= affected_langs
+    # rewritten leaves land like fresh run dirs: no Hadoop .crc sidecars
+    crc = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(out, "kept"))
+        for f in files
+        if f.endswith(".crc")
+    ]
+    assert not crc, crc
 
 
 def test_store_retry_after_delete_step_converges(two_runs):
